@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): run every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query seconds.
@@ -35,31 +34,15 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = BenchSession.build()
-    def dropPinnedBlocks(): Unit = BenchSession.dropPinnedBlocks(spark)
     // Warm-up: exercise scan+shuffle+codegen once, untimed.
     BenchSession.warmUp(spark, sfDir)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt max 1
     val names = SparkEntry.queries.keys.toSeq.sorted
-    // None = the query threw; a crash must NOT contribute a small
-    // positive wall time that makes the bench look healthy. One
-    // timing protocol for every measurement in this file — the
+    // One timing protocol for every measurement in this file — the
     // portable-vs-fast delta is only meaningful if both sides are
     // measured identically.
-    def timeFn(label: String,
-               fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Option[Double] = {
-      dropPinnedBlocks()
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $label failed: ${e.getMessage}")
-          false
-        }
-      if (ok) Some((System.nanoTime() - t0) / 1e9) else None
-    }
     def timeOne(name: String): Option[Double] =
-      timeFn(name, SparkEntry.queries(name))
+      BenchSession.timeFn(spark, sfDir, name, SparkEntry.queries(name))
     val samples = for (_ <- 1 to reps; name <- names) yield name -> timeOne(name)
     // Min over the SUCCESSFUL samples only. `failed` = zero successful
     // reps (excluded from the total); `flaky` = failed some reps but
@@ -95,7 +78,8 @@ object Bench {
       else {
         val variants = SparkEntry.benchFastHashVariants
         variants.keys.toSeq.sorted.flatMap { n =>
-          (1 to 2).flatMap(_ => timeFn(s"fast-hash $n", variants(n)))
+          (1 to 2).flatMap(_ => BenchSession.timeFn(spark, sfDir,
+            s"fast-hash $n", variants(n)))
             .minOption.map(n -> _)
         }.toMap
       }

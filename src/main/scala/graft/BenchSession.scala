@@ -1,13 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared harness plumbing for the timing mains ([[Bench]], [[RepBench]],
-  * [[ScalingCurve]]): one definition of the session configuration, the
-  * untimed warm-up, and the between-queries hygiene. Their numbers are
-  * only comparable because these are identical — and a config change
-  * (codegen cache size, a new required conf) must land once, not three
-  * times.
+/** Shared harness plumbing for the timing mains ([[Bench]], [[BenchOne]],
+  * [[ScalingCurve]], [[ProfileQuery]]): one definition of the session
+  * configuration, the untimed warm-up, the between-queries hygiene and
+  * the per-sample timing step. Their numbers are only comparable
+  * because these are identical — and a config change (codegen cache
+  * size, a new required conf) or a change to what a sample measures
+  * must land once, not once per main.
   */
 object BenchSession {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -49,5 +50,23 @@ object BenchSession {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
     graft.sources.Scratch.sweep(spark)
+  }
+
+  /** One timing sample, the only one every timing main takes: drop
+    * pinned blocks, then time a `count()` of `fn(spark, sfDir)` in
+    * seconds. `None` = the query threw (reported on stderr under
+    * `label`); a crash must NOT contribute a small positive wall time
+    * that makes a bench look healthy. */
+  def timeFn(spark: SparkSession, sfDir: String, label: String,
+      fn: (SparkSession, String) => DataFrame): Option[Double] = {
+    dropPinnedBlocks(spark)
+    val t0 = System.nanoTime()
+    val ok =
+      try { fn(spark, sfDir).count(); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $label failed: ${e.getMessage}")
+        false
+      }
+    if (ok) Some((System.nanoTime() - t0) / 1e9) else None
   }
 }

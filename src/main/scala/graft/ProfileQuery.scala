@@ -82,13 +82,11 @@ object ProfileQuery {
     BenchSession.warmUp(spark, sfDir)
     for (n <- names) {
       stageAgg.clear(); jobs.clear(); batchLines.clear()
-      BenchSession.dropPinnedBlocks(spark)
-      val t0 = System.nanoTime()
-      SparkEntry.queries(n)(spark, sfDir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
+      val wall = BenchSession.timeFn(spark, sfDir, n, SparkEntry.queries(n))
       // listener bus is async; give it a moment to drain
       Thread.sleep(400)
-      println(f"\n=== $n wall=$wall%.3f s jobs=${jobs.size} " +
+      println(s"\n=== $n wall=${wall.fold("FAILED")(w => f"$w%.3f s")} " +
+        f"jobs=${jobs.size} " +
         f"jobWallSum=${jobs.map(_._2).sum / 1e3}%.3f s ===")
       if (batchLines.nonEmpty) {
         println(s"-- streaming batches (${batchLines.size}):")

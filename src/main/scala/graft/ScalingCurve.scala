@@ -1,7 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Diagnostic main: empirical scaling curves for one representative
   * query per operator family, run at sf0.001 / sf0.01 / sf0.1 in one
@@ -110,6 +113,33 @@ object ScalingCurve {
     "q177_bfs_reach", "q194_kcore", "q221_link_prediction",
     "q226_temporal_reach", "q227_lpa_communities")
 
+  /** Runs `body` and counts the connected-components convergence
+    * probes ([[operators.DupClusters.ProbeName]] observations) that
+    * complete meanwhile: one initial probe plus one per star
+    * alternation, so a single connectedComponents call's round count
+    * is the count minus one. */
+  private[graft] def countCcProbes[A](spark: SparkSession)(body: => A)
+      : (A, Int) = {
+    val probes = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.observedMetrics.contains(operators.DupClusters.ProbeName))
+          probes.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val a = body
+      // Listener delivery is asynchronous but in order: once a later
+      // observation has completed, every earlier probe was counted.
+      val fence = Observation()
+      spark.range(1).observe(fence, count(lit(1))).collect()
+      fence.get
+      (a, probes.get)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   def main(args: Array[String]): Unit = {
     val reps = args.headOption.map(_.toInt).getOrElse(3)
     // shared harness = numbers comparable to BENCH_rN per-query figures
@@ -186,27 +216,27 @@ object ScalingCurve {
       "q282_event_ttl" ->
         "live in-TTL users only (event-time timers physically reclaim expired entries)")
     for (r <- 1 to reps; sf <- Sfs; (name, _, _) <- Queries) {
-      BenchSession.dropPinnedBlocks(spark)
       if (Stateful(name)) statePeak.set(-1L)
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, sf).count()
-        val s = (System.nanoTime() - t0) / 1e9
-        val k = (name, sf)
-        mins(k) = mins.get(k).fold(s)(math.min(s, _))
-        if (Stateful(name)) {
-          val peak = settledStatePeak()
-          if (peak >= 0)
-            stateRows(k) = math.max(stateRows.getOrElse(k, -1L), peak)
+      def sample(): Option[Double] =
+        BenchSession.timeFn(spark, sf, name, SparkEntry.queries(name))
+      val timed =
+        if (name != "q232_union_dedup") sample()
+        else {
+          val (t, probes) = countCcProbes(spark)(sample())
+          if (t.isDefined) ccRounds(sf) = probes - 1
+          t
         }
-        if (name == "q232_union_dedup" &&
-            operators.DupClusters.lastAlternations >= 0)
-          ccRounds(sf) = operators.DupClusters.lastAlternations
-        println(f"[rep $r] ${sf.split('/').last}%-8s $name%-24s $s%.2fs")
-      } catch { case scala.util.control.NonFatal(e) =>
-        // fatal JVM errors (OOM, linkage) must propagate — a session
-        // that survived one is not a session to keep measuring in
-        println(s"[rep $r] $sf $name FAILED: ${e.getMessage}")
+      timed match {
+        case Some(s) =>
+          val k = (name, sf)
+          mins(k) = mins.get(k).fold(s)(math.min(s, _))
+          if (Stateful(name)) {
+            val peak = settledStatePeak()
+            if (peak >= 0)
+              stateRows(k) = math.max(stateRows.getOrElse(k, -1L), peak)
+          }
+          println(f"[rep $r] ${sf.split('/').last}%-8s $name%-24s $s%.2fs")
+        case None => println(s"[rep $r] $sf $name FAILED")
       }
     }
     val sb = new StringBuilder
@@ -314,17 +344,13 @@ object ScalingCurve {
         .write.mode("overwrite").parquet(s"$blowDir/documents.parquet")
     }
     val decade = decadeQs.map { n =>
-      val base = SparkEntry.queries(n)(spark, Sfs(2)).count()
-      var best = Double.MaxValue; var out = -1L
-      for (_ <- 1 to 2) {
-        BenchSession.dropPinnedBlocks(spark)
-        val t0 = System.nanoTime()
-        out = SparkEntry.queries(n)(spark, blowDir).count()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-      }
-      val rounds =
-        if (n == "q232_union_dedup") operators.DupClusters.lastAlternations
-        else -1
+      val q = SparkEntry.queries(n)
+      val base = q(spark, Sfs(2)).count()
+      val best = (1 to 2)
+        .flatMap(_ => BenchSession.timeFn(spark, blowDir, n, q)).minOption
+      // untimed, after the samples: the output rows, and q232's rounds
+      val (out, probes) = countCcProbes(spark)(q(spark, blowDir).count())
+      val rounds = if (n == "q232_union_dedup") probes - 1 else -1
       (n, best, base, out, rounds)
     }
     graft.sources.Scratch.delete(spark, blowDir)
@@ -342,9 +368,13 @@ object ScalingCurve {
     sb ++= "|---|---|---|---|---|\n"
     decade.foreach { case (n, best, base, out, rounds) =>
       val t01 = mins.get((n, Sfs(2)))
-      val ratio = t01.filter(_ > 0).fold("—")(t => f"${best / t}%.1fx")
+      val ratio = (best, t01.filter(_ > 0)) match {
+        case (Some(b), Some(t)) => f"${b / t}%.1fx"
+        case _ => "—"
+      }
       val extra = if (rounds >= 0) s" (CC rounds: $rounds)" else ""
-      sb ++= f"| $n | ${t01.fold("—")(t => f"$t%.2f s")} | $best%.2f s " +
+      sb ++= f"| $n | ${t01.fold("—")(t => f"$t%.2f s")} " +
+        f"| ${best.fold("FAILED")(b => f"$b%.2f s")} " +
         f"| $ratio | $base%,d -> $out%,d$extra |\n"
     }
     sb ++= "\nReading: q225's time ratio against a ~1000x pair-mass " +
@@ -400,13 +430,8 @@ object ScalingCurve {
         ("q177_bfs_reach", "O(|E|) per BFS round"),
         ("q194_kcore", "O(|E|) per peel round"))
       val graphDecade = graphQs.map { case (n, bound) =>
-        var best = Double.MaxValue
-        for (_ <- 1 to 2) {
-          BenchSession.dropPinnedBlocks(spark)
-          val t0 = System.nanoTime()
-          SparkEntry.queries(n)(spark, blowG).count()
-          best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        }
+        val best = (1 to 2).flatMap(_ => BenchSession.timeFn(spark, blowG,
+          n, SparkEntry.queries(n))).minOption
         (n, best, bound)
       }
       graft.sources.Scratch.delete(spark, blowG)
@@ -415,23 +440,19 @@ object ScalingCurve {
       blowEvents(blowS, shiftUsers = false, shiftTime = false)
       val stagedRows = ev01.count() * 10
       // the eviction drains carry LIVE in-drain bounds (peak < ½ the
-      // staged feed) — a failed require at the decade is an honest
-      // over-bound finding, reported as such rather than crashing the
-      // generator
-      def runStateful(n: String, dir: String): (Double, Long, Option[String]) = {
+      // staged feed) — a failed require at the decade (None; its
+      // message goes to stderr) is an honest over-bound finding,
+      // reported as such rather than crashing the generator
+      def runStateful(n: String, dir: String): (Option[Double], Long) = {
         statePeak.set(-1L)
-        BenchSession.dropPinnedBlocks(spark)
-        val t0 = System.nanoTime()
-        val err = try { SparkEntry.queries(n)(spark, dir).count(); None }
-          catch { case scala.util.control.NonFatal(e) =>
-            Some(Option(e.getMessage).getOrElse(e.toString).take(160)) }
-        ((System.nanoTime() - t0) / 1e9, settledStatePeak(), err)
+        val t = BenchSession.timeFn(spark, dir, n, SparkEntry.queries(n))
+        (t, settledStatePeak())
       }
       val streamQs = Seq("q255_stream_actives", "q259_bounded_dedup",
         "q273_join_eviction", "q278_session_eviction")
       val streamDecade = streamQs.map { n =>
-        val (t, peak, err) = runStateful(n, blowS)
-        (n, t, peak, err)
+        val (t, peak) = runStateful(n, blowS)
+        (n, t, peak)
       }
       // per-query staged-feed size at the decade: the eviction drains
       // stream only their event subset (q273: clicks+purchases; q278:
@@ -496,8 +517,7 @@ object ScalingCurve {
       // honestly grew the live set 10x.
       val blowT = sources.Scratch.dir(spark, "sf1eq_ev_stretch")
       blowEvents(blowT, shiftUsers = false, shiftTime = true)
-      val (stretchT, stretchPeak, stretchErr) =
-        runStateful("q259_bounded_dedup", blowT)
+      val (stretchT, stretchPeak) = runStateful("q259_bounded_dedup", blowT)
       graft.sources.Scratch.delete(spark, blowT)
 
       val eRatioBlow = eBlow.toDouble / edgeCounts(Sfs(2))
@@ -519,16 +539,17 @@ object ScalingCurve {
       sb ++= "|---|---|---|---|---|\n"
       graphDecade.foreach { case (n, best, bound) =>
         val t01 = mins.get((n, Sfs(2)))
-        val ratio = t01.filter(_ > 0).map(t => best / t)
+        val ratio = for (b <- best; t <- t01.filter(_ > 0)) yield b / t
         val flag = ratio.fold("—")(r =>
           if (r <= eRatioBlow) f"$r%.1fx — within $bound"
           else f"$r%.1fx — EXCEEDS $bound")
-        sb ++= f"| $n | ${t01.fold("—")(t => f"$t%.2f s")} | $best%.2f s " +
+        sb ++= f"| $n | ${t01.fold("—")(t => f"$t%.2f s")} " +
+          f"| ${best.fold("FAILED")(b => f"$b%.2f s")} " +
           f"| $flag | ${eRatioBlow}%.1fx |\n"
       }
       sb ++= "\n| query | state bound | sf0.1 peak | 10x-events peak | staged rows | reading |\n"
       sb ++= "|---|---|---|---|---|---|\n"
-      streamDecade.foreach { case (n, t, peak, err) =>
+      streamDecade.foreach { case (n, t, peak) =>
         val base = stateRows.get((n, Sfs(2)))
         // what each drain actually stages at the decade (q273 streams
         // only clicks+purchases)
@@ -536,9 +557,9 @@ object ScalingCurve {
                   else stagedRows
         val baseShare = base.filter(_ > 0)
           .map(b => 100.0 * b / (fed / 10))
-        val reading = err match {
-          case Some(msg) => s"IN-DRAIN BOUND FAILED at the decade: $msg"
-          case None => n match {
+        val reading = t match {
+          case None => "IN-DRAIN BOUND FAILED at the decade (message on stderr)"
+          case Some(_) => n match {
             case "q255_stream_actives" =>
               val r = base.filter(_ > 0).map(b => peak.toDouble / b)
               r.fold("—")(x => f"${x}%.2fx peak on 10x events — state " +
@@ -560,7 +581,8 @@ object ScalingCurve {
           }
         }
         sb ++= f"| $n | ${stateBounds(n)} | ${base.fold("—")(b => f"$b%,d")} " +
-          f"| $peak%,d | $fed%,d | $reading (${t}%.1f s) |\n"
+          f"| $peak%,d | $fed%,d | $reading " +
+          s"(${t.fold("failed")(x => f"$x%.1f s")}) |\n"
       }
       // the compacted-CDC-log layout rows (computed above, before the
       // 10x feed was deleted)
@@ -610,13 +632,13 @@ object ScalingCurve {
       // rather than a negative "tail" in that case
       val baseTail = q259Base.filter(_ > sf01Staged / 2)
         .map(_ - sf01Staged / 2)
-      val stretchReading = stretchErr match {
-        case Some(msg) => s"FAILED at the stretched decade: $msg"
+      val stretchReading = stretchT match {
+        case None => "FAILED at the stretched decade (message on stderr)"
         // no sf0.1 base measurement (the rep loop recorded a failure
         // for q259) -> nothing to decompose against; "—" like the
         // table cell, NOT the measured-but-small message below
-        case None if q259Base.forall(_ <= 0) => "—"
-        case None =>
+        case Some(_) if q259Base.forall(_ <= 0) => "—"
+        case Some(_) =>
           val stTail = stretchPeak - stagedRows / 2
           baseTail.filter(_ => stTail > 0).fold(
             "peak under one wave's inflow on either side — the tail " +
@@ -649,7 +671,8 @@ object ScalingCurve {
         "| staged rows | reading |\n|---|---|---|---|---|---|\n"
       sb ++= f"| q259_bounded_dedup | ${stateBounds("q259_bounded_dedup")} " +
         f"| ${q259Base.fold("—")(b => f"$b%,d")} | $stretchPeak%,d " +
-        f"| $stagedRows%,d | $stretchReading (${stretchT}%.1f s) |\n"
+        f"| $stagedRows%,d | $stretchReading " +
+        s"(${stretchT.fold("failed")(x => f"$x%.1f s")}) |\n"
     }
     // The streaming family's STATE dimension: wall time measures the
     // drain; state rows measure what a long-running deployment

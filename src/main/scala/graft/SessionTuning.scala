@@ -22,8 +22,8 @@ import org.apache.spark.sql.SparkSession
   * filesystems without a FileContext implementation) runs the SAME
   * rename-based atomic-write protocol through the FileSystem API,
   * which on RawLocalFileSystem is a plain `File.renameTo` — no
-  * subprocess. Same-session interleaved A/B (ConfAB, min of 4):
-  * q273 9.56 s → 4.55 s; q281 26.5 s → 8.5 s.
+  * subprocess. Same-session interleaved A/B (BenchOne conf variants,
+  * min of 4): q273 9.56 s → 4.55 s; q281 26.5 s → 8.5 s.
   *
   * Scale posture: this is a LOCAL-FILESYSTEM default, not a cluster
   * claim — on HDFS the FileContext manager is native and preferred;

@@ -19,7 +19,9 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Queries.q21FactBuild(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Built once (as is [[oracleSql]]): a harness looks queries up by
+    * name hundreds of times a run. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q01_pricing_summary"  -> (Queries.q01PricingSummary _),
     "q02_filter_project"   -> (Queries.q02FilterProject _),
     "q03_serving_stmt"     -> (Queries.q03ServingStatementQuery _),
@@ -1193,7 +1195,7 @@ object SparkEntry {
          max(t) - min(t) AS duration_ms
        FROM r GROUP BY 1, 2 ORDER BY user_id, session_seq"""
 
-  def oracleSql: Map[String, String] = Map(
+  lazy val oracleSql: Map[String, String] = Map(
     "q01_pricing_summary" ->
       """SELECT l_returnflag, l_linestatus,
          CAST(round(sum(CAST(l_quantity AS DECIMAL(38,10))), 2) * 100 AS BIGINT) AS sum_qty,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Connected components over a duplicate-pair graph — the step every
@@ -53,20 +53,12 @@ import org.apache.spark.sql.functions._
   */
 object DupClusters {
 
-  /** Alternation count of the most recent [[connectedComponents]]
-    * convergence in this JVM — a DIAGNOSTIC read by the scaling
-    * harness to record round counts (e.g. the q232 pre-collapse
-    * before/after); not part of any query's semantics. */
-  @volatile private[graft] var lastAlternations: Int = -1
-
-  /** DIAGNOSTIC toggle for the same-session A/B of the large-star
-    * checkpoint's eagerness (CodeAB): eager (default, one action) vs
-    * lazy (the small-star action materializes-and-caches it — zero
-    * extra actions, but its three consumer stages can transiently
-    * compute overlapping partitions before the cache fills). Results
-    * are identical either way; only the action/stage schedule
-    * differs. Never set outside diagnostics. */
-  @volatile private[graft] var eagerLargeStar: Boolean = true
+  /** Name of the observation riding every convergence-probe
+    * checkpoint of [[connectedComponents]]: one initial probe plus one
+    * per star alternation, so a QueryExecutionListener that counts it
+    * recovers a call's round count (ScalingCurve's CC-rounds column)
+    * without any global state. */
+  val ProbeName = "cc_probe"
 
   /** Cluster assignment for every node of the pair graph: returns
     * (node, cluster_id) where cluster_id is the MIN node id of the
@@ -80,25 +72,14 @@ object DupClusters {
     // a pass proves every delta was zero and nothing collapsed — the
     // pass was an identity. Decimal accumulation cannot overflow at
     // any node-id scale.
-    //
-    // Round 19: the probe RIDES THE CHECKPOINT'S OWN MATERIALIZATION
-    // as an observed metric (CollectMetrics) instead of running a
-    // separate aggregation job over the cached blocks — localCheckpoint
-    // goes through Dataset.withAction, so the observation completes
-    // with the checkpoint action. One action per pass where round 18
-    // ran two (checkpoint + probe); at fixture scale the per-action
-    // fixed cost dominated these loops (ProfileQuery: many small
-    // barrier-separated stages), and at cluster scale it removes a
-    // full pass over the edge table per alternation.
+    // The probe rides the checkpoint's own job (Checkpoints.probed):
+    // one action per pass, not checkpoint + probe.
     def checkpointProbed(df: DataFrame)
         : (DataFrame, (Long, java.math.BigDecimal)) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = df.observe(obs,
-          count(lit(1)).as("n"),
-          coalesce(sum((col("a") + col("b")).cast("decimal(38,0)")),
-            lit(0).cast("decimal(38,0)")).as("s")) // coalesce: empty set
-        .localCheckpoint()
-      val m = obs.get
+      val (ck, m) = Checkpoints.probed(df, Observation(ProbeName),
+        count(lit(1)).as("n"),
+        coalesce(sum((col("a") + col("b")).cast("decimal(38,0)")),
+          lit(0).cast("decimal(38,0)")).as("s")) // coalesce: empty set
       val s = m("s") match {
         case d: java.math.BigDecimal => d
         case d: scala.math.BigDecimal => d.bigDecimal
@@ -138,7 +119,7 @@ object DupClusters {
         .join(mins, "u")
         .select(col("v").as("a"), col("m").as("b"))
         .filter(col("a") =!= col("b"))
-        .localCheckpoint(eager = eagerLargeStar)
+        .localCheckpoint()
     }
     // SMALL-STAR: each node u links its smaller neighbors AND itself
     // to the minimum of that set. Canonical edges already point
@@ -180,7 +161,6 @@ object DupClusters {
     // legitimately needs more rounds)
     require(converged,
       s"connectedComponents did not converge in $maxIters alternations")
-    lastAlternations = rounds
     // Fixpoint edges are disjoint stars (child, component-min root):
     // every non-root node appears exactly once on the child side.
     // Roots label themselves.

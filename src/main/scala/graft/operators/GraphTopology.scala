@@ -206,19 +206,14 @@ object GraphTopology {
 
   /** [[kcoreQuery]]'s core over undirected distinct (u, v) edges. */
   def kcore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    // Convergence probe (edge count) rides each checkpoint's own
-    // materialization as an observed metric — the DupClusters
-    // checkpointProbed pattern: localCheckpoint goes through
-    // Dataset.withAction, so the observation completes with the
-    // checkpoint job. One action per peel round where the previous
-    // spelling ran two (checkpoint + count), and the initial count
-    // rides the initial checkpoint the same way. The edge table is
-    // nonincreasing under peeling, so an unchanged count proves the
-    // round dropped nothing — the fixpoint.
+    // Convergence probe (edge count) rides each checkpoint's own job
+    // (Checkpoints.probed), the initial count included. The edge
+    // table is nonincreasing under peeling, so an unchanged count
+    // proves the round dropped nothing — the fixpoint.
     def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
-      (ck, obs.get("n").asInstanceOf[Long])
+      val (ck, m) = Checkpoints.probed(df,
+        org.apache.spark.sql.Observation(), count(lit(1)).as("n"))
+      (ck, m("n").asInstanceOf[Long])
     }
     val e0 = edges.select(col("u"), col("v"))
     var (dirE, prev) = checkpointCounted(
@@ -383,39 +378,22 @@ object GraphTopology {
   /** Timestamped undirected co-activity edges (u, v, t) — the q100
     * graph with each edge carrying its cell's epoch hour. A pair
     * co-active in several cells keeps one edge per distinct hour. */
-  /** DIAGNOSTIC toggle (CodeAB): grouped-array spelling of
-    * [[temporalEdges]] instead of the join spelling. Output pinned
-    * identical by GraphEdgeParitySpec; only the physical shape
-    * differs. Never set outside diagnostics. */
-  @volatile private[graft] var temporalViaArrays: Boolean = false
-
   def temporalEdges(cells: DataFrame): DataFrame =
     // Deliberately the JOIN spelling, not the grouped-array build the
     // unweighted/weighted builders moved to (round 18): the temporal
     // multigraph keeps one edge per (pair, hour), so the pair fan-out
     // into the distinct is several times larger and the measured
     // bench preferred the self-join here (array build: q226
-    // 4.4 → 5.0 s in round 18; re-measured in round 19 after the
-    // capped-aggregate change via CodeAB — see OPTIMIZATION_r19.md)
-    // while q100's family preferred the array build — per-operator
-    // measurement, not one rule. GraphEdgeParitySpec pins both
-    // spellings to each other.
-    if (temporalViaArrays)
-      GraphRank.cellMemberSets(cells)
-        .withColumn("t",
-          datediff(col("d"), lit("1970-01-01")).cast("long") * 24
-            + col("h"))
-        .select(explode(GraphRank.memberPairs(col("us"))).as("p"),
-          col("t"))
-        .select(col("p.u").as("u"), col("p.v").as("v"), col("t"))
-        .distinct()
-    else
-      GraphRank.cellPairsReference(cells.withColumn("t",
-          datediff(col("d"), lit("1970-01-01")).cast("long") * 24
-            + col("h")))
-        .select(col("a.user_id").as("u"), col("b.user_id").as("v"),
-          col("a.t").as("t"))
-        .distinct()
+    // 4.4 → 5.0 s in round 18, re-measured in round 19 — see
+    // OPTIMIZATION_r19.md) while q100's family preferred the array
+    // build — per-operator measurement, not one rule.
+    // GraphEdgeParitySpec pins the array spelling to this one.
+    GraphRank.cellPairsReference(cells.withColumn("t",
+        datediff(col("d"), lit("1970-01-01")).cast("long") * 24
+          + col("h")))
+      .select(col("a.user_id").as("u"), col("b.user_id").as("v"),
+        col("a.t").as("t"))
+      .distinct()
 
   /** [[temporalReachQuery]]'s core over (u, v, t) undirected edges:
     * earliest arrival (hours since epoch) from `seeds` (arrival 0),
@@ -508,11 +486,6 @@ object GraphTopology {
     labelPropagation(
       GraphRank.coActivityEdges(Tables.events(spark, dir)), LpaRounds)
 
-  /** DIAGNOSTIC toggle (CodeAB): restore the per-round localCheckpoint
-    * in [[labelPropagation]]. Results identical either way — only the
-    * action schedule differs. Never set outside diagnostics. */
-  @volatile private[graft] var lpaCheckpointRounds: Boolean = false
-
   /** [[labelPropagationQuery]]'s core over undirected distinct
     * (u, v) edges with u < v.
     *
@@ -543,7 +516,6 @@ object GraphTopology {
         .withColumn("rk", row_number().over(byNode))
         .filter(col("rk") === 1)
         .select(col("u"), col("label"))
-      if (lpaCheckpointRounds) lab = lab.localCheckpoint()
     }
     lab.select(col("u").cast("long").as("user_id"),
         col("label").cast("long").as("community"))

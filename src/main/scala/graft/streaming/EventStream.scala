@@ -206,8 +206,9 @@ object EventStream {
     // a commit appends the batch's puts/deletes to a changelog and
     // snapshots move to background maintenance — the documented
     // production posture for RocksDB state stores, and the setting a
-    // 100 TB deployment runs with. Same-session A/B (ConfAB):
-    // q281 8.5 s → 7.0 s on top of the checkpoint-manager fix.
+    // 100 TB deployment runs with. Same-session A/B (BenchOne conf
+    // variants): q281 8.5 s → 7.0 s on top of the checkpoint-manager
+    // fix.
     // Restored with the provider so neither leaks into batch queries.
     val keys = Seq(
       "spark.sql.streaming.stateStore.providerClass" ->

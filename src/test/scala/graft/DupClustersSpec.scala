@@ -40,6 +40,21 @@ class DupClustersSpec extends SparkSpec {
     assert(cc.forall(_.getLong(1) == 0L), "every node labels to min 0")
   }
 
+  test("cc_probe observations pin the alternation count on a 64-node " +
+    "path") {
+    // one probe rides the initial checkpoint and one each alternation
+    def alternations(id: Int => Long): Int = {
+      val pairs = (0 until 63).map(i => (id(i), id(i + 1))).toDF("d1", "d2")
+      val (cc, probes) = ScalingCurve.countCcProbes(spark)(
+        DupClusters.connectedComponents(pairs).collect())
+      assert(cc.length == 64 && cc.forall(_.getLong(1) == 0L))
+      probes - 1
+    }
+    assert(alternations(_.toLong) == 7)
+    // ids permuted along the path: adjacency uncorrelated with id order
+    assert(alternations(i => ((37 * i + 11) % 64).toLong) == 6)
+  }
+
   test("connected components: edge direction and duplicates don't matter") {
     val pairs = Seq((5L, 4L), (4L, 5L), (5L, 4L), (6L, 5L)).toDF("d1", "d2")
     val cc = DupClusters.connectedComponents(pairs)
