@@ -71,17 +71,13 @@ object Bench {
     // At-scale hash configs (xxhash64 instead of the oracle-portable
     // md5-prefix family) for the sketch queries: min of 2 isolated
     // samples each, reported under a separate key so every BENCH file
-    // carries the portable-vs-fast delta. SPARK_GRAFT_BENCH_FAST_HASH=0
-    // disables (e.g. for quick local iteration).
-    val fastHash: Map[String, Double] =
-      if (sys.env.getOrElse("SPARK_GRAFT_BENCH_FAST_HASH", "1") == "0") Map.empty
-      else {
-        val variants = SparkEntry.benchFastHashVariants
-        variants.keys.toSeq.sorted.flatMap { n =>
-          (1 to 2).flatMap(_ => BenchSession.timeFn(spark, sfDir,
-            s"fast-hash $n", variants(n)))
-            .minOption.map(n -> _)
-        }.toMap
+    // carries the portable-vs-fast delta.
+    val fastHash: Seq[(String, Double)] = SparkEntry.specs
+      .flatMap(q => q.fastHash.map(q.name -> _)).sortBy(_._1)
+      .flatMap { case (n, fn) =>
+        (1 to 2).flatMap(_ =>
+          BenchSession.timeFn(spark, sfDir, s"fast-hash $n", fn))
+          .minOption.map(n -> _)
       }
     val perQuerySamples = names.map { n =>
       n -> samples.collect { case (`n`, Some(s)) => s }.toSeq
@@ -100,8 +96,8 @@ object Bench {
           n -> (now / p)
       }
     }
-    val line = metricLine(results, failed, flaky,
-      fastHash.toSeq.sortBy(_._1), perQuerySamples, sfDir, regressions)
+    val line = metricLine(results, failed, flaky, fastHash,
+      perQuerySamples, sfDir, regressions)
     println(line)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_OUT.json")
     try Files.writeString(Paths.get(outPath), line + "\n")
@@ -119,24 +115,6 @@ object Bench {
     spark.stop()
   }
 
-  /** The driver-parsed metric line, built as a pure function so
-    * BenchSpec can round-trip it through a real JSON parser — the
-    * driver's `json.load` of this line broke in rounds 1/2 (sbt [info]
-    * prefixes) and a malformed line silently zeroes a round's bench,
-    * so its well-formedness is worth a unit lock. Strings are escaped
-    * (quote/backslash/control chars); doubles are finite by
-    * construction (nanoTime deltas).
-    *
-    * `samples` carries EVERY successful per-rep timing per query —
-    * the within-session variance a cross-round per-query comparison
-    * needs to separate host-steal noise from plan changes without
-    * re-running anything (the ±15% total swing and 2x per-query
-    * swings cost two rounds of perf adjudication; min-of-reps alone
-    * hides the spread). The adaptive-retry extra sample is NOT part
-    * of `samples`, so a query's `queries` value can sit below
-    * min(samples) — that gap itself marks "an isolated quiet-window
-    * retry beat every interleaved rep", i.e. steal hit all rounds.
-    */
   /** Extract the prior run's per-query minima from a metric-line file
     * — the flat `"queries":{"name":sec,...}` object. Zero-dependency
     * parse: the object is brace-free inside by construction (names are
@@ -192,6 +170,24 @@ object Bench {
     case c            => c.toString
   }
 
+  /** The JSON metric line, built as a pure function so BenchLineSpec
+    * can round-trip it through a real JSON parser — a consumer's
+    * `json.load` of this line once broke on sbt [info] prefixes, and a
+    * malformed line silently zeroes a bench result, so its
+    * well-formedness is worth a unit lock. Strings are escaped
+    * (quote/backslash/control chars); doubles are finite by
+    * construction (nanoTime deltas).
+    *
+    * `samples` carries EVERY successful per-rep timing per query —
+    * the within-session variance a cross-round per-query comparison
+    * needs to separate host-steal noise from plan changes without
+    * re-running anything (the ±15% total swing and 2x per-query
+    * swings cost two rounds of perf adjudication; min-of-reps alone
+    * hides the spread). The adaptive-retry extra sample is NOT part
+    * of `samples`, so a query's `queries` value can sit below
+    * min(samples) — that gap itself marks "an isolated quiet-window
+    * retry beat every interleaved rep", i.e. steal hit all rounds.
+    */
   private[graft] def metricLine(
       results: Seq[(String, Double)],
       failed: Seq[String], flaky: Seq[String],

@@ -4,92 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
-/** Driver-contract wrappers for the beyond-parity LLM-pipeline
-  * operators (dedup / similarity / text analysis / multimodal), fixing
-  * the hyperparameters the oracle SQL mirrors. */
+/** The multi-statement query bodies `SparkEntry.specs` registers:
+  * queries that compose several operators (the dup-cluster family, the
+  * dedup method comparisons, the as-of and range joins) or round-trip a
+  * table through a sink and read it back (parquet, JSON, TSV, CSV, ZIP,
+  * ORC, XML, schema evolution). A query that is one operator call is
+  * registered on that operator directly, not here. */
 object Extensions {
-
-  def q22ExactDup(s: SparkSession, d: String): DataFrame =
-    Dedup.exactDupStats(s, d)
-
-  /** 3-gram Jaccard near-dup pairs at threshold 0.6 WITH the hot-shingle
-    * frequency cap (shingles in > 50 docs are pruned before the pair
-    * join) — the at-scale configuration: worst-case bucket fan-out is
-    * bounded at 50², instead of quadratic in corpus size for stop-
-    * shingles. The oracle SQL applies the identical doc-frequency prune
-    * (a COUNT(*) OVER (PARTITION BY s) QUALIFY), so the check stays an
-    * exact hash match. */
-  def q23NgramJaccard(s: SparkSession, d: String): DataFrame =
-    Dedup.ngramJaccardPairs(Tables.documents(s, d), n = 3, threshold = 0.6,
-      maxDocFreq = 50)
-
-  /** MinHash 64 perms, 16 bands × 4 rows, est-Jaccard >= 0.5 — in the
-    * portable-hash configuration (md5-prefix base hash + universal-
-    * hash permutations mod 2^31-1), which DuckDB computes identically,
-    * so the whole shingle→signature→band→verify pipeline hash-checks
-    * exactly. The xxhash64 configuration (same machinery, ~10x cheaper
-    * hashing — the at-scale default) is asserted in
-    * DedupSimilaritySpec. */
-  def q24MinHashLsh(s: SparkSession, d: String): DataFrame =
-    Dedup.minHashLshPairs(Tables.documents(s, d),
-      n = 3, numHashes = 64, bands = 16, threshold = 0.5, portable = true)
-
-  /** SimHash near-dups at hamming <= 3 — portable-hash configuration
-    * (60-bit md5-prefix token hashes, 4×15-bit pigeonhole chunks) so
-    * the sketch is exactly recomputable in the DuckDB oracle. The
-    * 64-bit xxhash64 configuration is the at-scale default, asserted
-    * in DedupSimilaritySpec. */
-  def q25SimHash(s: SparkSession, d: String): DataFrame =
-    Dedup.simHashPairs(Tables.documents(s, d), maxHamming = 3,
-      portable = true)
-
-  /** Brute-force cosine top-10 for vec_id=0 (exact baseline). */
-  def q26CosineTopK(s: SparkSession, d: String): DataFrame =
-    Similarity.bruteForceTopK(Tables.embeddings(s, d), queryId = 0, k = 10)
-
-  /** Hyperplane-LSH top-10, registered in its exact-recovery
-    * configuration (planes = 0 → one bucket → full recall) so the
-    * driver can hash-check it against the brute-force SQL answer the
-    * approximate path converges to. The approximate configuration
-    * (planes = 8, ~1/256 candidate fraction) is asserted in
-    * DedupSimilaritySpec. */
-  def q27AnnLsh(s: SparkSession, d: String): DataFrame =
-    Similarity.lshTopK(Tables.embeddings(s, d), queryId = 0, k = 10, planes = 0)
-
-  def q28LangId(s: SparkSession, d: String): DataFrame =
-    TextAnalysis.langIdQuery(s, d)
-
-  def q29TextQuality(s: SparkSession, d: String): DataFrame =
-    TextAnalysis.qualityQuery(s, d)
-
-  def q30TokenCount(s: SparkSession, d: String): DataFrame =
-    TextAnalysis.tokenCountQuery(s, d)
-
-  def q31Fingerprint(s: SparkSession, d: String): DataFrame =
-    TextAnalysis.fingerprintQuery(s, d)
-
-  def q32EmbedStats(s: SparkSession, d: String): DataFrame =
-    Similarity.embeddingStats(s, d)
-
-  def q33MultimodalMeta(s: SparkSession, d: String): DataFrame =
-    Multimodal.metadataQuery(s, d)
-
-  /** Winnowed fingerprint sketch sizes — portable-hash window
-    * formulation so DuckDB recomputes the sketch exactly. The narrow
-    * array formulation with xxhash64 ([[TextAnalysis.winnowQuery]]) is
-    * the at-scale default, asserted in TextAnalysisSpec. */
-  def q34Winnow(s: SparkSession, d: String): DataFrame =
-    TextAnalysis.winnowQueryPortable(s, d)
-
-  /** IVF (inverted-file) top-10: 16-cluster k-means coarse quantizer,
-    * registered in its exact-recovery configuration (nprobe = nClusters
-    * → every list probed → provably the brute-force answer) so the
-    * driver hash-checks the whole train/assign/probe machinery. The
-    * approximate configuration (nprobe = 4, ~25% scanned) is asserted
-    * in DedupSimilaritySpec. */
-  def q36IvfTopK(s: SparkSession, d: String): DataFrame =
-    Similarity.ivfTopK(Tables.embeddings(s, d), queryId = 0, k = 10,
-      nClusters = 16, nprobe = 16, cacheKey = Some(d))
 
   /** Multimodal batch-decode plumbing (mapPartitions + stub codec):
     * per-doc decoded dimensions. */
@@ -99,13 +20,6 @@ object Extensions {
       .select(col("doc_id"), col("n_bytes"), col("width"), col("height"))
       .orderBy("doc_id")
   }
-
-  /** q43: benchmark decontamination — 3-gram overlap of every corpus
-    * doc against the `src0` docs standing in as the eval set, flagged
-    * at >= 5 shared shingles. */
-  def q43Decontaminate(s: SparkSession, d: String): DataFrame =
-    Dedup.benchmarkOverlap(Tables.documents(s, d), benchSource = "src0",
-      n = 3, minOverlap = 5L)
 
   /** q41: as-of join over the event stream — each click attached to
     * the user's most recent purchase at-or-before it (backward
@@ -153,119 +67,6 @@ object Extensions {
       .orderBy("user_id", "click_id", "err_id")
   }
 
-  /** Embedding similar pairs at cosine>=0.3, registered in the
-    * exact-recovery configuration (planes = 0 → one bucket → all pairs
-    * verified) so the driver hash-checks the pair semantics against a
-    * DuckDB all-pairs oracle. The bucketed configuration (planes = 4)
-    * is asserted in DedupSimilaritySpec. (The testdata embeddings are
-    * near-orthogonal random vectors — max pairwise cosine ~0.37 — so a
-    * true near-dup threshold returns the empty set; 0.3 exercises the
-    * operator end to end.) */
-  def q35EmbedNearDup(s: SparkSession, d: String): DataFrame =
-    Dedup.embeddingNearDupPairs(Tables.embeddings(s, d), planes = 0,
-      threshold = 0.3)
-
-  /** q46: gap-based batch sessionization of the event stream
-    * (30-minute inactivity gap): per-session event counts, bounds,
-    * and durations. */
-  def q46Sessionize(s: SparkSession, d: String): DataFrame =
-    Sessionize.sessionQuery(s, d, gapMs = 1800000L)
-
-  /** q47: TF-IDF top-3 terms per document with exact integer rational
-    * scores (tf * 1e6 * N div df). */
-  def q47Tfidf(s: SparkSession, d: String): DataFrame =
-    TextAnalysis.tfidfQuery(s, d, topK = 3)
-
-  /** q48: repetition quality signals — duplicate-word fraction and
-    * top-bigram fraction (Gopher-rules style). */
-  def q48Repetition(s: SparkSession, d: String): DataFrame =
-    TextAnalysis.repetitionQuery(s, d)
-
-  /** q49: PII redaction report over event props + customer names. */
-  def q49Redact(s: SparkSession, d: String): DataFrame =
-    Redaction.redactQuery(s, d)
-
-  /** q50: month × status rollup with subtotals and grand total. */
-  def q50Rollup(s: SparkSession, d: String): DataFrame =
-    OlapOps.rollupQuery(s, d)
-
-  /** q51: event-type pivot — one count column per type. */
-  def q51Pivot(s: SparkSession, d: String): DataFrame =
-    OlapOps.pivotQuery(s, d)
-
-  /** q52: per-user 3-row moving value sum (decimal-exact). */
-  def q52MovingWindow(s: SparkSession, d: String): DataFrame =
-    OlapOps.movingWindowQuery(s, d)
-
-  /** q53: discrete median/p95 of event values per type. */
-  def q53Percentiles(s: SparkSession, d: String): DataFrame =
-    OlapOps.percentileQuery(s, d)
-
-  /** q54: z-order layout statistics — Morton keys over
-    * (user, time-bucket), per-z-range min/max of both dimensions. */
-  def q54ZOrder(s: SparkSession, d: String): DataFrame =
-    ZOrder.zorderQuery(s, d)
-
-  /** q56: hyperplane-LSH top-10 in a genuinely APPROXIMATE
-    * configuration — planes = 6 with 2 multi-probe flips, so the
-    * candidate join scans ~3/64 of the corpus — driver-checked
-    * exactly: the bucket assignment is integer arithmetic on the
-    * portable plane family, recomputed verbatim by the oracle SQL
-    * (closing the round-4 gap where only exact-recovery ANN configs
-    * were driver-measured). */
-  def q56AnnPortable(s: SparkSession, d: String): DataFrame =
-    Similarity.portableLshTopK(Tables.embeddings(s, d), queryId = 0,
-      k = 10, planes = 6, probeFlips = 2)
-
-  /** q57: data-skipping manifest of linear vs z-order layouts — the
-    * maintenance toolkit's pruning claim on the query surface. */
-  def q57LayoutStats(s: SparkSession, d: String): DataFrame =
-    Maintenance.layoutCompareQuery(s, d)
-
-  /** q58: SemDeDup-style semantic dedup — portable LSH buckets, then
-    * within-bucket cosine pairs mark later vectors as duplicates of
-    * their earliest neighbor. */
-  def q58SemanticDedup(s: SparkSession, d: String): DataFrame =
-    Similarity.semanticDedup(Tables.embeddings(s, d))
-
-  /** q59: deterministic stratified downsampling to the smallest
-    * language stratum. */
-  def q59StratifiedSample(s: SparkSession, d: String): DataFrame =
-    Curation.stratifiedSample(Tables.documents(s, d))
-
-  /** q60: per-language data-mixing weights toward a uniform token
-    * mixture. */
-  def q60MixingWeights(s: SparkSession, d: String): DataFrame =
-    Curation.mixingWeights(Tables.documents(s, d))
-
-  /** q61: top-20-per-language quality quota. */
-  def q61QuotaSelect(s: SparkSession, d: String): DataFrame =
-    Curation.quotaSelect(Tables.documents(s, d))
-
-  /** q62: edit-distance near-dups with prefix blocking + hot-block
-    * cap. */
-  def q62EditBlocked(s: SparkSession, d: String): DataFrame =
-    Dedup.editBlockedPairs(Tables.documents(s, d))
-
-  /** q63: sequential signup→view→click→purchase funnel in one
-    * groupBy. */
-  def q63Funnel(s: SparkSession, d: String): DataFrame =
-    Sessionize.funnelQuery(s, d)
-
-  /** q64: priority × status CUBE (all grouping sets, one Expand). */
-  def q64Cube(s: SparkSession, d: String): DataFrame =
-    OlapOps.cubeQuery(s, d)
-
-  /** q66: SCD type-2 validity intervals of each user's event-type
-    * stream (change detection + interval close, one keyed shuffle). */
-  def q66Scd2(s: SparkSession, d: String): DataFrame =
-    OlapOps.scd2Query(s, d)
-
-  /** q67: exactly-100-doc reproducible sample (hash-ordered top-k,
-    * TakeOrderedAndProject — no global sort). */
-  def q67ExactSample(s: SparkSession, d: String): DataFrame =
-    Curation.exactSample(Tables.documents(s, d))
-
   /** q65: incremental dedup — today's batch (20% of docs by id) probes
     * the existing corpus's MinHash band index; portable-hash config so
     * the oracle recomputes every signature. */
@@ -277,347 +78,6 @@ object Extensions {
       n = 3, numHashes = 64, bands = 16, threshold = 0.5, portable = true)
   }
 
-  /** q68: vocabulary build — corpus term frequencies, min-count floor,
-    * contiguous ids by (count DESC, term). */
-  def q68Vocab(s: SparkSession, d: String): DataFrame =
-    TextAnalysis.vocabQuery(s, d)
-
-  /** q69: winnow-fingerprint near-dup pairs (MOSS shape) — the
-    * compressed inverted index, with q23's hot-key cap. */
-  def q69WinnowPairs(s: SparkSession, d: String): DataFrame =
-    Dedup.winnowPairs(Tables.documents(s, d))
-
-  /** q70: robust per-language [p5, p95] token-length trim with exact
-    * rank-selected percentiles. */
-  def q70LengthTrim(s: SparkSession, d: String): DataFrame =
-    Curation.lengthTrim(Tables.documents(s, d))
-
-  /** q71: cross-doc duplicated 8-token-span mass (span-aligned
-    * exact-substring dedup report) — string span keys so the oracle
-    * recomputes them; the xxhash64-keyed at-scale shape is asserted
-    * equal in CorpusStatsSpec. */
-  def q71SpanDup(s: SparkSession, d: String): DataFrame =
-    CorpusStats.spanDupQuery(s, d)
-
-  /** q72: truncated top-12 vocabulary coverage — per-doc OOV mass. */
-  def q72VocabCoverage(s: SparkSession, d: String): DataFrame =
-    CorpusStats.vocabCoverage(s, d)
-
-  /** q73: embedding-space benchmark decontamination — corpus vectors
-    * whose max cosine against the eval subset (vec_id % 10 == 0)
-    * reaches 0.3, with the best-matching eval id. */
-  def q73EmbedDecontam(s: SparkSession, d: String): DataFrame =
-    Similarity.embedDecontaminate(Tables.embeddings(s, d))
-
-  /** q74: zero-filled hourly event counts per type over the global
-    * hour range (calendar gap-fill). */
-  def q74GapFill(s: SparkSession, d: String): DataFrame =
-    OlapOps.gapFillQuery(s, d)
-
-  /** q75: Tukey IQR outlier fences + counts per event type, integer
-    * cents throughout. */
-  def q75OutlierFences(s: SparkSession, d: String): DataFrame =
-    OlapOps.outlierFencesQuery(s, d)
-
-  /** q76: posting lists for mid-df bigram terms (df in [5,50], first
-    * 20 sorted doc ids). */
-  def q76PostingLists(s: SparkSession, d: String): DataFrame =
-    CorpusStats.postingListsQuery(s, d)
-
-  /** q77: first-order event-type transition matrix per user stream. */
-  def q77Transitions(s: SparkSession, d: String): DataFrame =
-    Sessionize.transitionsQuery(s, d)
-
-  /** q78: asymmetric containment pairs (Broder containment >= 0.8,
-    * 3-gram sets, hot-shingle cap) — the quote/excerpt detector. */
-  def q78Containment(s: SparkSession, d: String): DataFrame =
-    Dedup.containmentPairs(Tables.documents(s, d))
-
-  /** q79: hourly max concurrent sessions (sweep-line with a
-    * distributed two-phase prefix sum). */
-  def q79Concurrency(s: SparkSession, d: String): DataFrame =
-    Sessionize.concurrencyQuery(s, d)
-
-  /** q80: retention cohorts — first-active-day × day-offset distinct
-    * user counts. */
-  def q80Retention(s: SparkSession, d: String): DataFrame =
-    Sessionize.retentionQuery(s, d)
-
-  /** q81: approximate IVF top-10 with deterministic anchor centroids
-    * (8 anchors, nprobe = 2 → ~1/4 of the corpus scored) — the IVF
-    * sibling of q56, giving the second ANN family a driver-checked
-    * approximate registration. */
-  def q81IvfAnchors(s: SparkSession, d: String): DataFrame =
-    Similarity.ivfAnchorTopK(Tables.embeddings(s, d), queryId = 0,
-      k = 10, nAnchors = 8, nprobe = 2)
-
-  /** q82: skip-gram co-occurrence pair counts (window 2, top 100) —
-    * word2vec-style (center, context) training-pair extraction. */
-  def q82Skipgram(s: SparkSession, d: String): DataFrame =
-    TextAnalysis.skipgramQuery(s, d)
-
-  /** q83: per-language top-5 heavy-hitter tokens with rank. */
-  def q83HeavyHitters(s: SparkSession, d: String): DataFrame =
-    TextAnalysis.heavyHittersQuery(s, d)
-
-  /** q84: INTERSECT/EXCEPT audience segmentation over order years. */
-  def q84SetOps(s: SparkSession, d: String): DataFrame =
-    OlapOps.setOpsQuery(s, d)
-
-  /** q85: order-total deciles via a distributed two-phase global rank
-    * (no single-partition window). */
-  def q85Deciles(s: SparkSession, d: String): DataFrame =
-    OlapOps.decileQuery(s, d)
-
-  /** q86: co-occurrence lift (integer-rational PMI) for mid-frequency
-    * term pairs. */
-  def q86Pmi(s: SparkSession, d: String): DataFrame =
-    CorpusStats.pmiQuery(s, d)
-
-  /** q87: canonical text normalization with collapse counts. */
-  def q87Normalize(s: SparkSession, d: String): DataFrame =
-    TextAnalysis.normalizeQuery(s, d)
-
-  /** q88: unpivot/melt of the lineitem measures via one Expand. */
-  def q88Unpivot(s: SparkSession, d: String): DataFrame =
-    OlapOps.unpivotQuery(s, d)
-
-  /** q89: capped sorted LISTAGG (bounded collect after a shared-key
-    * window cap). */
-  def q89ListAgg(s: SparkSession, d: String): DataFrame =
-    OlapOps.listAggQuery(s, d)
-
-  /** q90: per-segment modal order priority, deterministic tie-break. */
-  def q90Mode(s: SparkSession, d: String): DataFrame =
-    OlapOps.modeQuery(s, d)
-
-  /** q91: snapshot diff (CDC derive): added/removed/changed between
-    * two deterministic versions of orders. */
-  def q91SnapshotDiff(s: SparkSession, d: String): DataFrame =
-    ChangeCapture.snapshotDiffQuery(s, d)
-
-  /** q92: rolling 7-day distinct active users via the expand shape. */
-  def q92RollingActive(s: SparkSession, d: String): DataFrame =
-    Sessionize.rollingActiveQuery(s, d)
-
-  /** q93: one-pass exact co-moment components per return flag. */
-  def q93Comoments(s: SparkSession, d: String): DataFrame =
-    OlapOps.comomentsQuery(s, d)
-
-  /** q94: equi-width histogram with zero-filled empty bins. */
-  def q94Histogram(s: SparkSession, d: String): DataFrame =
-    OlapOps.histogramQuery(s, d)
-
-  /** q95: BPE seed pair counts over the distinct-word freq table. */
-  def q95BpePairs(s: SparkSession, d: String): DataFrame =
-    TextAnalysis.bpePairsQuery(s, d)
-
-  /** q96: schema-drift unionByName audit (v1/v2 extracts). */
-  def q96DriftUnion(s: SparkSession, d: String): DataFrame =
-    ChangeCapture.driftUnionQuery(s, d)
-
-  /** q97: MAD robust outliers per event type. */
-  def q97MadOutliers(s: SparkSession, d: String): DataFrame =
-    OlapOps.madOutliersQuery(s, d)
-
-  /** q98: deterministic hash-drawn negative samples for the top
-    * skip-gram pairs. */
-  def q98NegativeSamples(s: SparkSession, d: String): DataFrame =
-    TextAnalysis.negativeSamplesQuery(s, d)
-
-  /** q99: materialized training mixture (per-doc epoch rows from the
-    * q60 weights, hash-decided fractional epoch). */
-  def q99MixtureMaterialize(s: SparkSession, d: String): DataFrame =
-    Curation.mixtureMaterialize(Tables.documents(s, d))
-
-  /** q100: integer fixed-point PageRank over the co-activity graph. */
-  def q100PageRank(s: SparkSession, d: String): DataFrame =
-    GraphRank.pageRankQuery(s, d)
-
-  /** q101: oracle-checked count-min sketch vs exact heavy hitters. */
-  def q101Cms(s: SparkSession, d: String): DataFrame =
-    CorpusStats.cmsQuery(s, d)
-
-  /** q102: quantile calibration of customer balances onto the
-    * supplier distribution (two distributed ranks + integer rank
-    * mapping). */
-  def q102QuantileMap(s: SparkSession, d: String): DataFrame =
-    OlapOps.quantileMapQuery(s, d)
-
-  /** q103: deterministic weighted (length-proportional) sample. */
-  def q103WeightedSample(s: SparkSession, d: String): DataFrame =
-    Curation.weightedSample(Tables.documents(s, d))
-
-  /** q104: largest-remainder token-budget apportionment. */
-  def q104BudgetAlloc(s: SparkSession, d: String): DataFrame =
-    OlapOps.budgetAllocQuery(s, d)
-
-  /** q105: chi-square independence components (segment × priority). */
-  def q105ChiSquare(s: SparkSession, d: String): DataFrame =
-    OlapOps.chiSquareQuery(s, d)
-
-  /** q106: top session paths (ordered event-type journeys). */
-  def q106SessionPaths(s: SparkSession, d: String): DataFrame =
-    Sessionize.sessionPathsQuery(s, d)
-
-  /** q107: join-key skew diagnosis report. */
-  def q107SkewReport(s: SparkSession, d: String): DataFrame =
-    JoinStrategies.skewReportQuery(s, d)
-
-  /** q108: SCD2 point-in-time (time travel) lookup. */
-  def q108Scd2AsOf(s: SparkSession, d: String): DataFrame =
-    OlapOps.scd2AsOfQuery(s, d)
-
-  /** q109: temporal interval join of events to their SCD2 version. */
-  def q109TemporalJoin(s: SparkSession, d: String): DataFrame =
-    OlapOps.temporalJoinQuery(s, d)
-
-  /** q110: per-type activity trend (exact OLS slope components). */
-  def q110Trend(s: SparkSession, d: String): DataFrame =
-    OlapOps.trendQuery(s, d)
-
-  /** q111: Good-Turing frequency-of-frequencies table. */
-  def q111FreqSpectrum(s: SparkSession, d: String): DataFrame =
-    OlapOps.freqSpectrumQuery(s, d)
-
-  /** q112: k-anonymity audit over (segment, nation) classes. */
-  def q112KAnonymity(s: SparkSession, d: String): DataFrame =
-    OlapOps.kAnonymityQuery(s, d)
-
-  /** q113: incremental view maintenance — partial-merge equals the
-    * oracle's full recompute. */
-  def q113Ivm(s: SparkSession, d: String): DataFrame =
-    OlapOps.ivmQuery(s, d)
-
-  /** q114: per-stratum min-max feature scaling (exact rationals). */
-  def q114MinMaxScale(s: SparkSession, d: String): DataFrame =
-    OlapOps.minMaxScaleQuery(s, d)
-
-  /** q115: funnel time-to-convert latency percentiles. */
-  def q115FunnelLatency(s: SparkSession, d: String): DataFrame =
-    Sessionize.funnelLatencyQuery(s, d)
-
-  /** q116: referential-integrity summary over every FK edge. */
-  def q116RiSummary(s: SparkSession, d: String): DataFrame =
-    graft.quality.DataQuality.riSummaryQuery(s, d)
-
-  /** q117: hierarchical percent-of-parent revenue shares. */
-  def q117ParentShare(s: SparkSession, d: String): DataFrame =
-    OlapOps.parentShareQuery(s, d)
-
-  /** q118: cumulative distribution over the q94 histogram bins. */
-  def q118HistogramCdf(s: SparkSession, d: String): DataFrame =
-    OlapOps.histogramCdfQuery(s, d)
-
-  /** q119: per-language token-mass weighted median length. */
-  def q119WeightedMedian(s: SparkSession, d: String): DataFrame =
-    OlapOps.weightedMedianQuery(s, d)
-
-  /** q120: market-basket co-ordered part pairs (capped baskets). */
-  def q120BasketPairs(s: SparkSession, d: String): DataFrame =
-    OlapOps.basketPairsQuery(s, d)
-
-  /** q121: line-number contiguity audit (1..n, no gaps/dups). */
-  def q121Contiguity(s: SparkSession, d: String): DataFrame =
-    OlapOps.contiguityQuery(s, d)
-
-  /** q122: per-stratum exact-K hash sample. */
-  def q122StratifiedExactK(s: SparkSession, d: String): DataFrame =
-    Curation.stratifiedExactK(Tables.documents(s, d))
-
-  /** q123: total-variation drift components between corpus halves. */
-  def q123DriftTvd(s: SparkSession, d: String): DataFrame =
-    Curation.driftTvdQuery(Tables.documents(s, d))
-
-  /** q124: funnel conversion rate per activity decile. */
-  def q124ConversionDecile(s: SparkSession, d: String): DataFrame =
-    Sessionize.conversionByDecileQuery(s, d)
-
-  /** q125: per-stream data-freshness/staleness audit. */
-  def q125Freshness(s: SparkSession, d: String): DataFrame =
-    graft.quality.DataQuality.freshnessQuery(s, d)
-
-  /** q126: first-order Markov conditional probabilities. */
-  def q126Markov(s: SparkSession, d: String): DataFrame =
-    Sessionize.markovQuery(s, d)
-
-  /** q127: pairwise audience-overlap Jaccard between event types. */
-  def q127AudienceOverlap(s: SparkSession, d: String): DataFrame =
-    Sessionize.audienceOverlapQuery(s, d)
-
-  /** q128: relative price-dispersion top-k per part. */
-  def q128PriceDispersion(s: SparkSession, d: String): DataFrame =
-    OlapOps.priceDispersionQuery(s, d)
-
-  /** q129: integer half-life recency-decayed activity scores. */
-  def q129DecayScore(s: SparkSession, d: String): DataFrame =
-    Sessionize.decayScoreQuery(s, d)
-
-  /** q130: pairwise source similarity by capped vocabulary Jaccard. */
-  def q130SourceVocab(s: SparkSession, d: String): DataFrame =
-    CorpusStats.sourceVocabOverlapQuery(s, d)
-
-  /** q131: Pareto/ABC revenue classification (blocked running sum). */
-  def q131Pareto(s: SparkSession, d: String): DataFrame =
-    OlapOps.paretoQuery(s, d)
-
-  /** q132: daily session bounce rate. */
-  def q132BounceRate(s: SparkSession, d: String): DataFrame =
-    Sessionize.bounceRateQuery(s, d)
-
-  /** q133: weekday × hour heatmap over the complete zero-filled grid. */
-  def q133Heatmap(s: SparkSession, d: String): DataFrame =
-    OlapOps.heatmapQuery(s, d)
-
-  /** q134: single-pass column-profile report (null/distinct per col). */
-  def q134ColumnProfile(s: SparkSession, d: String): DataFrame =
-    graft.quality.DataQuality.columnProfileQuery(s, d)
-
-  /** q135: lexical type-token ratio per source. */
-  def q135Ttr(s: SparkSession, d: String): DataFrame =
-    CorpusStats.typeTokenRatioQuery(s, d)
-
-  /** q136: basket association lift (independence-normalized q120). */
-  def q136BasketLift(s: SparkSession, d: String): DataFrame =
-    OlapOps.basketLiftQuery(s, d)
-
-  /** q137: lag-1 autocorrelation components of daily counts. */
-  def q137Autocorr(s: SparkSession, d: String): DataFrame =
-    OlapOps.autocorrQuery(s, d)
-
-  /** q138: cross-field rule-assertion suite in one scan. */
-  def q138Assertions(s: SparkSession, d: String): DataFrame =
-    graft.quality.DataQuality.assertionSuiteQuery(s, d)
-
-  /** q139: RFM segmentation via three distributed tercile ranks. */
-  def q139Rfm(s: SparkSession, d: String): DataFrame =
-    OlapOps.rfmQuery(s, d)
-
-  /** q140: supplier-concentration HHI per part. */
-  def q140Hhi(s: SparkSession, d: String): DataFrame =
-    OlapOps.hhiQuery(s, d)
-
-  /** q141: weekday-baseline seasonal residuals (top absolute). */
-  def q141Seasonal(s: SparkSession, d: String): DataFrame =
-    OlapOps.seasonalResidualQuery(s, d)
-
-  /** q142: daily new-vs-returning user split. */
-  def q142NewReturning(s: SparkSession, d: String): DataFrame =
-    OlapOps.newVsReturningQuery(s, d)
-
-  /** q143: chunking padding-waste audit (closed-form fill). */
-  def q143PackingWaste(s: SparkSession, d: String): DataFrame =
-    TextAnalysis.packingWasteQuery(s, d)
-
-  /** q144: within-source exact-dedup savings projection. */
-  def q144DedupSavings(s: SparkSession, d: String): DataFrame =
-    Dedup.dedupSavingsQuery(s, d)
-
-  /** q45: dup-cluster connected components — q23's near-dup pairs
-    * collapsed into transitive-closure clusters (alternating large-star/
-    * small-star edge rewriting), every doc labeled with cluster id, size, and
-    * the canonical-survivor flag. The oracle recomputes the closure
-    * with a recursive CTE. */
   /** The q45/q161 clustering input — ONE definition of the pair
     * generation parameters, mirroring the shared oracle CTE prefix,
     * so the two cluster reports cannot drift on the clustering. */
@@ -625,6 +85,11 @@ object Extensions {
     Dedup.ngramJaccardPairs(docs, n = 3, threshold = 0.6,
       maxDocFreq = 50).select("d1", "d2")
 
+  /** q45: dup-cluster connected components — q23's near-dup pairs
+    * collapsed into transitive-closure clusters (alternating large-star/
+    * small-star edge rewriting), every doc labeled with cluster id, size, and
+    * the canonical-survivor flag. The oracle recomputes the closure
+    * with a recursive CTE. */
   def q45DupClusters(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     DupClusters.clusterReport(docs, dupPairs(docs))
@@ -898,26 +363,6 @@ object Extensions {
       .orderBy("method")
   }
 
-  /** q224: blocking-family AGREEMENT MATRIX — q209 counts each pair
-    * set; this measures how much they overlap: for every unordered
-    * pair of the three near-dup methods (the capped shingle inverted
-    * index of q23, the portable MinHash+LSH of q24, the
-    * sorted-neighborhood window of q202), the two set sizes, the
-    * intersection, and the Jaccard of the PAIR SETS themselves as an
-    * e6 integer. The decision evidence behind "are these methods
-    * finding the same duplicates or different ones": high agreement
-    * means the cheap method substitutes for the expensive one; low
-    * agreement means they block on genuinely different signals and a
-    * pipeline should union them. Each chain is individually
-    * oracle-proven; this certifies their set algebra.
-    *
-    * Scale shape: each pair set is materialized once (the q209
-    * pattern), intersections are (d1, d2)-keyed left-semi joins —
-    * pair-set-sized, never corpus-sized; the six summary counts are
-    * single-row frames crossed by broadcast. */
-  def q224DedupAgreement(s: SparkSession, d: String): DataFrame =
-    dedupAgreement(Tables.documents(s, d))
-
   /** Build + materialize several INDEPENDENT frames concurrently
     * (guide §2.6 "overlap independent jobs"): the comparison/union
     * queries compose 2–4 pair-generation chains that share no state,
@@ -940,8 +385,9 @@ object Extensions {
     finally pool.shutdown()
   }
 
-  /** [[q224DedupAgreement]]'s core over any (doc_id, lang, text)
-    * frame. */
+  /** q224's blocking-family agreement matrix over any
+    * (doc_id, lang, text) frame: pair-set sizes, intersection and
+    * pair-set Jaccard for each pair of the three near-dup methods. */
   def dedupAgreement(docs: DataFrame): DataFrame = {
     // the three chains are independent — built and checkpointed
     // concurrently ([[overlapped]]); round 18 ran them serially

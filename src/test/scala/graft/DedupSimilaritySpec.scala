@@ -719,8 +719,7 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("dedup agreement: intersection bounded by both sets, " +
     "agreement within [0, 1e6] on the real corpus") {
-    val out = graft.operators.Extensions
-      .q224DedupAgreement(spark, sf0001)
+    val out = SparkEntry.queries("q224_dedup_agreement")(spark, sf0001)
       .as[(String, String, Long, Long, Long, Long)].collect()
     assert(out.length == 3)
     out.foreach { r =>

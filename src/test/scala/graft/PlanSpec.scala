@@ -82,7 +82,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q46 sessionization shares one user_id exchange across windows and agg") {
-    val p = planString(graft.operators.Extensions.q46Sessionize(spark, sf0001))
+    val p = planString(SparkEntry.queries("q46_sessionize")(spark, sf0001))
     // the gap window, the running-sum window, and the session
     // aggregation all cluster by user_id: exactly one hash exchange
     // plus the output sort's range exchange
@@ -91,14 +91,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q50 rollup plans one Expand + one aggregation pass") {
-    val p = planString(graft.operators.Extensions.q50Rollup(spark, sf0001))
+    val p = planString(SparkEntry.queries("q50_rollup")(spark, sf0001))
     assert(p.contains("Expand"), "rollup must plan via Expand:\n" + p.take(800))
     val scans = "Scan parquet".r.findAllIn(p).toSeq
     assert(scans.length == 1, "subtotals must not re-scan the input")
   }
 
   test("q47 tf-idf broadcasts the corpus-size scalar (no cartesian)") {
-    val p = planString(graft.operators.Extensions.q47Tfidf(spark, sf0001))
+    val p = planString(SparkEntry.queries("q47_tfidf")(spark, sf0001))
     assert(!p.contains("CartesianProduct"),
       "1-row corpus-size join must broadcast:\n" + p.take(800))
   }
@@ -141,8 +141,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q59 stratified sample: rate table broadcasts, filter is scan-side") {
-    val p = planString(graft.operators.Extensions
-      .q59StratifiedSample(spark, sf0001))
+    val p = planString(
+      SparkEntry.queries("q59_stratified_sample")(spark, sf0001))
     // both small sides (min-count scalar and the per-lang rate table)
     // must broadcast — a sort-merge join would shuffle the corpus to
     // apply a 5-row rate table
@@ -153,14 +153,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q60 mixing weights: totals broadcast, no cartesian blowup") {
-    val p = planString(graft.operators.Extensions
-      .q60MixingWeights(spark, sf0001))
+    val p = planString(
+      SparkEntry.queries("q60_mixing_weights")(spark, sf0001))
     assert(!p.contains("CartesianProduct"),
       "1-row totals join must broadcast:\n" + p.take(1200))
   }
 
   test("q63 funnel plans one corpus shuffle (single groupBy, no join cascade)") {
-    val p = planString(graft.operators.Extensions.q63Funnel(spark, sf0001))
+    val p = planString(SparkEntry.queries("q63_funnel")(spark, sf0001))
     assert(!p.contains("Join"),
       "funnel recurrence must be array arithmetic, not per-stage joins")
     // the user_id aggregation's exchange + the trivial final-agg /
@@ -171,14 +171,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q64 cube plans one Expand + a single scan") {
-    val p = planString(graft.operators.Extensions.q64Cube(spark, sf0001))
+    val p = planString(SparkEntry.queries("q64_cube")(spark, sf0001))
     assert(p.contains("Expand"), "cube must plan via Expand:\n" + p.take(800))
     val scans = "Scan parquet".r.findAllIn(p).toSeq
     assert(scans.length == 1, "grouping sets must not re-scan the input")
   }
 
   test("q62 edit blocking: hot-block cap is an anti-join, pairs an equi-join") {
-    val p = planString(graft.operators.Extensions.q62EditBlocked(spark, sf0001))
+    val p = planString(SparkEntry.queries("q62_edit_blocked")(spark, sf0001))
     assert(p.contains("LeftAnti"),
       "hot-block cap must plan as an anti-join:\n" + p.take(1500))
     assert(!p.contains("NestedLoopJoin") && !p.contains("CartesianProduct"),
@@ -186,7 +186,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q67 exact sample compiles to TakeOrderedAndProject (no global sort)") {
-    val p = planString(graft.operators.Extensions.q67ExactSample(spark, sf0001))
+    val p = planString(SparkEntry.queries("q67_exact_sample")(spark, sf0001))
     assert(p.contains("TakeOrderedAndProject"),
       "hash-ordered top-k must not plan a global sort:\n" + p.take(1200))
   }
@@ -200,7 +200,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q69 winnow pairs: hot-fp cap is an anti-join, pairs an equi-join") {
-    val p = planString(graft.operators.Extensions.q69WinnowPairs(spark, sf0001))
+    val p = planString(SparkEntry.queries("q69_winnow_pairs")(spark, sf0001))
     assert(p.contains("LeftAnti"),
       "hot-fingerprint cap must plan as an anti-join:\n" + p.take(1500))
     assert(!p.contains("NestedLoopJoin") && !p.contains("CartesianProduct"),
@@ -208,13 +208,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q70 length trim: cutoff table broadcasts back to the corpus") {
-    val p = planString(graft.operators.Extensions.q70LengthTrim(spark, sf0001))
+    val p = planString(SparkEntry.queries("q70_length_trim")(spark, sf0001))
     assert(p.contains("BroadcastHashJoin"),
       "per-lang cutoffs must broadcast, not shuffle the corpus:\n" + p.take(1500))
   }
 
   test("q71 span dedup: no pair join, dup filter precedes the re-join") {
-    val p = planString(graft.operators.Extensions.q71SpanDup(spark, sf0001))
+    val p = planString(SparkEntry.queries("q71_span_dedup")(spark, sf0001))
     assert(!p.contains("NestedLoopJoin") && !p.contains("CartesianProduct"),
       "span dedup must never plan a pair join:\n" + p.take(1500))
     // the span_df >= 2 prune must sit on the aggregate, before the join
@@ -223,13 +223,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q72 vocab coverage: vocab joins back by broadcast") {
-    val p = planString(graft.operators.Extensions.q72VocabCoverage(spark, sf0001))
+    val p = planString(SparkEntry.queries("q72_vocab_coverage")(spark, sf0001))
     assert(p.contains("BroadcastHashJoin"),
       "bounded vocab must broadcast to the token stream:\n" + p.take(1500))
   }
 
   test("q73 embed decontam: eval side broadcasts, corpus scanned once") {
-    val p = planString(graft.operators.Extensions.q73EmbedDecontam(spark, sf0001))
+    val p = planString(SparkEntry.queries("q73_embed_decontam")(spark, sf0001))
     assert(p.contains("BroadcastNestedLoopJoin") ||
       p.contains("BroadcastHashJoin"),
       "eval set must broadcast:\n" + p.take(1500))
@@ -238,13 +238,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q75 outlier fences: fence table broadcasts back to events") {
-    val p = planString(graft.operators.Extensions.q75OutlierFences(spark, sf0001))
+    val p = planString(SparkEntry.queries("q75_outlier_fences")(spark, sf0001))
     assert(p.contains("BroadcastHashJoin"),
       "per-type fences must broadcast, not shuffle events:\n" + p.take(1500))
   }
 
   test("q76 posting lists: df band filters before the collect join") {
-    val p = planString(graft.operators.Extensions.q76PostingLists(spark, sf0001))
+    val p = planString(SparkEntry.queries("q76_posting_lists")(spark, sf0001))
     assert(!p.contains("CartesianProduct"), p.take(1200))
     // band predicate pushed onto the df aggregate's output
     assert(p.contains("(df#") || p.contains("df#"),
@@ -254,7 +254,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q78 containment: hot cap is an anti-join, pairs an equi-join") {
-    val p = planString(graft.operators.Extensions.q78Containment(spark, sf0001))
+    val p = planString(SparkEntry.queries("q78_containment")(spark, sf0001))
     assert(p.contains("LeftAnti"),
       "hot-shingle cap must plan as an anti-join:\n" + p.take(1500))
     assert(!p.contains("NestedLoopJoin") && !p.contains("CartesianProduct"),
@@ -262,14 +262,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q79 concurrency: block offsets broadcast, corpus never globally sorted") {
-    val p = planString(graft.operators.Extensions.q79Concurrency(spark, sf0001))
+    val p = planString(SparkEntry.queries("q79_concurrency")(spark, sf0001))
     assert(p.contains("BroadcastHashJoin"),
       "hour-block offsets must broadcast back:\n" + p.take(1500))
     assert(!p.contains("CartesianProduct"), p.take(1200))
   }
 
   test("q80 retention: both aggregations keyed on user_id, partial combine") {
-    val p = planString(graft.operators.Extensions.q80Retention(spark, sf0001))
+    val p = planString(SparkEntry.queries("q80_retention")(spark, sf0001))
     assert(p.contains("partial_"),
       "cohort build must map-side combine:\n" + p.take(1500))
     assert(!p.contains("CartesianProduct"), p.take(1200))
@@ -638,7 +638,7 @@ class PlanSpec extends SparkSpec {
     "data joins keyed; only tiny summary/query frames attach by " +
     "broadcast") {
     val p224 = planString(
-      graft.operators.Extensions.q224DedupAgreement(spark, sf0001))
+      SparkEntry.queries("q224_dedup_agreement")(spark, sf0001))
     assert(!p224.contains("CartesianProduct"), p224.take(1500))
     val p228 = planString(
       graft.operators.Similarity.truncationRecallQuery(spark, sf0001))

@@ -17,6 +17,15 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("registered query names are distinct") {
+    // queries/oracleSql are built with toMap, which would silently keep
+    // only the last of two specs sharing a name
+    val dups = SparkEntry.specs.groupBy(_.name).collect {
+      case (n, ss) if ss.size > 1 => n
+    }
+    assert(dups.isEmpty, s"duplicate query names: $dups")
+  }
+
   test("queries and oracleSql are consistent") {
     val missing = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)
     assert(missing.isEmpty, s"oracle without query: $missing")

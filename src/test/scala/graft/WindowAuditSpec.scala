@@ -16,7 +16,7 @@ import org.apache.spark.sql.execution.window.WindowExec
   * Queries whose registered function runs a streaming drain (or a
   * batch sink write) are NOT invoked — that would re-run multi-batch
   * drains per audit — but they are NOT skipped either: their
-  * post-drain read-backs ([[SparkEntry.streamReadBacks]]) are planned
+  * post-drain read-backs (`QuerySpec.readBack`) are planned
   * against a footer-only stub parquet of the registered sink schema,
   * so the audit covers ALL registered queries' batch plans. The key-set
   * equality assertion below means a new drain can neither dodge the
@@ -98,6 +98,9 @@ class WindowAuditSpec extends SparkSpec {
     // vocab rank applies AFTER limit(vocabSize) — a config constant
     "q68_vocab" -> Seq(("cnt DESC", "limit(vocabSize)-bounded term table")))
 
+  private val readBacks = SparkEntry.specs
+    .flatMap(q => q.readBack.map(q.name -> _)).toMap
+
   private def windows(plan: SparkPlan): Seq[WindowExec] = plan.collect {
     case w: WindowExec if w.partitionSpec.isEmpty => Seq(w)
     case a: AdaptiveSparkPlanExec => windows(a.executedPlan)
@@ -108,7 +111,7 @@ class WindowAuditSpec extends SparkSpec {
     * parquet of the sink schema for drains (planning only — the stub
     * scan has the real sink's schema and operators, no drain runs). */
   private def auditFrame(name: String): DataFrame =
-    SparkEntry.streamReadBacks.get(name) match {
+    readBacks.get(name) match {
       case Some((schema, readBack)) =>
         val stub = tmpDir(s"audit_$name")
         spark.createDataFrame(
@@ -119,10 +122,10 @@ class WindowAuditSpec extends SparkSpec {
     }
 
   test("drain read-back registry exactly covers the non-invoked set") {
-    assert(SparkEntry.streamReadBacks.keySet == streamingDrains,
-      "streamReadBacks and the drain set must stay in lockstep — " +
-        s"missing read-backs: ${streamingDrains -- SparkEntry.streamReadBacks.keySet}, " +
-        s"unexpected read-backs: ${SparkEntry.streamReadBacks.keySet -- streamingDrains}")
+    assert(readBacks.keySet == streamingDrains,
+      "registered read-backs and the drain set must stay in lockstep — " +
+        s"missing read-backs: ${streamingDrains -- readBacks.keySet}, " +
+        s"unexpected read-backs: ${readBacks.keySet -- streamingDrains}")
     assert(streamingDrains.subsetOf(SparkEntry.queries.keySet),
       "every drain name must be a registered query")
   }
