@@ -2,9 +2,12 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
@@ -278,10 +281,37 @@ object Maintenance {
     * min/max for directly. */
   def fileStatsFromFooters(spark: SparkSession, dir: String,
                            cols: Seq[String]): DataFrame = {
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val dataSchema = spark.read.parquet(dir).schema
-    footerStatsOf(spark, listDataFiles(spark, dir), dataSchema, cols)
+    val files = listDataFiles(spark, dir)
+    footerStatsOf(spark, files, dataSchema(spark, dir, files), cols)
   }
+
+  /** The Spark schema of one parquet data file, read from its footer
+    * on the driver: the `org.apache.spark.sql.parquet.row.metadata`
+    * schema Spark's writer stamps, else the converted parquet schema
+    * — Spark's own footer rule (`ParquetFileFormat.readSchemaFromFooter`),
+    * minus the inference job a schema-less `spark.read.parquet` runs
+    * to read that same footer in a task. */
+  def footerSchema(spark: SparkSession, file: String): StructType = {
+    val path = new Path(file)
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path,
+      spark.sparkContext.hadoopConfiguration))
+    try ParquetFileFormat.readSchemaFromFooter(
+      new Footer(path, reader.getFooter),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    finally reader.close()
+  }
+
+  /** The schema of a single-schema parquet directory (every layout
+    * this engine writes): [[footerSchema]] of its first data file in
+    * `files`. With no data file it is Spark's own inference, so an
+    * empty directory fails exactly as a schema-less read of it does. */
+  private[graft] def dataSchema(spark: SparkSession, dir: String,
+      files: Seq[String]): StructType =
+    files.headOption.fold(spark.read.parquet(dir).schema)(
+      footerSchema(spark, _))
+
+  private[graft] def dataSchema(spark: SparkSession, dir: String): StructType =
+    dataSchema(spark, dir, listDataFiles(spark, dir))
 
   /** The parquet DATA files under `dir` — recursive (a
     * partition-directory `k=v` layout must yield the same file set
@@ -293,7 +323,7 @@ object Maintenance {
     * own parquet in the file list, then race the overwrite that
     * deletes it (self-indexing, writeSkipIndex's round-17 re-run
     * bug). */
-  private def listDataFiles(spark: SparkSession, dir: String): Seq[String] = {
+  private[graft] def listDataFiles(spark: SparkSession, dir: String): Seq[String] = {
     val dirPath = new Path(dir)
     val fsDir = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // qualified base so the prefix strip matches FileStatus paths
@@ -983,27 +1013,64 @@ object Maintenance {
     idx.count()
   }
 
-  /** Keyed POINT LOOKUP through the skipping index: one tiny scan of
-    * `_skipindex` (file-count rows — the candidate file list is
-    * bounded driver metadata, the house collect() discipline) selects
-    * the files whose [min, max] admits the probe, and ONLY those
-    * files are opened. Files with missing stats cannot be pruned and
-    * stay candidates — absence of evidence never drops data. Returns
-    * (matching rows, files opened, files total): on a key-clustered
-    * layout the open count is ~1 regardless of table size, which is
-    * the difference between a serving-edge keyed read and a table
-    * scan at 100 TB. */
+  /** Keyed POINT LOOKUP through the skipping index: the `_skipindex`
+    * rows ([[skipIndexRows]] — file-count rows read on the driver, no
+    * Spark job) select the files whose [min, max] admits the probe,
+    * and ONLY those files are opened, under the footer-read
+    * [[dataSchema]] so the scan infers nothing. Cost: footer reads
+    * on the driver; the only Spark job is the caller's collect of the
+    * returned rows (one job when the candidates fit one scan
+    * partition). Files
+    * with missing stats cannot be pruned and stay candidates —
+    * absence of evidence never drops data. Returns (matching rows,
+    * files opened, files total): on a key-clustered layout the open
+    * count is ~1 regardless of table size, which is the difference
+    * between a serving-edge keyed read and a table scan at 100 TB.
+    * Throws IllegalArgumentException when no index covers `key` as a
+    * bigint column. */
   def indexedLookup(spark: SparkSession, dir: String, key: String,
                     value: Long): (DataFrame, Long, Long) = {
-    val idx = spark.read.parquet(s"$dir/_skipindex")
-      .select(col("file"), col(s"min_$key"), col(s"max_$key"))
-      .collect().toIndexedSeq
+    val idx = skipIndexRows(spark, dir, key).getOrElse(
+      throw new IllegalArgumentException(
+        s"no skip index over bigint column $key under $dir"))
     val cand = candidateFiles(idx, value)
+    val reader = spark.read.schema(dataSchema(spark, dir))
     val rows =
-      if (cand.isEmpty) spark.read.parquet(dir).limit(0)
-      else spark.read.parquet(cand: _*)
-        .filter(col(key) === value)
+      if (cand.isEmpty) reader.parquet(dir).limit(0)
+      else reader.parquet(cand: _*).filter(col(key) === value)
     (rows, cand.length.toLong, idx.length.toLong)
+  }
+
+  /** The `_skipindex` rows of `dir` for `key`, shaped (file, min_key,
+    * max_key) for [[candidateFiles]], read on the driver through
+    * parquet-mr — no Spark job. None when the sidecar has no part
+    * file (absent, or a torn write) or its footer does not carry
+    * `min_key`/`max_key` as bigint columns: the index does not cover
+    * the key and the caller scans. */
+  private[graft] def skipIndexRows(spark: SparkSession, dir: String,
+      key: String): Option[IndexedSeq[Row]] = {
+    val idxDir = new Path(s"$dir/_skipindex")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = idxDir.getFileSystem(conf)
+    val parts =
+      if (!fs.exists(idxDir)) Seq.empty
+      else fs.listStatus(idxDir).map(_.getPath)
+        .filter(_.getName.endsWith(".parquet")).toSeq
+    val (lo, hi) = (s"min_$key", s"max_$key")
+    val covers = parts.nonEmpty && {
+      val s = footerSchema(spark, parts.head.toString)
+      Seq(lo, hi).forall(c => s.find(_.name == c).exists(_.dataType == LongType))
+    }
+    Option.when(covers)(parts.flatMap { p =>
+      val reader = ParquetReader.builder(new GroupReadSupport(), p)
+        .withConf(conf).build()
+      def bound(g: Group, c: String): Any =
+        if (g.getFieldRepetitionCount(c) == 0) null else g.getLong(c, 0)
+      try Iterator.continually(reader.read()).takeWhile(_ != null)
+        .map(g => Row(g.getString("file", 0), bound(g, lo), bound(g, hi)))
+        .toIndexedSeq
+      finally reader.close()
+    }.toIndexedSeq)
   }
 
   /** THE candidate-selection rule of the skipping index, defined once
@@ -1067,7 +1134,7 @@ object Maintenance {
     // excludes them (refresh ≡ rebuild must hold row-for-row); the
     // inherited side can't carry any — the old index never indexed one
     val fresh = footerStatsOf(spark, toRead.map(_.toString),
-      spark.read.parquet(newDir).schema, cols)
+      dataSchema(spark, newDir, newFiles.map(_.toString)), cols)
       .filter(col("n_rows") > 0)
     val idx = fresh.unionByName(
       spark.createDataFrame(
@@ -1087,22 +1154,18 @@ object Maintenance {
     * the caller knows it. */
   private def probeThroughIndex(spark: SparkSession, table: String,
       tag: String, expectTotal: Option[Long] = None): Seq[Row] = {
-    val schema = spark.read.parquet(table).schema
+    val schema = dataSchema(spark, table)
     val probes = spark.read.schema(schema).parquet(table)
       .filter(pmod(col("doc_id"), lit(7L)) === 0)
       .select("doc_id").orderBy("doc_id").limit(12)
       .collect().map(_.getLong(0))
     require(probes.nonEmpty, s"$tag found no probe keys (doc_id % 7 == 0)")
-    // The sidecar is read ONCE for the whole probe set (file-count
-    // rows of driver metadata — the same rows indexedLookup loads per
-    // call); candidate selection and the pruning bound stay PER
-    // PROBE. The per-probe serving primitive (indexedLookup) is
-    // unchanged for the /table-lookup route; this batches only the
-    // proof loop, which was paying 2 jobs + a sidecar read + a footer
-    // schema inference per probe — 12x over (guide §5: driver loops).
-    val idx = spark.read.parquet(s"$table/_skipindex")
-      .select(col("file"), col("min_doc_id"), col("max_doc_id"))
-      .collect()
+    // The sidecar is read ONCE for the whole probe set, on the driver
+    // by the same reader indexedLookup uses ([[skipIndexRows]]);
+    // candidate selection and the pruning bound stay PER PROBE.
+    val idx = skipIndexRows(spark, table, "doc_id").getOrElse(
+      throw new IllegalArgumentException(
+        s"$tag has no skip index over doc_id"))
     val total = idx.length.toLong
     expectTotal.foreach(n => require(total == n,
       s"$tag index covers $total of $n files"))
@@ -1110,7 +1173,7 @@ object Maintenance {
       // THE SAME candidate rule as the serving primitive — shared code
       // ([[candidateFiles]]), not a re-implementation, so the proof
       // and indexedLookup cannot drift
-      val cand = candidateFiles(idx.toIndexedSeq, k)
+      val cand = candidateFiles(idx, k)
       require(cand.length <= 2,
         s"$tag probe $k opened ${cand.length} of $total files — the " +
           "clustered layout must keep a point read to ~1 file")
@@ -1162,7 +1225,7 @@ object Maintenance {
     // the pruned reads must agree with the plain scan, row-for-row
     val viaIndex = spark.createDataFrame(
       spark.sparkContext.parallelize(looked.toIndexedSeq),
-      spark.read.parquet(table).schema)
+      dataSchema(spark, table))
     val disagree = graft.FrameCheck.disagreements(
       viaIndex,
       pointLookupReadBack(spark, table)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, FloatType}
 
-import graft.operators.{SecJsonDocs, SecServing}
+import graft.operators.{Maintenance, SecJsonDocs, SecServing}
 
 /** The reference's serving shell (FastAPI endpoints,
   * backend/main.py:43-252) rebuilt on the JDK's built-in HTTP server —
@@ -50,8 +50,8 @@ import graft.operators.{SecJsonDocs, SecServing}
   * it — how ApiSpec drives a live round-trip.
   *
   * Serving-edge guardrails on the verbatim-SQL surface (the reference
-  * runs user SQL with none, backend/main.py:120): every data route's
-  * collect runs under a per-request JOB-GROUP DEADLINE (`sqlTimeoutMs`
+  * runs user SQL with none, backend/main.py:120): every request's
+  * Spark jobs run under a per-request JOB-GROUP DEADLINE (`sqlTimeoutMs`
   * — overrun cancels the group's jobs with task interruption and maps
   * to 504), and the two free-form SQL routes EXPLAIN-check the plan
   * first, rejecting cartesian products with a 400 before any task
@@ -346,32 +346,42 @@ class Api(spark: SparkSession, maxRows: Int = 10000,
           case Some(d) =>
             readCommitted(root, n) {
               (200, s"""{"version":$n,"current":$curId,"data":${
-                rows(spark.read.parquet(d))}}""")
+                rows(readSnapshot(d))}}""")
             }.getOrElse((404, detail(
               s"version $n left the retention window during the read")))
         }
       case None =>
         serveCurrentRead(root) { (curId, snap) =>
           (200, s"""{"version":$curId,"current":$curId,"data":${
-            rows(spark.read.parquet(snap))}}""")
+            rows(readSnapshot(snap))}}""")
         }
     }
   }
 
+  /** A committed snapshot directory, read under its footer-read
+    * schema ([[Maintenance.dataSchema]]) instead of an inference job. */
+  private def readSnapshot(dir: String): DataFrame =
+    spark.read.schema(Maintenance.dataSchema(spark, dir)).parquet(dir)
+
   /** Seventh route: KEYED POINT LOOKUP on the upsert table — the
-    * serving primitive the [[graft.operators.Maintenance.writeSkipIndex]]
-    * sidecar exists for. `GET /table-lookup?root=<table root>&key=
+    * serving primitive the [[Maintenance.writeSkipIndex]] sidecar
+    * exists for. `GET /table-lookup?root=<table root>&key=
     * <column>&value=<long>` answers from the current committed
     * snapshot; when the snapshot carries a `_skipindex` covering the
     * key, the read opens ONLY the files whose [min, max] admits the
-    * probe ([[graft.operators.Maintenance.indexedLookup]]) — a keyed
-    * read at 100 TB is O(matching files), never a table scan — and
-    * falls back to the plain filtered scan otherwise (the index is an
-    * accelerator, not a correctness dependency). The response reports
-    * `files_opened`/`files_total` so a client can see which path
-    * served it. Vacuum races resolve exactly like the current-read
-    * path of [[tableSnapshot]]: post-read marker recheck, bounded
-    * re-resolve retries, 503 if a writer outruns them. */
+    * probe ([[Maintenance.indexedLookup]]) — a keyed read at 100 TB is
+    * O(matching files), never a table scan — and falls back to the
+    * plain filtered scan otherwise (the index is an accelerator, not a
+    * correctness dependency). Cost: one directory listing and a few
+    * parquet footer reads on the driver (snapshot schema, sidecar
+    * rows), then the [[rows]] collect as the only Spark work — ONE
+    * job when the read is one scan partition, as an indexed read of a
+    * key-clustered table is. The response
+    * reports `files_opened`/`files_total` so a client can see which
+    * path served it. Vacuum races resolve exactly like the
+    * current-read path of [[tableSnapshot]]: post-read marker
+    * recheck, bounded re-resolve retries, 503 if a writer outruns
+    * them. */
   private def tableLookup(ex: HttpExchange): (Int, String) = {
     val p = params(ex)
     val root = p.getOrElse("root",
@@ -381,40 +391,36 @@ class Api(spark: SparkSession, maxRows: Int = 10000,
     val value = p.get("value").flatMap(_.toLongOption).getOrElse(
       return (400, detail("value parameter required (integer)")))
     serveCurrentRead(root) { (curId, cur) =>
-      val snap = spark.read.parquet(cur)
-      if (!snap.columns.contains(key))
+      val curPath = new org.apache.hadoop.fs.Path(cur)
+      // files_total is the ON-DISK data-file count on BOTH paths —
+      // the index's own coverage (which excludes zero-row files)
+      // must not make an unchanged table report different totals
+      // depending on which path served it
+      val files = curPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(curPath).map(_.getPath.toString)
+        .filter(_.endsWith(".parquet")).toSeq
+      val total = files.length.toLong
+      val schema = Maintenance.dataSchema(spark, cur, files)
+      if (!schema.fieldNames.contains(key))
         (400, detail(s"unknown key column: $key"))
       else {
-        val idxPath = new org.apache.hadoop.fs.Path(s"$cur/_skipindex")
-        val fs = idxPath.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        // files_total is the ON-DISK data-file count on BOTH paths —
-        // the index's own coverage (which excludes zero-row files)
-        // must not make an unchanged table report different totals
-        // depending on which path served it
-        val total = fs.listStatus(new org.apache.hadoop.fs.Path(cur))
-          .count(_.getPath.getName.endsWith(".parquet")).toLong
         // the index is an ACCELERATOR, never a correctness
-        // dependency: absent, not covering the key, or UNREADABLE
-        // (a torn writeSkipIndex attempt — the one sidecar with no
-        // commit marker) all fall back to the plain filtered scan; a
-        // vacuumed-snapshot failure inside indexedLookup falls back
-        // too, and the plain scan then trips serveCurrentRead's
-        // recheck, which is the retry path's job
+        // dependency: absent or not covering the key (indexedLookup
+        // declines), UNREADABLE (a torn writeSkipIndex attempt — the
+        // one sidecar with no commit marker) all fall back to the
+        // plain filtered scan; a vacuumed-snapshot failure inside
+        // indexedLookup falls back too, and the plain scan then trips
+        // serveCurrentRead's recheck, which is the retry path's job
         val viaIndex: Option[(DataFrame, Long)] =
           try {
-            if (fs.exists(idxPath) &&
-                spark.read.parquet(idxPath.toString)
-                  .columns.contains(s"min_$key")) {
-              val (df, opened, _) = graft.operators.Maintenance
-                .indexedLookup(spark, cur, key, value)
-              Some((df, opened))
-            } else None
+            val (df, opened, _) =
+              Maintenance.indexedLookup(spark, cur, key, value)
+            Some((df, opened))
           } catch {
             case scala.util.control.NonFatal(_) => None
           }
-        val (df, opened) = viaIndex.getOrElse(
-          (snap.filter(col(key) === value), total))
+        val (df, opened) = viaIndex.getOrElse((spark.read.schema(schema)
+          .parquet(cur).filter(col(key) === value), total))
         (200, s"""{"version":$curId,"files_opened":$opened,""" +
           s""""files_total":$total,"data":${rows(df)}}""")
       }
@@ -430,9 +436,14 @@ class Api(spark: SparkSession, maxRows: Int = 10000,
 
   // ---- plumbing ----
 
+  /** Serve one exchange: the whole route body runs under the
+    * request's job group and deadline ([[withJobTimeout]]), so every
+    * Spark job a request starts — metadata reads included — carries a
+    * `graft-api-<route>-<n>` group and is cancelled with it. */
   private def handle(ex: HttpExchange)(f: HttpExchange => (Int, String)): Unit = {
+    val route = ex.getHttpContext.getPath.stripPrefix("/")
     val (code, body) =
-      try f(ex)
+      try withJobTimeout(route)(f(ex))
       catch {
         case _: RequestTimeout => (504, detail(
           s"query exceeded ${sqlTimeoutMs} ms and was cancelled"))
@@ -469,11 +480,16 @@ class Api(spark: SparkSession, maxRows: Int = 10000,
     * doc tables) serializes as the string "NaN". Columns are addressed
     * POSITIONALLY via a rename round-trip so duplicate output names
     * (e.g. a self-join's two `value`s) serve instead of 500ing on an
-    * ambiguous reference. */
+    * ambiguous reference. The JSON is built in the projection
+    * (`to_json`, the writer `Dataset.toJSON` uses) so the row cap is
+    * the plan's ROOT limit: a scan collects incrementally — one job
+    * when its first partition holds the answer — and a sorted result
+    * as one top-k job, with no single-partition exchange (an extra
+    * job under adaptive execution) beneath the limit. */
   private def rows(df: DataFrame): String = {
     val names = df.columns
     val tmp = df.toDF(names.indices.map(i => s"__c$i"): _*)
-    val sanitized = tmp.select(names.indices.map { i =>
+    val json = to_json(struct(names.indices.map { i =>
       val c = col(s"__c$i")
       val cleaned = df.schema.fields(i).dataType match {
         case DoubleType | FloatType =>
@@ -482,12 +498,9 @@ class Api(spark: SparkSession, maxRows: Int = 10000,
         case _ => c
       }
       cleaned.as(names(i))
-    }: _*)
-    // the one place request-driven Spark actions run — every data
-    // route inherits the deadline from here
-    withJobTimeout("rows") {
-      sanitized.limit(maxRows).toJSON.collect().mkString("[", ",", "]")
-    }
+    }: _*))
+    tmp.select(json).limit(maxRows).collect().map(_.getString(0))
+      .mkString("[", ",", "]")
   }
 
   private def jstr(s: String): String = mapper.writeValueAsString(s)

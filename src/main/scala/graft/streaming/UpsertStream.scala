@@ -260,10 +260,11 @@ object UpsertStream {
       latest.write.mode("overwrite").parquet(out)
     } else {
       val baseDir = s"$root/v${batchId - 1}"
-      // columns in base order for the merge's schema check
-      val base = spark.read.parquet(baseDir)
+      // columns in base order for the merge's schema check, from a
+      // base footer on the driver rather than an inference job
+      val base = graft.operators.Maintenance.dataSchema(spark, baseDir)
       graft.operators.Maintenance.copyOnWriteMerge(
-        spark, baseDir, out, latest.select(base.columns.map(col): _*),
+        spark, baseDir, out, latest.select(base.fieldNames.map(col): _*),
         key)
       ()
     }

@@ -4,6 +4,8 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.serving.Api
 import graft.sources.{SecIngest, SecSchemas}
@@ -463,6 +465,127 @@ class ApiSpec extends SparkSpec {
       assert(c7 == 200 && b7.get("version").asLong == 3L, s"$c7: $b7")
       assert(b7.get("data").size == 1)
     } finally a.snapshotReadRaceHook = () => ()
+  }
+
+  /** The job group of every Spark job `body` starts, in start order.
+    * The listener bus delivers in order, so the jobs between two fence
+    * jobs (run on this thread under their own groups) are exactly the
+    * jobs `body` started — whatever else was still queued is cut off. */
+  private def jobGroupsOf(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    val id = java.util.UUID.randomUUID()
+    def fence(tag: String): String = {
+      sc.setJobGroup(s"fence-$tag-$id", "listener fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      s"fence-$tag-$id"
+    }
+    sc.addSparkListener(listener)
+    try {
+      val open = fence("open")
+      body
+      val close = fence("close")
+      val deadline = System.currentTimeMillis + 20000
+      while (!seen.contains(close) && System.currentTimeMillis < deadline)
+        Thread.sleep(20)
+      assert(seen.contains(close), "listener bus never delivered the fence")
+      seen.asScala.toSeq.dropWhile(_ != open).drop(1).takeWhile(_ != close)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("table-lookup and table-snapshot run no Spark job besides " +
+    "their collect, all in the request's job group") {
+    import graft.streaming.UpsertStream
+    import org.apache.spark.sql.functions.col
+    val drop = UpsertStream.stageUpsertWaves(spark, sf0001)
+    val root = tmpDir("api_jobs_root")
+    assert(UpsertStream.drainUpsertWaves(spark, drop, root,
+      tmpDir("api_jobs_ck")) == UpsertStream.Waves)
+    val enc = java.net.URLEncoder.encode(root, "UTF-8")
+    val snap = s"$root/v2"
+    val schema = spark.read.parquet(snap).schema
+    val probe = spark.read.schema(schema).parquet(snap)
+      .agg(org.apache.spark.sql.functions.min("doc_id")).head.getLong(0)
+    port // server up (views registered) before anything is counted
+    def routeJobs(route: String, path: String): (Int, JsonNode) = {
+      var body: JsonNode = null
+      val groups = jobGroupsOf {
+        val (code, b) = get(path)
+        assert(code == 200, s"$path: $code $b")
+        body = b
+      }
+      assert(groups.nonEmpty &&
+        groups.forall(_.startsWith(s"graft-api-$route-")),
+        s"$path ran jobs outside its request group: $groups")
+      (groups.size, body)
+    }
+    // what the route's capped collect alone costs: Spark's incremental
+    // limit take runs one job per scan-up round over the files it reads
+    def collectJobs(df: => org.apache.spark.sql.DataFrame): Int =
+      jobGroupsOf(df.limit(10000).collect()).size
+    val lookup = s"/table-lookup?root=$enc&key=doc_id&value=$probe"
+    val (unindexedJobs, unindexed) = routeJobs("table-lookup", lookup)
+    assert(unindexed.get("files_opened").asLong ==
+      unindexed.get("files_total").asLong)
+    assert(unindexedJobs == collectJobs(spark.read.schema(schema)
+      .parquet(snap).filter(col("doc_id") === probe)),
+      s"unindexed lookup ran $unindexedJobs jobs")
+    graft.operators.Maintenance.writeSkipIndex(spark, snap, Seq("doc_id"))
+    val (indexedJobs, indexed) = routeJobs("table-lookup", lookup)
+    assert(indexed.get("files_opened").asLong == 1L &&
+      indexed.get("files_total").asLong > 1L, s"index did not prune: $indexed")
+    assert(indexedJobs == 1, s"indexed lookup ran $indexedJobs jobs")
+    assert(indexed.get("data") == unindexed.get("data"))
+    val (snapJobs, snapBody) =
+      routeJobs("table-snapshot", s"/table-snapshot?root=$enc")
+    assert(snapBody.get("data").size.toLong ==
+      spark.read.schema(schema).parquet(snap).count())
+    assert(snapJobs == collectJobs(spark.read.schema(schema).parquet(snap)),
+      s"snapshot read ran $snapJobs jobs")
+  }
+
+  test("every Spark job of a mixed burst over the six serving routes " +
+    "carries a graft-api- job group") {
+    import graft.streaming.UpsertStream
+    val drop = UpsertStream.stageUpsertWaves(spark, sf0001)
+    val root = tmpDir("api_burst_root")
+    assert(UpsertStream.drainUpsertWaves(spark, drop, root,
+      tmpDir("api_burst_ck")) == UpsertStream.Waves)
+    graft.operators.Maintenance.writeSkipIndex(spark, s"$root/v2",
+      Seq("doc_id"))
+    val enc = java.net.URLEncoder.encode(root, "UTF-8")
+    port
+    val paths = Seq(
+      "/check-availability?year=2023&quarter=Q4",
+      "/get-table-info?data_source=RAW&year=2023&quarter=Q4",
+      "/get-financial-data?year=2023&quarter=Q4&data_type=Balance%20Sheet&source=RAW",
+      s"/table-snapshot?root=$enc",
+      s"/table-lookup?root=$enc&key=doc_id&value=1")
+    val groups = jobGroupsOf {
+      val futures = (0 until 12).map { i =>
+        val req =
+          if (i % 6 == 5) HttpRequest.newBuilder(URI.create(
+            s"http://127.0.0.1:$port/execute-custom-query"))
+            .POST(HttpRequest.BodyPublishers.ofString(
+              """{"query": "SELECT count(*) AS n FROM sec_num_2023Q4"}"""))
+          else HttpRequest.newBuilder(URI.create(
+            s"http://127.0.0.1:$port${paths(i % 6)}")).GET()
+        client.sendAsync(req.build(), HttpResponse.BodyHandlers.ofString())
+      }
+      futures.map(_.join()).zipWithIndex.foreach { case (r, i) =>
+        assert(r.statusCode() == 200, s"request $i: ${r.body().take(200)}")
+      }
+    }
+    assert(groups.nonEmpty)
+    assert(groups.forall(_.startsWith("graft-api-")),
+      s"jobs outside a request group: ${groups.filterNot(_.startsWith("graft-api-"))}")
   }
 
   override def afterAll(): Unit = {

@@ -520,6 +520,75 @@ class MaintenanceSpec extends SparkSpec {
       "null stats cannot prune — the file must stay a candidate")
   }
 
+  test("skipIndexRows reads the sidecar on the driver: the rows a Spark " +
+    "read returns, null stats included") {
+    val t = tmpDir("sir_t")
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1)
+      .write.mode("append").parquet(t)
+    Seq((10L, "c")).toDF("k", "v").coalesce(1)
+      .write.mode("append").parquet(t)
+    // an all-null-key file: its footer has no bounds for k
+    Seq[(java.lang.Long, String)]((null, "n")).toDF("k", "v").coalesce(1)
+      .write.mode("append").parquet(t)
+    assert(Maintenance.writeSkipIndex(spark, t, Seq("k")) == 3L)
+    val viaSpark = spark.read.parquet(s"$t/_skipindex")
+      .select("file", "min_k", "max_k").collect().toSet
+    val viaDriver = Maintenance.skipIndexRows(spark, t, "k")
+      .getOrElse(fail("a bigint index must be read")).toSet
+    assert(viaDriver == viaSpark)
+    assert(viaDriver.exists(r => r.isNullAt(1) && r.isNullAt(2)),
+      s"expected the null-stats row: $viaDriver")
+    // no sidecar, and a torn one (the directory without a part file):
+    // nothing to read, so the caller scans
+    assert(Maintenance.skipIndexRows(spark, tmpDir("sir_none"), "k").isEmpty)
+    val torn = tmpDir("sir_torn")
+    Seq((1L, "a")).toDF("k", "v").write.mode("overwrite").parquet(torn)
+    new java.io.File(s"$torn/_skipindex").mkdirs()
+    assert(Maintenance.skipIndexRows(spark, torn, "k").isEmpty)
+  }
+
+  test("skip index over a non-bigint key: the reader declines, so the " +
+    "lookup falls back instead of failing on the stats type") {
+    val t = tmpDir("nbk_t")
+    (0 until 40).map(i => (i, s"s$i", i.toLong)).toDF("i", "s", "l")
+      .repartitionByRange(4, col("i"))
+      .write.mode("overwrite").parquet(t)
+    Maintenance.writeSkipIndex(spark, t, Seq("i", "s", "l"))
+    assert(Maintenance.skipIndexRows(spark, t, "i").isEmpty, "int key")
+    assert(Maintenance.skipIndexRows(spark, t, "s").isEmpty, "string key")
+    assert(Maintenance.skipIndexRows(spark, t, "nope").isEmpty)
+    assert(Maintenance.skipIndexRows(spark, t, "l").map(_.size)
+      .contains(4), "the bigint column of the same index is covered")
+    // the named refusal the serving route maps to its plain scan
+    val e = intercept[IllegalArgumentException] {
+      Maintenance.indexedLookup(spark, t, "i", 7L)
+    }
+    assert(e.getMessage.contains("bigint column i"))
+  }
+
+  test("footerSchema declares the schema Spark infers: upsert snapshot " +
+    "and the q290 table") {
+    import graft.streaming.UpsertStream
+    val root = tmpDir("fs_upsert")
+    assert(UpsertStream.drainUpsertWaves(spark,
+      UpsertStream.stageUpsertWaves(spark, sf0001), root,
+      tmpDir("fs_upsert_ck")) == UpsertStream.Waves)
+    val q290 = new org.apache.hadoop.fs.Path(
+      Maintenance.pointLookupQuery(spark, sf0001).inputFiles.head)
+      .getParent.toString
+    for (dir <- Seq(s"$root/v2", q290)) {
+      val f = Maintenance.listDataFiles(spark, dir).head
+      assert(spark.read.schema(Maintenance.footerSchema(spark, f))
+        .parquet(dir).schema == spark.read.parquet(dir).schema, dir)
+    }
+    // no data file: Spark's own inference error, as a schema-less read
+    val empty = tmpDir("fs_empty")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Maintenance.dataSchema(spark, empty)
+    }
+    assert(e.getMessage.contains("UNABLE_TO_INFER_SCHEMA"), e.getMessage)
+  }
+
   test("refreshSkipIndex: copied stats inherited, rewritten files re-read, gaps degrade to reads") {
     val v0 = tmpDir("rsi_v0"); val v1 = tmpDir("rsi_v1")
     val v2 = tmpDir("rsi_v2")
