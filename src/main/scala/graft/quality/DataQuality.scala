@@ -10,93 +10,143 @@ import org.apache.spark.sql.functions._
   * (run_dbt_pipeline.sh:107-108, dbt_project.yml:44-45): every check
   * returns the DataFrame of violating rows; [[report]] collects counts
   * without throwing — violations are recorded, not blocking.
+  *
+  * A row-level check ([[RowCheck]]) is a table and the predicate its
+  * violating rows satisfy, written once: [[RowCheck.violations]]
+  * filters by it and [[report]] counts it. [[report]] runs the whole
+  * suite as ONE Spark query (Deequ's single pass per table, Schelter
+  * et al., VLDB 2018) instead of one `count()` per check.
   */
 object DataQuality {
 
-  final case class Check(name: String, violations: DataFrame)
+  /** A named check; `violations` is its audit frame of failing rows
+    * (or failing key groups, for uniqueness). */
+  sealed trait Check {
+    def name: String
+    def violations: DataFrame
+  }
+
+  /** The rows of `table` where `pred` is true. */
+  final case class RowCheck(name: String, table: DataFrame, pred: Column)
+      extends Check {
+    def violations: DataFrame = table.filter(pred)
+  }
+
+  /** A check over sets of rows (duplicate keys, orphans), counted by
+    * the rows of its violation frame. */
+  final case class SetCheck(name: String, violations: DataFrame)
+      extends Check
 
   /** not_null (schema.yml e.g. :8-10). */
-  def notNull(df: DataFrame, c: String): DataFrame =
-    df.filter(col(c).isNull)
+  def notNull(c: String): Column = col(c).isNull
 
-  /** unique (schema.yml:94-96, sub.adsh). */
-  def unique(df: DataFrame, cols: Seq[String]): DataFrame =
+  /** Duplicate key groups: a plain GROUP BY ... HAVING count > 1. */
+  private def duplicates(df: DataFrame, cols: Seq[String]): DataFrame =
     df.groupBy(cols.map(col): _*).agg(count(lit(1)).as("n"))
       .filter(col("n") > 1)
 
+  /** unique (schema.yml:94-96, sub.adsh): dbt's generic test filters
+    * `where <col> is not null`, so null keys are never duplicates
+    * (they are not_null's to report). */
+  def unique(df: DataFrame, cols: Seq[String]): DataFrame =
+    duplicates(df.filter(cols.map(col(_).isNotNull).reduce(_ && _)), cols)
+
   /** accepted_values (schema.yml:272-274 stmt codes; :50-58 flags). */
-  def acceptedValues(df: DataFrame, c: String, values: Seq[Any]): DataFrame =
-    df.filter(col(c).isNotNull && !col(c).isin(values: _*))
+  def acceptedValues(c: String, values: Seq[Any]): Column =
+    col(c).isNotNull && !col(c).isin(values: _*)
 
   /** expect_column_values_to_be_between (schema.yml:110-113 sic etc.). */
-  def between(df: DataFrame, c: String, lo: Long, hi: Long): DataFrame =
-    df.filter(col(c).isNotNull && (col(c) < lo || col(c) > hi))
+  def between(c: String, lo: Long, hi: Long): Column =
+    col(c).isNotNull && (col(c) < lo || col(c) > hi)
 
   /** expect_column_values_to_match_regex (schema.yml:118-131 etc.). */
-  def matchesRegex(df: DataFrame, c: String, re: String): DataFrame =
-    df.filter(col(c).isNotNull && !col(c).rlike(re))
+  def matchesRegex(c: Column, re: String): Column =
+    c.isNotNull && !c.rlike(re)
 
   /** expect_column_value_lengths_to_be_between (schema.yml:294-297). */
-  def lengthBetween(df: DataFrame, c: String, lo: Int, hi: Int): DataFrame =
-    df.filter(col(c).isNotNull &&
-      (length(col(c)) < lo || length(col(c)) > hi))
+  def lengthBetween(c: String, lo: Int, hi: Int): Column =
+    col(c).isNotNull && (length(col(c)) < lo || length(col(c)) > hi)
 
   /** Singular test: 8-digit yyyymmdd ddate
     * (tests/num_validation/test_date_validity.sql:1-4). */
-  def ddateValid(num: DataFrame): DataFrame =
-    num.filter(col("ddate").isNotNull &&
-      length(col("ddate").cast("string")) =!= 8)
+  val ddateInvalid: Column =
+    col("ddate").isNotNull && length(col("ddate").cast("string")) =!= 8
 
   /** Singular test: FK orphans via left-anti join
     * (tests/num_validation/test_foreign_key_integrity.sql:1-4). */
   def fkOrphans(child: DataFrame, parent: DataFrame, key: String): DataFrame =
     child.join(parent.select(key), Seq(key), "left_anti")
 
-  /** Singular test: composite-key duplicates in pre
-    * (tests/pre_validation/test_unique_identifier.sql:1-8). */
+  /** Singular test: composite-key duplicates in pre — a plain GROUP BY,
+    * nulls included (tests/pre_validation/test_unique_identifier.sql:1-8). */
   def preUniqueIdentifier(pre: DataFrame): DataFrame =
-    unique(pre, Seq("adsh", "report", "line"))
+    duplicates(pre, Seq("adsh", "report", "line"))
 
   /** The full suite over one quarter's typed tables; mirrors the
     * schema.yml + singular tests line items cited per check above. */
   def secSuite(sub: DataFrame, num: DataFrame, pre: DataFrame,
                tag: DataFrame): Seq[Check] = Seq(
-    Check("sub_adsh_not_null", notNull(sub, "adsh")),
-    Check("sub_adsh_unique", unique(sub, Seq("adsh"))),
-    Check("sub_wksi_domain", acceptedValues(sub, "wksi", Seq(0, 1))),
-    Check("sub_sic_range", between(sub, "sic", 100, 9999)),
-    Check("sub_fy_range", between(sub, "fy", 1900, 2100)),
-    Check("sub_nciks_min", between(sub, "nciks", 1, Long.MaxValue)),
-    Check("sub_countryba_regex", matchesRegex(sub, "countryba", "^[A-Z]{2}$")),
-    Check("sub_fye_regex",
-      matchesRegex(sub.withColumn("fye_s", col("fye").cast("string")),
-        "fye_s", "^((0?[1-9]|1[0-2])[0-3][0-9])$")),
-    Check("sub_period_regex",
-      matchesRegex(sub.withColumn("period_s", col("period").cast("string")),
-        "period_s", "^[0-9]{8}$")),
-    Check("sub_aciks_regex", matchesRegex(sub, "aciks", "^[0-9 ]*$")),
-    Check("num_adsh_not_null", notNull(num, "adsh")),
-    Check("num_qtrs_min", between(num, "qtrs", 0, Long.MaxValue)),
-    Check("num_ddate_valid", ddateValid(num)),
-    Check("num_fk_sub", fkOrphans(num, sub, "adsh")),
-    Check("pre_stmt_domain", acceptedValues(pre, "stmt",
+    RowCheck("sub_adsh_not_null", sub, notNull("adsh")),
+    SetCheck("sub_adsh_unique", unique(sub, Seq("adsh"))),
+    RowCheck("sub_wksi_domain", sub, acceptedValues("wksi", Seq(0, 1))),
+    RowCheck("sub_sic_range", sub, between("sic", 100, 9999)),
+    RowCheck("sub_fy_range", sub, between("fy", 1900, 2100)),
+    RowCheck("sub_nciks_min", sub, between("nciks", 1, Long.MaxValue)),
+    RowCheck("sub_countryba_regex", sub,
+      matchesRegex(col("countryba"), "^[A-Z]{2}$")),
+    RowCheck("sub_fye_regex", sub, matchesRegex(col("fye").cast("string"),
+      "^((0?[1-9]|1[0-2])[0-3][0-9])$")),
+    RowCheck("sub_period_regex", sub,
+      matchesRegex(col("period").cast("string"), "^[0-9]{8}$")),
+    RowCheck("sub_aciks_regex", sub, matchesRegex(col("aciks"), "^[0-9 ]*$")),
+    RowCheck("num_adsh_not_null", num, notNull("adsh")),
+    RowCheck("num_qtrs_min", num, between("qtrs", 0, Long.MaxValue)),
+    RowCheck("num_ddate_valid", num, ddateInvalid),
+    SetCheck("num_fk_sub", fkOrphans(num, sub, "adsh")),
+    RowCheck("pre_stmt_domain", pre, acceptedValues("stmt",
       graft.sources.SecSchemas.stmtCodes)),
-    Check("pre_inpth_domain", acceptedValues(pre, "inpth", Seq(0, 1))),
-    Check("pre_plabel_length", lengthBetween(pre, "plabel", 1, 512)),
-    Check("pre_unique_identifier", preUniqueIdentifier(pre)),
-    Check("tag_tag_not_null", notNull(tag, "tag")),
-    Check("tag_version_not_null", notNull(tag, "version")),
-    Check("tag_iord_domain", acceptedValues(tag, "iord", Seq("I", "D"))),
-    Check("tag_crdr_domain", acceptedValues(tag, "crdr", Seq("C", "D"))),
-    Check("tag_datatype_domain", acceptedValues(tag, "datatype",
+    RowCheck("pre_inpth_domain", pre, acceptedValues("inpth", Seq(0, 1))),
+    RowCheck("pre_plabel_length", pre, lengthBetween("plabel", 1, 512)),
+    SetCheck("pre_unique_identifier", preUniqueIdentifier(pre)),
+    RowCheck("tag_tag_not_null", tag, notNull("tag")),
+    RowCheck("tag_version_not_null", tag, notNull("version")),
+    RowCheck("tag_iord_domain", tag, acceptedValues("iord", Seq("I", "D"))),
+    RowCheck("tag_crdr_domain", tag, acceptedValues("crdr", Seq("C", "D"))),
+    RowCheck("tag_datatype_domain", tag, acceptedValues("datatype",
       Seq("monetary", "shares", "perShare", "percent", "integer",
         "decimal", "area", "pure", "mass", "monetaryPerVolume"))),
-    Check("tag_custom_domain", acceptedValues(tag, "custom", Seq(0, 1))),
-    Check("tag_abstract_domain", acceptedValues(tag, "abstract", Seq(0, 1))))
+    RowCheck("tag_custom_domain", tag, acceptedValues("custom", Seq(0, 1))),
+    RowCheck("tag_abstract_domain", tag, acceptedValues("abstract", Seq(0, 1))))
 
-  /** warn-severity report: (check, violation count), never throws. */
-  def report(checks: Seq[Check]): Seq[(String, Long)] =
-    checks.map(c => c.name -> c.violations.count())
+  /** warn-severity report: (check, violation count) in check order,
+    * never throws on violations. The whole suite is one Spark query
+    * with one `collect`: one global `count_if` per check over a union
+    * of branches. A branch is one frame projected to a flag column per
+    * check, null for the checks it does not hold: a table flags its
+    * rows by the predicate of each row check over it (tables compared
+    * by reference, so each is scanned once for all its checks), and a
+    * set check's violation frame flags every row. Names must be
+    * distinct, since callers key the result by name. */
+  def report(checks: Seq[Check]): Seq[(String, Long)] = {
+    val dups = checks.groupBy(_.name).collect { case (n, cs) if cs.size > 1 => n }
+    require(dups.isEmpty, s"duplicate check names: ${dups.toSeq.sorted.mkString(", ")}")
+    if (checks.isEmpty) return Seq.empty
+    val flagged = checks.map {
+      case c: RowCheck => (c.table, c.pred)
+      case c: SetCheck => (c.violations, lit(true))
+    }
+    val frames = flagged.map(_._1).foldLeft(Vector.empty[DataFrame]) {
+      (fs, f) => if (fs.exists(_ eq f)) fs else fs :+ f }
+    val flag = (i: Int) => s"v$i"
+    val counts = checks.indices.map(i => count_if(col(flag(i))).as(flag(i)))
+    val row = frames.map(f => f.select(flagged.zipWithIndex.map {
+        case ((g, pred), i) =>
+          (if (g eq f) pred else lit(null).cast("boolean")).as(flag(i))
+      }: _*))
+      .reduce(_ union _)
+      .agg(counts.head, counts.tail: _*).collect().head
+    checks.indices.map(i => checks(i).name -> row.getLong(i))
+  }
 
   /** q116: referential-integrity summary — every foreign-key edge of
     * the star schema checked in ONE report: per edge, the child row

@@ -74,9 +74,13 @@ object SecIngest {
       .partitionBy("source_file")
       .parquet(dir)
 
-  /** Load back with partition pruning available on source_file. */
+  /** Load back with partition pruning available on source_file. The
+    * data schema comes from a data file's footer on the driver, not
+    * from Spark's schema-inference job; the source_file partition
+    * column is still discovered from the directory names. */
   def readPartitioned(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    spark.read.schema(graft.operators.Maintenance.dataSchema(spark, dir))
+      .parquet(dir)
 
   /** S11: schema-only empty table (the reference materializes empty
     * typed staging tables via `SELECT CAST(NULL AS T) ... WHERE FALSE`,

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.operators.CorpusStats
+import graft.operators.{CorpusStats, Maintenance}
 
 /** Streaming count-min-sketch maintenance — the incremental twin of
   * the batch CMS (q101). The sketch's defining property is that grids
@@ -47,7 +47,7 @@ object SketchStream {
     val p = new Path(gridDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(p), s"no grid partials under $gridDir")
-    spark.read.parquet(gridDir)
+    spark.read.schema(Maintenance.dataSchema(spark, gridDir)).parquet(gridDir)
       .groupBy("r", "bucket").agg(sum(col("counter")).as("counter"))
   }
 
@@ -80,7 +80,7 @@ object SketchStream {
     val p = new Path(regDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(p), s"no register partials under $regDir")
-    spark.read.parquet(regDir)
+    spark.read.schema(Maintenance.dataSchema(spark, regDir)).parquet(regDir)
       .groupBy("event_type", "register")
       .agg(max(col("max_rho")).as("max_rho"))
   }
@@ -116,7 +116,7 @@ object SketchStream {
     val p = new Path(gridDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(p), s"no AGMS partials under $gridDir")
-    spark.read.parquet(gridDir)
+    spark.read.schema(Maintenance.dataSchema(spark, gridDir)).parquet(gridDir)
       .groupBy("r", "bucket").agg(sum(col("c")).as("c"))
   }
 }

@@ -87,6 +87,19 @@ class SecPipelineSpec extends SparkSpec {
     assert(back.filter(col("source_file") === "1999Q1").count() == 0)
   }
 
+  test("partitioned read takes the inferred schema from a footer, with no job") {
+    val dir = tmpDir("sec_parquet_schema")
+    SecIngest.writePartitioned(sub, dir)
+    var back: org.apache.spark.sql.DataFrame = null
+    assert(jobGroupsOf { back = SecIngest.readPartitioned(spark, dir) }.isEmpty)
+    val inferred = spark.read.parquet(dir).schema
+    assert(back.schema == inferred)
+    assert(back.schema.fieldNames.toSeq ==
+      SecSchemas.sub.fieldNames.toSeq :+ "source_file")
+    assert(back.schema("source_file").dataType ==
+      org.apache.spark.sql.types.StringType)
+  }
+
   test("fact build: J2 fans out across versions, W1 rank is constant 1") {
     val bs = SecFactTables.balanceSheet(num, sub, pre)
     // Assets appears twice in num (dup rows) -> summed into one group
@@ -226,5 +239,14 @@ class SecPipelineSpec extends SparkSpec {
     assert(rep("tag_iord_domain") == 1)      // iord = X
     assert(rep("sub_fye_regex") == 1)        // fye = 1399 (month 13)
     assert(rep("sub_adsh_unique") == 0)
+  }
+
+  test("data quality report is one query: at most one job per branch plus one") {
+    val checks = DataQuality.secSuite(sub, num, pre, tag)
+    // the union's branches: the four tables of the row checks, plus
+    // the two uniqueness checks and the FK check
+    val branches = 4 + 3
+    val jobs = jobGroupsOf(DataQuality.report(checks))
+    assert(jobs.size <= branches + 1, s"${jobs.size} jobs for $branches branches")
   }
 }
