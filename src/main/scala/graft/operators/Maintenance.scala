@@ -1,11 +1,14 @@
 package graft.operators
 
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
@@ -290,15 +293,34 @@ object Maintenance {
     * schema Spark's writer stamps, else the converted parquet schema
     * — Spark's own footer rule (`ParquetFileFormat.readSchemaFromFooter`),
     * minus the inference job a schema-less `spark.read.parquet` runs
-    * to read that same footer in a task. */
+    * to read that same footer in a task. The read options come from
+    * the session's Hadoop conf ([[withParquet]]): a reader built
+    * without the caller's conf news up a default `Configuration`,
+    * which re-reads and re-parses Hadoop's XML defaults from the
+    * classpath on every open — a cost a keyed lookup would pay per
+    * footer. */
   def footerSchema(spark: SparkSession, file: String): StructType = {
     val path = new Path(file)
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path,
-      spark.sparkContext.hadoopConfiguration))
-    try ParquetFileFormat.readSchemaFromFooter(
+    withParquet(spark.sparkContext.hadoopConfiguration, path)(
+      footerSchemaOf(spark, path, _))
+  }
+
+  private def footerSchemaOf(spark: SparkSession, path: Path,
+      reader: ParquetFileReader): StructType =
+    ParquetFileFormat.readSchemaFromFooter(
       new Footer(path, reader.getFooter),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-    finally reader.close()
+
+  /** THE parquet opener of this engine: `path` opened with read options
+    * built from `conf` (filters, decryption, allocation), the form
+    * Spark's own `ParquetFooterReader` uses, and closed after `f`.
+    * Every footer and sidecar read goes through it, so none pays for a
+    * fresh default `Configuration`. */
+  private[graft] def withParquet[A](conf: Configuration, path: Path)(
+      f: ParquetFileReader => A): A = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+      HadoopReadOptions.builder(conf, path).build())
+    try f(reader) finally reader.close()
   }
 
   /** The schema of a single-schema parquet directory (every layout
@@ -366,9 +388,7 @@ object Maintenance {
       .parallelize(files, math.max(1,
         math.min(files.size, spark.sparkContext.defaultParallelism)))
       .map { f =>
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(f), conf.value))
-        try {
+        withParquet(conf.value, new Path(f)) { reader =>
           val blocks = reader.getFooter.getBlocks.asScala.toSeq
           val nRows = blocks.map(_.getRowCount).sum
           val stats = colNames.zip(types).flatMap { case (c, dt) =>
@@ -395,7 +415,7 @@ object Maintenance {
                 .reduceLeft(greaterOf _))
           }
           Row.fromSeq(f +: stats :+ nRows)
-        } finally reader.close()
+        }
       }
     spark.createDataFrame(rows, outSchema)
   }
@@ -1016,11 +1036,10 @@ object Maintenance {
   /** Keyed POINT LOOKUP through the skipping index: the `_skipindex`
     * rows ([[skipIndexRows]] — file-count rows read on the driver, no
     * Spark job) select the files whose [min, max] admits the probe,
-    * and ONLY those files are opened, under the footer-read
-    * [[dataSchema]] so the scan infers nothing. Cost: footer reads
-    * on the driver; the only Spark job is the caller's collect of the
-    * returned rows (one job when the candidates fit one scan
-    * partition). Files
+    * and ONLY those files are opened, under the data `schema` so the
+    * scan infers nothing. Cost: one sidecar read on the driver; the
+    * only Spark job is the caller's collect of the returned rows (one
+    * job when the candidates fit one scan partition). Files
     * with missing stats cannot be pruned and stay candidates —
     * absence of evidence never drops data. Returns (matching rows,
     * files opened, files total): on a key-clustered layout the open
@@ -1029,24 +1048,32 @@ object Maintenance {
     * Throws IllegalArgumentException when no index covers `key` as a
     * bigint column. */
   def indexedLookup(spark: SparkSession, dir: String, key: String,
-                    value: Long): (DataFrame, Long, Long) = {
+                    value: Long, schema: StructType): (DataFrame, Long, Long) = {
     val idx = skipIndexRows(spark, dir, key).getOrElse(
       throw new IllegalArgumentException(
         s"no skip index over bigint column $key under $dir"))
     val cand = candidateFiles(idx, value)
-    val reader = spark.read.schema(dataSchema(spark, dir))
+    val reader = spark.read.schema(schema)
     val rows =
       if (cand.isEmpty) reader.parquet(dir).limit(0)
       else reader.parquet(cand: _*).filter(col(key) === value)
     (rows, cand.length.toLong, idx.length.toLong)
   }
 
+  /** [[indexedLookup]] under the directory's footer-read [[dataSchema]]
+    * (a recursive listing plus one footer open), for a caller that has
+    * not read the schema already. */
+  def indexedLookup(spark: SparkSession, dir: String, key: String,
+                    value: Long): (DataFrame, Long, Long) =
+    indexedLookup(spark, dir, key, value, dataSchema(spark, dir))
+
   /** The `_skipindex` rows of `dir` for `key`, shaped (file, min_key,
     * max_key) for [[candidateFiles]], read on the driver through
-    * parquet-mr — no Spark job. None when the sidecar has no part
-    * file (absent, or a torn write) or its footer does not carry
-    * `min_key`/`max_key` as bigint columns: the index does not cover
-    * the key and the caller scans. */
+    * [[withParquet]] — no Spark job, and one open per part file: the
+    * first part's footer decides coverage and the same open reads its
+    * rows. None when the sidecar has no part file (absent, or a torn
+    * write) or its footer does not carry `min_key`/`max_key` as bigint
+    * columns: the index does not cover the key and the caller scans. */
   private[graft] def skipIndexRows(spark: SparkSession, dir: String,
       key: String): Option[IndexedSeq[Row]] = {
     val idxDir = new Path(s"$dir/_skipindex")
@@ -1057,20 +1084,33 @@ object Maintenance {
       else fs.listStatus(idxDir).map(_.getPath)
         .filter(_.getName.endsWith(".parquet")).toSeq
     val (lo, hi) = (s"min_$key", s"max_$key")
-    val covers = parts.nonEmpty && {
-      val s = footerSchema(spark, parts.head.toString)
-      Seq(lo, hi).forall(c => s.find(_.name == c).exists(_.dataType == LongType))
-    }
-    Option.when(covers)(parts.flatMap { p =>
-      val reader = ParquetReader.builder(new GroupReadSupport(), p)
-        .withConf(conf).build()
-      def bound(g: Group, c: String): Any =
-        if (g.getFieldRepetitionCount(c) == 0) null else g.getLong(c, 0)
-      try Iterator.continually(reader.read()).takeWhile(_ != null)
+    def bound(g: Group, c: String): Any =
+      if (g.getFieldRepetitionCount(c) == 0) null else g.getLong(c, 0)
+    def rows(reader: ParquetFileReader): IndexedSeq[Row] =
+      groupsOf(reader)
         .map(g => Row(g.getString("file", 0), bound(g, lo), bound(g, hi)))
         .toIndexedSeq
-      finally reader.close()
-    }.toIndexedSeq)
+    parts.headOption.flatMap { head =>
+      withParquet(conf, head) { reader =>
+        val s = footerSchemaOf(spark, head, reader)
+        Option.when(Seq(lo, hi).forall(c =>
+          s.find(_.name == c).exists(_.dataType == LongType)))(rows(reader))
+      }
+    }.map(_ ++ parts.tail.flatMap(withParquet(conf, _)(rows)))
+  }
+
+  /** Every record of an open parquet file as an example `Group`, row
+    * group by row group, under the file's own schema — what
+    * parquet-mr's `GroupReadSupport` reader yields, without opening the
+    * file a second time. Consume it before the reader closes. */
+  private def groupsOf(reader: ParquetFileReader): Iterator[Group] = {
+    val schema = reader.getFooter.getFileMetaData.getSchema
+    val io = new ColumnIOFactory().getColumnIO(schema)
+    Iterator.continually(reader.readNextRowGroup()).takeWhile(_ != null)
+      .flatMap { store =>
+        val records = io.getRecordReader(store, new GroupRecordConverter(schema))
+        Iterator.fill(store.getRowCount.toInt)(records.read())
+      }
   }
 
   /** THE candidate-selection rule of the skipping index, defined once

@@ -372,11 +372,14 @@ class Api(spark: SparkSession, maxRows: Int = 10000,
     * probe ([[Maintenance.indexedLookup]]) — a keyed read at 100 TB is
     * O(matching files), never a table scan — and falls back to the
     * plain filtered scan otherwise (the index is an accelerator, not a
-    * correctness dependency). Cost: one directory listing and a few
-    * parquet footer reads on the driver (snapshot schema, sidecar
-    * rows), then the [[rows]] collect as the only Spark work — ONE
-    * job when the read is one scan partition, as an indexed read of a
-    * key-clustered table is. The response
+    * correctness dependency). Cost: the metadata work per lookup is
+    * one `listStatus` of the snapshot, one data-file footer open (the
+    * schema, which the indexed read reuses) and one `_skipindex` read
+    * (its listing plus one open per part file, which serves both its
+    * footer and its rows), all on the driver under the session's
+    * Hadoop conf; then the [[rows]] collect is the only Spark work —
+    * ONE job when the read is one scan partition, as an indexed read
+    * of a key-clustered table is. The response
     * reports `files_opened`/`files_total` so a client can see which
     * path served it. Vacuum races resolve exactly like the
     * current-read path of [[tableSnapshot]]: post-read marker
@@ -414,7 +417,7 @@ class Api(spark: SparkSession, maxRows: Int = 10000,
         val viaIndex: Option[(DataFrame, Long)] =
           try {
             val (df, opened, _) =
-              Maintenance.indexedLookup(spark, cur, key, value)
+              Maintenance.indexedLookup(spark, cur, key, value, schema)
             Some((df, opened))
           } catch {
             case scala.util.control.NonFatal(_) => None

@@ -589,6 +589,29 @@ class MaintenanceSpec extends SparkSpec {
     assert(e.getMessage.contains("UNABLE_TO_INFER_SCHEMA"), e.getMessage)
   }
 
+  test("withParquet takes its read options from the conf it is handed") {
+    import org.apache.parquet.filter2.predicate.FilterApi
+    import org.apache.parquet.hadoop.ParquetInputFormat
+    val t = tmpDir("wp_t")
+    spark.range(0, 100).select(col("id").as("k")).coalesce(1)
+      .write.mode("overwrite").parquet(t)
+    val f = new org.apache.hadoop.fs.Path(Maintenance.listDataFiles(spark, t).head)
+    def rowGroups(conf: org.apache.hadoop.conf.Configuration): Int =
+      Maintenance.withParquet(conf, f)(_.getRowGroups.size)
+    // a record filter the file's stats exclude, set only on a COPY of
+    // the session conf: the opener's reader drops the row group, which
+    // a reader over a default Configuration would never see
+    val session = spark.sparkContext.hadoopConfiguration
+    val copy = new org.apache.hadoop.conf.Configuration(session)
+    ParquetInputFormat.setFilterPredicate(copy,
+      FilterApi.eq(FilterApi.longColumn("k"), java.lang.Long.valueOf(1000L)))
+    assert(rowGroups(session) == 1)
+    assert(rowGroups(copy) == 0, "the copy's stats filter drops the row group")
+    copy.setBoolean(ParquetInputFormat.STATS_FILTERING_ENABLED, false)
+    assert(rowGroups(copy) == 1, "the copy's parquet.filter.stats.enabled=false keeps it")
+    assert(session.get(ParquetInputFormat.STATS_FILTERING_ENABLED) == null)
+  }
+
   test("refreshSkipIndex: copied stats inherited, rewritten files re-read, gaps degrade to reads") {
     val v0 = tmpDir("rsi_v0"); val v1 = tmpDir("rsi_v1")
     val v2 = tmpDir("rsi_v2")
