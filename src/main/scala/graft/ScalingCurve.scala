@@ -475,23 +475,24 @@ object ScalingCurve {
           .stageUpsertWavesN(spark, dir, waves)
         val root = sources.Scratch.dir(spark, "sc280_root")
         val cdc = sources.Scratch.dir(spark, "sc280_cdc")
-        val ck = sources.Scratch.dir(spark, "sc280_ck")
-        streaming.StatePartitions.scoped(spark) {
-          streaming.UpsertStream.drainCdcWaves(spark, drop, root, cdc, ck)
-          ()
-        }
-        val history = spark.read.parquet(cdc).count()
-        // the q280 configuration: consumer lag = 1 uncommitted batch
-        streaming.UpsertStream.compactCdcLog(spark, cdc,
-          oldestUncommitted = waves - 1L)
-        val base = streaming.UpsertStream.currentCdcBase(spark, cdc)
-          .map { case (_, d) => spark.read.parquet(d).count() }
-          .getOrElse(0L)
-        val tailRows = spark.read.parquet(cdc).count()
-        val tailParts = streaming.UpsertStream.cdcBatchIds(spark, cdc)
-          .size.toLong
-        Seq(root, cdc, ck).foreach(sources.Scratch.delete(spark, _))
-        (history, base, tailRows, tailParts)
+        // deleted even when the drain or a read fails: layoutOr
+        // reports the failure and moves on to the next layout
+        try {
+          streaming.Drain.scratch(spark, "sc280", waves, 1)(
+            streaming.UpsertStream.cdcWaves(spark, drop, root, cdc, _,
+              None, (_, _) => ()))
+          val history = spark.read.parquet(cdc).count()
+          // the q280 configuration: consumer lag = 1 uncommitted batch
+          streaming.UpsertStream.compactCdcLog(spark, cdc,
+            oldestUncommitted = waves - 1L)
+          val base = streaming.UpsertStream.currentCdcBase(spark, cdc)
+            .map { case (_, d) => spark.read.parquet(d).count() }
+            .getOrElse(0L)
+          val tailRows = spark.read.parquet(cdc).count()
+          val tailParts = streaming.UpsertStream.cdcBatchIds(spark, cdc)
+            .size.toLong
+          (history, base, tailRows, tailParts)
+        } finally Seq(root, cdc).foreach(sources.Scratch.delete(spark, _))
       }
       // guarded like runStateful: a failed layout drain (the 10x one
       // is the most expensive new step) becomes a reported row, not a

@@ -68,12 +68,11 @@ object ActiveUsersStream {
           col("user_id"), col("event_type"), col("value"))
         .coalesce(4).write.mode("overwrite").json(d)
     }
-    val ck = graft.sources.Scratch.dir(spark, "q255_ck")
     // two state stores per partition (dedup + window) — the
-    // [[StatePartitions]] loan cuts the per-batch store-commit overhead
-    try StatePartitions.scoped(spark) {
-      activeUsersAvailableNow(spark, drop, sunk, ck)
-    } finally graft.sources.Scratch.delete(spark, ck)
+    // [[StatePartitions]] loan cuts the per-batch store-commit
+    // overhead; the (at most) 4 drop files fit one 16-file trigger
+    Drain.scratch(spark, "q255", 4, 16)(
+      activeUsersAvailableNow(spark, drop, sunk, _))
     readBack(spark, sunk)
   }
 
@@ -119,14 +118,9 @@ object ActiveUsersStream {
   def activeUsersAvailableNow(spark: org.apache.spark.sql.SparkSession,
       dropDir: String, outDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val q = activeUsers(EventStream.readEventStream(spark, dropDir))
+    Drain.run(activeUsers(EventStream.readEventStream(spark, dropDir))
       .writeStream
       .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+      .option("path", outDir), checkpointDir)
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 
 /** BOUNDED-STATE streaming dedup lifecycle proof. q218's DocStream
@@ -142,31 +141,21 @@ object BoundedDedupStream {
   def boundedDedupQuery(spark: SparkSession, dir: String): DataFrame = {
     val sunk = graft.sources.Scratch.dirOutliving(spark, "q259_sunk")
     val drop = stageEchoWaves(spark, dir)
-    val ck = graft.sources.Scratch.dir(spark, "q259_ck")
     // multi-batch drain: the dedup store re-commits per partition per
     // wave — the [[StatePartitions]] loan cuts that fixed overhead
-    try StatePartitions.scoped(spark) {
-      val q = spark.readStream.schema(dropSchema)
+    val progress = Drain.scratch(spark, "q259", 3, 1)(Drain.run(
+      spark.readStream.schema(dropSchema)
         .option("maxFilesPerTrigger", "1").json(drop)
         .withWatermark("ts", s"$DelayMs milliseconds")
         .dropDuplicatesWithinWatermark("event_id")
-        .writeStream.format("parquet").option("path", sunk)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0).toLong
-      require(batches == 3,
-        s"q259 staged 3 wave files but streamed $batches micro-batches")
-      // the boundedness claim, checked live: the store never holds
-      // the full key history
-      val peakState = q.recentProgress
-        .flatMap(_.stateOperators.map(_.numRowsTotal)).max
-      val staged = spark.read.schema(dropSchema).json(drop).count()
-      require(peakState < staged,
-        s"q259 state held $peakState rows for $staged staged — " +
-          "expiry never happened")
-    } finally graft.sources.Scratch.delete(spark, ck)
+        .writeStream.format("parquet").option("path", sunk), _))
+    // the boundedness claim, checked live: the store never holds
+    // the full key history (one stateful operator: the dedup store)
+    val peakState = Drain.peakStateRows(progress)
+    val staged = spark.read.schema(dropSchema).json(drop).count()
+    require(peakState < staged,
+      s"q259 state held $peakState rows for $staged staged — " +
+        "expiry never happened")
     readBack(spark, sunk)
   }
 

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** STREAM-STATIC enrichment join — the dimension-attach pattern for a
   * live feed: a streaming fact source joined against a plain batch
@@ -26,24 +25,15 @@ object EnrichStream {
   def enrichedQuery(spark: SparkSession, dir: String): DataFrame = {
     val sunk = graft.sources.Scratch.dirOutliving(spark, "q258_sunk")
     val drop = EventStream.stageEventsMs(spark, dir)
-    val ck = graft.sources.Scratch.dir(spark, "q258_ck")
     val dim = graft.sources.Tables.customer(spark, dir)
       .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-    try {
-      val q = spark.readStream.schema(EventStream.eventSchema)
+    // 4 files at 2/trigger: a single batch never proves the per-batch
+    // dim re-attach
+    Drain.scratch(spark, "q258", 4, 2)(Drain.run(
+      spark.readStream.schema(EventStream.eventSchema)
         .option("maxFilesPerTrigger", "2").json(drop)
         .join(broadcast(dim), Seq("user_id"))
-        .writeStream.format("parquet").option("path", sunk)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0).toLong
-      require(batches == 2,
-        s"q258 staged 4 files at 2/trigger but streamed $batches " +
-          "micro-batches — a single batch never proves the per-batch " +
-          "dim re-attach")
-    } finally graft.sources.Scratch.delete(spark, ck)
+        .writeStream.format("parquet").option("path", sunk), _))
     readBack(spark, sunk)
   }
 

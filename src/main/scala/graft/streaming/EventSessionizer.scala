@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Custom streaming state: gap-based sessionization of the event
   * stream via `flatMapGroupsWithState` — the stateful surface that
@@ -95,15 +95,10 @@ object EventSessionizer {
                              gapMs: Long): StreamingQuery = {
     import spark.implicits._
     val events = EventStream.readEventStream(spark, dropDir).as[Event]
-    val q = sessionize(events, gapMs)
+    Drain.run(sessionize(events, gapMs)
       .writeStream
       .format("parquet")
       .option("path", outDir)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+      .outputMode("append"), checkpointDir)
   }
 }

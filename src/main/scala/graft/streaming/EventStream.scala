@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Structured Streaming upgrade of the reference's incremental-arrival
@@ -27,57 +27,23 @@ object EventStream {
     StructField("event_type", StringType),
     StructField("value", DoubleType)))
 
-  /** The staged-drop drain scaffold shared by the driver-checked
-    * streaming queries (q145 monitor timeline, q149 file-sink ingest):
-    * stage `staged` as a JSONL drop of `dropFiles` files, drain it
-    * through a file-source stream reading `filesPerTrigger` files per
-    * micro-batch with `Trigger.AvailableNow`, and delete the drop and
-    * checkpoint afterwards — even when the stream throws — so
-    * repeated verify/bench runs don't accumulate staged copies in
-    * temp space. `attachSink` turns the streamed frame into a writer
-    * (parquet path, foreachBatch, …); checkpoint and trigger are
-    * applied here so every caller gets the same lifecycle. Returns
-    * the number of micro-batches that carried rows, so callers can
-    * `require` the multi-batch path was actually exercised. */
+  /** The staged-drop drain shared by the driver-checked streaming
+    * queries (q145 monitor timeline, q149 file-sink ingest, q218
+    * dedup): stage `staged` as a JSONL drop of `dropFiles` files and
+    * drain it through a file-source stream reading `filesPerTrigger`
+    * files per micro-batch on a [[Drain.scratch]] checkpoint, which
+    * requires ceil(dropFiles / filesPerTrigger) data batches.
+    * `attachSink` turns the streamed frame into a writer (parquet
+    * path, foreachBatch, …). Returns the number of micro-batches that
+    * carried rows. */
   def stageAndDrain(spark: SparkSession, staged: DataFrame,
       dropSchema: StructType, dropFiles: Int, filesPerTrigger: Int,
       prefix: String)(
       attachSink: DataFrame => org.apache.spark.sql.streaming
-        .DataStreamWriter[org.apache.spark.sql.Row]): Long = {
-    // scratch resolved through graft.sources.Scratch: on a cluster the
-    // drop/checkpoint must live on a filesystem EXECUTORS can reach
-    // (spark.graft.scratch.dir), not the driver's local tmpdir
-    val drop = graft.sources.Scratch.dir(spark, s"${prefix}_drop")
-    val ck = graft.sources.Scratch.dir(spark, s"${prefix}_ck")
-    staged.repartition(dropFiles).write.mode("overwrite").json(drop)
-    drainDrop(spark, drop, ck, dropSchema, filesPerTrigger)(attachSink)
-  }
-
-  /** The shared drain tail of [[stageAndDrain]]/[[stageAndDrainOrdered]]:
-    * stream the staged drop AvailableNow through the caller's sink,
-    * return the carried-rows batch count, and reclaim drop +
-    * checkpoint even on failure. ONE definition of the multi-batch
-    * counting contract the q-queries `require` against. */
-  private def drainDrop(spark: SparkSession, drop: String, ck: String,
-      dropSchema: StructType, filesPerTrigger: Int)(
-      attachSink: DataFrame => org.apache.spark.sql.streaming
         .DataStreamWriter[org.apache.spark.sql.Row]): Long =
-    // every stateful drain through here pays per-partition store
-    // commits each micro-batch — the [[StatePartitions]] loan applies
-    try StatePartitions.scoped(spark) {
-      val q = attachSink(
-          spark.readStream
-            .schema(dropSchema)
-            .option("maxFilesPerTrigger", filesPerTrigger.toString)
-            .json(drop))
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress.count(_.numInputRows > 0).toLong
-    } finally {
-      for (d <- Seq(drop, ck)) graft.sources.Scratch.delete(spark, d)
-    }
+    drainStaged(spark, dropSchema, dropFiles, filesPerTrigger, prefix)(
+      staged.repartition(dropFiles).write.mode("overwrite").json(_))(
+      attachSink)
 
   /** [[stageAndDrain]] with an ORDER CONTRACT: the caller's
     * partitioning is preserved (no round-robin repartition — stage
@@ -92,24 +58,45 @@ object EventStream {
       dropSchema: StructType, dropFiles: Int, filesPerTrigger: Int,
       prefix: String)(
       attachSink: DataFrame => org.apache.spark.sql.streaming
+        .DataStreamWriter[org.apache.spark.sql.Row]): Long =
+    drainStaged(spark, dropSchema, dropFiles, filesPerTrigger, prefix) {
+      drop =>
+        staged.write.mode("overwrite").json(drop)
+        // resolve the scratch path's OWN filesystem (not the default
+        // FS) — consistent with stageWaveFiles and Scratch.delete
+        val fs = new org.apache.hadoop.fs.Path(drop).getFileSystem(
+          spark.sparkContext.hadoopConfiguration)
+        val parts = fs.listStatus(new org.apache.hadoop.fs.Path(drop))
+          .filter(_.getPath.getName.startsWith("part-"))
+          .sortBy(_.getPath.getName)
+        require(parts.length == dropFiles,
+          s"staging wrote ${parts.length} part files, expected " +
+            s"$dropFiles (repartition the staged frame to dropFiles)")
+        parts.zipWithIndex.foreach { case (st, i) =>
+          fs.setTimes(st.getPath, 1700000000000L + i * 1000L, -1L)
+        }
+    }(attachSink)
+
+  /** Stage a drop with `stage` and drain it: the drop lives under
+    * graft.sources.Scratch (on a cluster it must sit on a filesystem
+    * EXECUTORS can reach, not the driver's tmpdir) and is deleted
+    * afterwards — even when staging or the stream throws — so
+    * repeated verify/bench runs don't accumulate staged copies. */
+  private def drainStaged(spark: SparkSession, dropSchema: StructType,
+      dropFiles: Int, filesPerTrigger: Int, prefix: String)(
+      stage: String => Unit)(
+      attachSink: DataFrame => org.apache.spark.sql.streaming
         .DataStreamWriter[org.apache.spark.sql.Row]): Long = {
     val drop = graft.sources.Scratch.dir(spark, s"${prefix}_drop")
-    val ck = graft.sources.Scratch.dir(spark, s"${prefix}_ck")
-    staged.write.mode("overwrite").json(drop)
-    // resolve the scratch path's OWN filesystem (not the default FS)
-    // — consistent with stageWaveFiles and Scratch.delete
-    val fs = new org.apache.hadoop.fs.Path(drop).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(new org.apache.hadoop.fs.Path(drop))
-      .filter(_.getPath.getName.startsWith("part-"))
-      .sortBy(_.getPath.getName)
-    require(parts.length == dropFiles,
-      s"staging wrote ${parts.length} part files, expected $dropFiles " +
-        "(repartition the staged frame to dropFiles)")
-    parts.zipWithIndex.foreach { case (st, i) =>
-      fs.setTimes(st.getPath, 1700000000000L + i * 1000L, -1L)
-    }
-    drainDrop(spark, drop, ck, dropSchema, filesPerTrigger)(attachSink)
+    try {
+      stage(drop)
+      Drain.dataBatches(
+        Drain.scratch(spark, prefix, dropFiles, filesPerTrigger) { ck =>
+          Drain.run(attachSink(spark.readStream.schema(dropSchema)
+            .option("maxFilesPerTrigger", filesPerTrigger.toString)
+            .json(drop)), ck)
+        })
+    } finally graft.sources.Scratch.delete(spark, drop)
   }
 
   /** Stage `staged` as EXACTLY one JSONL file per wave, named and
@@ -249,15 +236,10 @@ object EventStream {
     * after awaiting termination. */
   def ingestAvailableNow(spark: SparkSession, dropDir: String,
                          outDir: String, checkpointDir: String): StreamingQuery = {
-    val q = readEventStream(spark, dropDir)
+    Drain.run(readEventStream(spark, dropDir)
       .writeStream
       .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+      .option("path", outDir), checkpointDir)
   }
 
   /** q149: the exactly-once PARQUET FILE SINK ingest path driven to a
@@ -300,15 +282,9 @@ object EventStream {
       StructField("t", LongType)))
     // sunk intentionally outlives the call: the returned frame reads
     // it lazily through the sink's commit log
-    val batches = stageAndDrain(spark, staged, dropSchema,
+    stageAndDrain(spark, staged, dropSchema,
       IngestDropFiles, IngestFilesPerTrigger, "q149")(
       _.writeStream.format("parquet").option("path", sunk))
-    val expected =
-      (IngestDropFiles + IngestFilesPerTrigger - 1) / IngestFilesPerTrigger
-    require(batches == expected,
-      s"q149 staged $IngestDropFiles drop files but streamed $batches " +
-        s"micro-batches (expected $expected) — fixture too small to " +
-        "fill every drop partition?")
     ingestSessionReadBack(spark, sunk)
   }
 
@@ -328,15 +304,10 @@ object EventStream {
     * tests and as the pattern for a live dashboard feed. */
   def aggregateAvailableNow(spark: SparkSession, dropDir: String,
                             queryName: String, checkpointDir: String): StreamingQuery = {
-    val q = windowedCounts(readEventStream(spark, dropDir))
+    Drain.run(windowedCounts(readEventStream(spark, dropDir))
       .writeStream
       .format("memory")
       .queryName(queryName)
-      .outputMode("complete")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+      .outputMode("complete"), checkpointDir)
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 import org.apache.spark.sql.types._
 
 /** EVENT-TIME TTL via timers (q282) — the deterministic twin of q275's
@@ -134,40 +134,31 @@ object EventTtlStream {
   def eventTtlQuery(spark: SparkSession, dir: String): DataFrame = {
     val sunk = graft.sources.Scratch.dirOutliving(spark, "q282_sunk")
     val drop = EventStream.stageSecondWaves(spark, dir)
-    val ck = graft.sources.Scratch.dir(spark, "q282_ck")
-    try StatePartitions.scoped(spark) {
+    val progress = Drain.scratch(spark, "q282", 2, 1) { ck =>
       EventStream.withRocksDbProvider(spark) {
-        val q = ttlSplits(spark,
+        Drain.run(ttlSplits(spark,
             spark.readStream.schema(ttlSchema)
               .option("maxFilesPerTrigger", "1").json(drop))
-          .writeStream.format("parquet").option("path", sunk)
-          .option("checkpointLocation", ck)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val batches = q.recentProgress.count(_.numInputRows > 0).toLong
-        require(batches == 2,
-          s"q282 staged 2 wave files but streamed $batches micro-batches")
-        // physical reclamation, asserted exactly: resident entries ==
-        // users still inside their event-time TTL at the final
-        // watermark (value-state rows; timer registrations are
-        // tracked outside numRowsTotal in this Spark version —
-        // measured at sf0.001 before this was pinned)
-        val resident = q.recentProgress.last
-          .stateOperators.map(_.numRowsTotal).sum
-        val feed = spark.read.schema(ttlSchema).json(drop)
-          .select(col("user_id"), unix_millis(col("ts")).as("ms"))
-        val fwm = feed.agg(max("ms")).head.getLong(0) - HorizonMs
-        val live = feed.groupBy("user_id")
-          .agg(max("ms").as("last"))
-          .filter(col("last") + TtlMs > fwm)
-          .count()
-        require(resident == live,
-          s"q282 ended with $resident resident entries, expected " +
-            s"$live in-TTL users — physical timer cleanup (or entry " +
-            "survival) diverged from the event-time TTL contract")
+          .writeStream.format("parquet").option("path", sunk), ck)
       }
-    } finally graft.sources.Scratch.delete(spark, ck)
+    }
+    // physical reclamation, asserted exactly: resident entries ==
+    // users still inside their event-time TTL at the final
+    // watermark (value-state rows; timer registrations are
+    // tracked outside numRowsTotal in this Spark version —
+    // measured at sf0.001 before this was pinned)
+    val resident = progress.last.stateOperators.map(_.numRowsTotal).sum
+    val feed = spark.read.schema(ttlSchema).json(drop)
+      .select(col("user_id"), unix_millis(col("ts")).as("ms"))
+    val fwm = feed.agg(max("ms")).head.getLong(0) - HorizonMs
+    val live = feed.groupBy("user_id")
+      .agg(max("ms").as("last"))
+      .filter(col("last") + TtlMs > fwm)
+      .count()
+    require(resident == live,
+      s"q282 ended with $resident resident entries, expected " +
+        s"$live in-TTL users — physical timer cleanup (or entry " +
+        "survival) diverged from the event-time TTL contract")
     readBack(spark, sunk)
   }
 

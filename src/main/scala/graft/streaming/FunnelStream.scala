@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming twin of the batch sequential funnel
   * (`operators.Sessionize.funnelQuery`): a per-user state machine over
@@ -129,10 +129,9 @@ object FunnelStream {
   def funnelQuery(spark: SparkSession, dir: String): DataFrame = {
     val sunk = graft.sources.Scratch.dirOutliving(spark, "q254_sunk")
     val drop = EventStream.stageEventsMs(spark, dir)
-    val ck = graft.sources.Scratch.dir(spark, "q254_ck")
-    try StatePartitions.scoped(spark) {
-      funnelAvailableNow(spark, drop, sunk, ck)
-    } finally graft.sources.Scratch.delete(spark, ck)
+    // stageEventsMs' 4 files fit one 16-file trigger
+    Drain.scratch(spark, "q254", 4, 16)(
+      funnelAvailableNow(spark, drop, sunk, _))
     readBack(spark, sunk)
   }
 
@@ -169,15 +168,10 @@ object FunnelStream {
                          checkpointDir: String): StreamingQuery = {
     import spark.implicits._
     val events = EventStream.readEventStream(spark, dropDir).as[Event]
-    val q = funnelStages(events)
+    Drain.run(funnelStages(events)
       .writeStream
       .format("parquet")
       .option("path", outDir)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+      .outputMode("append"), checkpointDir)
   }
 }

@@ -117,13 +117,7 @@ object GroupedIvm {
     val root = graft.sources.Scratch.dirOutliving(spark, "q288_table")
     val cdc = graft.sources.Scratch.dirOutliving(spark, "q288_cdc")
     val drop = UpsertStream.stageUpsertWaves(spark, dir)
-    val ck = graft.sources.Scratch.dir(spark, "q288_ck")
-    try StatePartitions.scoped(spark) {
-      val batches = UpsertStream.drainCdcWaves(spark, drop, root, cdc, ck)
-      require(batches == UpsertStream.Waves,
-        s"q288 staged ${UpsertStream.Waves} wave files but streamed " +
-          s"$batches micro-batches")
-    } finally graft.sources.Scratch.delete(spark, ck)
+    UpsertStream.scratchCdcWaves(spark, "q288", drop, root, cdc)
     // claim 1: the staged schedule actually moves keys across buckets
     val moved = UpsertStream.readCdcLog(spark, cdc)
       .filter(col("op") === "update" &&
@@ -204,10 +198,9 @@ object GroupedIvm {
     val cdc = graft.sources.Scratch.dirOutliving(spark, "q291_cdc")
     val mvRoot = graft.sources.Scratch.dirOutliving(spark, "q291_mv")
     val drop = UpsertStream.stageUpsertWaves(spark, dir)
-    val ck = graft.sources.Scratch.dir(spark, "q291_ck")
-    try StatePartitions.scoped(spark) {
-      val batches = UpsertStream.drainCdcWaves(spark, drop, root, cdc, ck,
-        afterBatch = { (cdcDir, b) =>
+    Drain.scratch(spark, "q291", UpsertStream.Waves, 1)(
+      UpsertStream.cdcWaves(spark, drop, root, cdc, _, None,
+        { (cdcDir, b) =>
           applyMvBatchGuarded(spark, cdcDir, b, mvRoot)
           // in-drain consistency: view(b) == rollup of batches <= b
           val (pos, viewDir) = UpsertStream
@@ -221,11 +214,7 @@ object GroupedIvm {
           require(disagree == 0,
             s"q291 batch $b: the in-drain view disagrees with the " +
               s"rollup of batches <= $b on $disagree buckets")
-        })
-      require(batches == UpsertStream.Waves,
-        s"q291 staged ${UpsertStream.Waves} wave files but streamed " +
-          s"$batches micro-batches")
-    } finally graft.sources.Scratch.delete(spark, ck)
+        }))
     groupedIvmReadBack(spark, cdc)
   }
 

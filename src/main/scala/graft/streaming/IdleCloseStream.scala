@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 import org.apache.spark.sql.types._
 
 /** Idle-close per-user summaries via EVENT-TIME TIMERS and MapState
@@ -115,22 +115,13 @@ object IdleCloseStream {
   def idleCloseQuery(spark: SparkSession, dir: String): DataFrame = {
     val sunk = graft.sources.Scratch.dirOutliving(spark, "q250_sunk")
     val drop = EventStream.stageTypedSecondWaves(spark, dir)
-    val ck = graft.sources.Scratch.dir(spark, "q250_ck")
-    try StatePartitions.scoped(spark) {
+    Drain.scratch(spark, "q250", 2, 1) { ck =>
       EventStream.withRocksDbProvider(spark) {
-      val q = idleSummaries(spark,
-          spark.readStream.schema(idleSchema)
-            .option("maxFilesPerTrigger", "1").json(drop))
-        .writeStream.format("parquet").option("path", sunk)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0).toLong
-      require(batches == 2,
-        s"q250 staged 2 wave files but streamed $batches micro-batches")
-    } } finally {
-      graft.sources.Scratch.delete(spark, ck)
+        Drain.run(idleSummaries(spark,
+            spark.readStream.schema(idleSchema)
+              .option("maxFilesPerTrigger", "1").json(drop))
+          .writeStream.format("parquet").option("path", sunk), ck)
+      }
     }
     readBack(spark, sunk)
   }

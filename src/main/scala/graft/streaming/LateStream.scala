@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Watermark LATE-DATA accounting (q243) — the one streaming semantic
@@ -110,27 +109,14 @@ object LateStream {
       EventStream.stageWaveFiles(spark, staged,
         Seq("event_id", "ts", "event_type"), 3, d)
     }
-    val ck = graft.sources.Scratch.dir(spark, "q243_ck")
-    try StatePartitions.scoped(spark) {
-      val q = windowedCounts(
+    val progress = Drain.scratch(spark, "q243", 3, 1)(Drain.run(
+      windowedCounts(
           spark.readStream.schema(lateSchema)
             .option("maxFilesPerTrigger", "1").json(drop))
-        .writeStream.format("parquet").option("path", sunk)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0).toLong
-      require(batches == 3,
-        s"q243 staged 3 wave files but streamed $batches micro-batches")
-      val dropped = q.recentProgress
-        .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
-      require(dropped > 0,
-        "q243 ran without dropping any late rows — the schedule no " +
-          "longer exercises the watermark drop path")
-    } finally {
-      graft.sources.Scratch.delete(spark, ck)
-    }
+        .writeStream.format("parquet").option("path", sunk), _))
+    require(Drain.droppedByWatermark(progress) > 0,
+      "q243 ran without dropping any late rows — the schedule no " +
+        "longer exercises the watermark drop path")
     readBack(spark, sunk)
   }
 

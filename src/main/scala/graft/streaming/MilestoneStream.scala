@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 import org.apache.spark.sql.types._
 
 /** Per-key milestone crossings via `transformWithState` (q246) — the
@@ -92,22 +92,13 @@ object MilestoneStream {
   def milestoneQuery(spark: SparkSession, dir: String): DataFrame = {
     val sunk = graft.sources.Scratch.dirOutliving(spark, "q246_sunk")
     val drop = EventStream.stageSecondWaves(spark, dir) // shared w/ q244
-    val ck = graft.sources.Scratch.dir(spark, "q246_ck")
-    try StatePartitions.scoped(spark) {
+    Drain.scratch(spark, "q246", 2, 1) { ck =>
       EventStream.withRocksDbProvider(spark) {
-      val q = milestones(spark,
-          spark.readStream.schema(milestoneSchema)
-            .option("maxFilesPerTrigger", "1").json(drop))
-        .writeStream.format("parquet").option("path", sunk)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0).toLong
-      require(batches == 2,
-        s"q246 staged 2 wave files but streamed $batches micro-batches")
-    } } finally {
-      graft.sources.Scratch.delete(spark, ck)
+        Drain.run(milestones(spark,
+            spark.readStream.schema(milestoneSchema)
+              .option("maxFilesPerTrigger", "1").json(drop))
+          .writeStream.format("parquet").option("path", sunk), ck)
+      }
     }
     readBack(spark, sunk)
   }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.quality.DataQuality
 
 /** Streaming data-quality monitor — the q138 rule-assertion suite
@@ -22,18 +21,14 @@ object MonitorStream {
     * set per micro-batch under `monitorDir/batch=<id>`. */
   def monitorAvailableNow(spark: SparkSession, dropDir: String,
       monitorDir: String, checkpoint: String): Unit = {
-    val q = EventStream.readEventStream(spark, dropDir)
+    Drain.run(EventStream.readEventStream(spark, dropDir)
       .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         DataQuality.assertionSuite(withRuleColumns(batch))
           .write.mode("overwrite")
           .parquet(s"$monitorDir/batch=$batchId")
         ()
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpoint)
   }
 
   /** Normalize a stream batch for the rule suite: derive `ts_ms` and

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig}
+import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 
 /** Per-key RUN DETECTION via `transformWithState` with LIST state —
   * the CEP-lite "N consecutive events of the same kind" trigger (three
@@ -86,22 +86,13 @@ object RunStream {
   def typeRunsQuery(spark: SparkSession, dir: String): DataFrame = {
     val sunk = graft.sources.Scratch.dirOutliving(spark, "q271_sunk")
     val drop = EventStream.stageTypedSecondWaves(spark, dir)
-    val ck = graft.sources.Scratch.dir(spark, "q271_ck")
-    try StatePartitions.scoped(spark) {
+    Drain.scratch(spark, "q271", 2, 1) { ck =>
       EventStream.withRocksDbProvider(spark) {
-      val q = typeRuns(spark,
-          spark.readStream.schema(IdleCloseStream.idleSchema)
-            .option("maxFilesPerTrigger", "1").json(drop))
-        .writeStream.format("parquet").option("path", sunk)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0).toLong
-      require(batches == 2,
-        s"q271 staged 2 wave files but streamed $batches micro-batches")
-    } } finally {
-      graft.sources.Scratch.delete(spark, ck)
+        Drain.run(typeRuns(spark,
+            spark.readStream.schema(IdleCloseStream.idleSchema)
+              .option("maxFilesPerTrigger", "1").json(drop))
+          .writeStream.format("parquet").option("path", sunk), ck)
+      }
     }
     readBack(spark, sunk)
   }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Built-in `session_window` sessionization (q244) — the Spark-native
@@ -73,6 +72,15 @@ object SessionStream {
         unix_millis(col("session_window.end")).as("sess_end_ms"),
         col("n"))
 
+  /** Drain a wave drop one file per micro-batch through
+    * [[sessionCounts]] into the parquet sink `sunk` (q244, q278, q286). */
+  private def drainSessions(spark: SparkSession, drop: String,
+      sunk: String, ck: String) =
+    Drain.run(sessionCounts(
+        spark.readStream.schema(sessSchema)
+          .option("maxFilesPerTrigger", "1").json(drop))
+      .writeStream.format("parquet").option("path", sunk), ck)
+
   /** q244: stage events in two median-split waves, drain through
     * [[sessionCounts]], return the emitted (closed) sessions. */
   def sessionWindowQuery(spark: SparkSession, dir: String): DataFrame = {
@@ -80,26 +88,10 @@ object SessionStream {
     // "sec_waves2": shared with q246 — both drain the same
     // (event_id, user_id, second-floored ts) median-split schedule
     val drop = EventStream.stageSecondWaves(spark, dir)
-    val ck = graft.sources.Scratch.dir(spark, "q244_ck")
-    try StatePartitions.scoped(spark) {
-      val q = sessionCounts(
-          spark.readStream.schema(sessSchema)
-            .option("maxFilesPerTrigger", "1").json(drop))
-        .writeStream.format("parquet").option("path", sunk)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0).toLong
-      require(batches == 2,
-        s"q244 staged 2 wave files but streamed $batches micro-batches")
-      val dropped = q.recentProgress
-        .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
-      require(dropped == 0,
-        s"q244's in-order schedule must never drop rows, saw $dropped")
-    } finally {
-      graft.sources.Scratch.delete(spark, ck)
-    }
+    val dropped = Drain.droppedByWatermark(
+      Drain.scratch(spark, "q244", 2, 1)(drainSessions(spark, drop, sunk, _)))
+    require(dropped == 0,
+      s"q244's in-order schedule must never drop rows, saw $dropped")
     readBack(spark, sunk)
   }
 
@@ -170,46 +162,26 @@ object SessionStream {
       label: String): DataFrame = {
     val sunk = graft.sources.Scratch.dirOutliving(spark, s"${label}_sunk")
     val drop = stageSessionWaves(spark, dir)
-    val ck = graft.sources.Scratch.dir(spark, s"${label}_ck")
-    try StatePartitions.scoped(spark) {
-      val q = sessionCounts(
-          spark.readStream.schema(sessSchema)
-            .option("maxFilesPerTrigger", "1").json(drop))
-        .writeStream.format("parquet").option("path", sunk)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0).toLong
-      require(batches == SessEvictWaves,
-        s"$label staged $SessEvictWaves wave files but streamed " +
-          s"$batches micro-batches")
-      val dropped = q.recentProgress
-        .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
-      require(dropped == 0,
-        s"$label's in-order schedule must never drop rows, saw $dropped")
-      // the eviction claim, measured live: open-session state must
-      // stay under half the staged feed (q244's 2-wave drain peaks at
-      // ~half — the per-batch working set this drain divides)
-      val peakState = q.recentProgress
-        .map(_.stateOperators.map(_.numRowsTotal).sum).max
-      val staged = spark.read.schema(sessSchema).json(drop).count()
-      require(peakState * 2 < staged,
-        s"$label session store peaked at $peakState rows for $staged " +
-          "staged — sessions never closed between waves")
-      // the mid-drain claim: sessions must EMIT while input is still
-      // flowing (append-mode close), not only at the final no-data
-      // batch — numRowsRemoved is populated by the session store on
-      // close (measured at sf0.001 before this was pinned)
-      val midDrainRemoved = q.recentProgress
-        .filter(_.numInputRows > 0)
-        .map(_.stateOperators.map(_.numRowsRemoved).sum).sum
-      require(midDrainRemoved > 0,
-        s"$label removed no session rows during the input waves — " +
-          "closure never fired mid-drain")
-    } finally {
-      graft.sources.Scratch.delete(spark, ck)
-    }
+    val progress = Drain.scratch(spark, label, SessEvictWaves, 1)(
+      drainSessions(spark, drop, sunk, _))
+    val dropped = Drain.droppedByWatermark(progress)
+    require(dropped == 0,
+      s"$label's in-order schedule must never drop rows, saw $dropped")
+    // the eviction claim, measured live: open-session state must
+    // stay under half the staged feed (q244's 2-wave drain peaks at
+    // ~half — the per-batch working set this drain divides)
+    val peakState = Drain.peakStateRows(progress)
+    val staged = spark.read.schema(sessSchema).json(drop).count()
+    require(peakState * 2 < staged,
+      s"$label session store peaked at $peakState rows for $staged " +
+        "staged — sessions never closed between waves")
+    // the mid-drain claim: sessions must EMIT while input is still
+    // flowing (append-mode close), not only at the final no-data
+    // batch — numRowsRemoved is populated by the session store on
+    // close (measured at sf0.001 before this was pinned)
+    require(Drain.removedWhileInputFlowed(progress) > 0,
+      s"$label removed no session rows during the input waves — " +
+        "closure never fired mid-drain")
     readBack(spark, sunk)
   }
 

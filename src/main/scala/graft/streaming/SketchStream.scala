@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.operators.{CorpusStats, Maintenance}
 
 /** Streaming count-min-sketch maintenance — the incremental twin of
@@ -29,17 +28,13 @@ object SketchStream {
     * per micro-batch under `gridDir/batch=<id>`. */
   def cmsAvailableNow(spark: SparkSession, dropDir: String,
       gridDir: String, checkpoint: String): Unit = {
-    val q = DocStream.readDocStream(spark, dropDir)
+    Drain.run(DocStream.readDocStream(spark, dropDir)
       .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         CorpusStats.cmsGrid(batch)
           .write.mode("overwrite").parquet(s"$gridDir/batch=$batchId")
         ()
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpoint)
   }
 
   /** The merged corpus grid: cell-wise sum of every batch partial. */
@@ -60,18 +55,14 @@ object SketchStream {
     * overwrite discipline is kept anyway for sink hygiene. */
   def hllAvailableNow(spark: SparkSession, dropDir: String,
       regDir: String, checkpoint: String): Unit = {
-    val q = EventStream.readEventStream(spark, dropDir)
+    Drain.run(EventStream.readEventStream(spark, dropDir)
       .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.operators.DistinctSketch
           .registers(batch, "event_type", "user_id")
           .write.mode("overwrite").parquet(s"$regDir/batch=$batchId")
         ()
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpoint)
   }
 
   /** The merged register table: per-register max of every batch
@@ -96,19 +87,15 @@ object SketchStream {
     * discipline as the CMS path. */
   def agmsAvailableNow(spark: SparkSession, dropDir: String,
       gridDir: String, checkpoint: String): Unit = {
-    val q = EventStream.readEventStream(spark, dropDir)
+    Drain.run(EventStream.readEventStream(spark, dropDir)
       .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.operators.JoinStrategies.agmsCells(
             batch.groupBy(col("user_id")).agg(count(lit(1)).as("cnt"))
               .select(col("user_id").cast("string").as("k"), col("cnt")))
           .write.mode("overwrite").parquet(s"$gridDir/batch=$batchId")
         ()
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpoint)
   }
 
   /** The merged signed grid: cell-wise sum of every batch partial. */

@@ -41,9 +41,11 @@ object StatePartitions {
     sys.env.get("SPARK_GRAFT_DRAIN_PARTITIONS").map(_.trim.toInt)
       .getOrElse(math.max(2, spark.sparkContext.defaultParallelism / 4))
 
-  /** Run `body` (stage + start + await one streaming drain) with
-    * `spark.sql.shuffle.partitions` loaned down to `n` (default
-    * [[drainPartitions]]). */
+  /** Run `body` with `spark.sql.shuffle.partitions` loaned down to
+    * `n` (default [[drainPartitions]]). Its caller is the scratch
+    * drain ([[Drain.scratch]] through [[Drain.scratchCheckpoint]]),
+    * which creates the fresh checkpoint the loan needs and runs the
+    * whole drain inside it. */
   def scoped[T](spark: SparkSession, n: Int = -1)(
       body: => T): T = {
     val key = "spark.sql.shuffle.partitions"

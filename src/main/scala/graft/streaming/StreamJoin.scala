@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 /** Watermarked stream-stream join — the correlation operator for two
@@ -136,11 +135,21 @@ object StreamJoin {
       .repartition(JoinDropFiles).write.mode("overwrite").json(drop)
   }
 
-  /** One side of the dual-stream read over the shared drop. */
+  /** Attribution pairs rolled up into hourly click-time windows — the
+    * chained join→window pipeline of q252/q279/q281. */
+  private def joinedWindows(pairs: DataFrame): DataFrame =
+    pairs.groupBy(window(col("click_ts"), "3600 seconds"))
+      .agg(count(lit(1)).cast("long").as("n_pairs"))
+      .select(unix_millis(col("window.start")).as("window_ms"),
+        col("n_pairs"))
+
+  /** One side of the dual-stream read over a click/purchase drop:
+    * the single-batch drop ([[JoinFilesPerTrigger]]) or a wave drop
+    * read one file per micro-batch (the eviction drains). */
   private def joinSide(spark: SparkSession, drop: String,
-      eventType: String): DataFrame = spark.readStream
+      eventType: String, filesPerTrigger: Int): DataFrame = spark.readStream
     .schema(joinDropSchema)
-    .option("maxFilesPerTrigger", JoinFilesPerTrigger.toString)
+    .option("maxFilesPerTrigger", filesPerTrigger.toString)
     .json(drop)
     .filter(col("event_type") === eventType)
     .select(col("event_id"), timestamp_millis(col("t")).as("ts"),
@@ -160,20 +169,15 @@ object StreamJoin {
     val sunk = graft.sources.Scratch.dirOutliving(spark, "q229_sunk")
     val drop = StagedDrops.shared(spark, "join_ms", dir)(
       stageJoinDrop(spark, dir, _, floorSeconds = false))
-    val ck = graft.sources.Scratch.dir(spark, "q229_ck")
     // 4 join stores per partition, re-committed per batch — the loan
     // cuts the single batch's fixed store overhead ([[StatePartitions]])
-    try StatePartitions.scoped(spark) {
+    Drain.scratch(spark, "q229", JoinDropFiles, JoinFilesPerTrigger) { ck =>
       def side(eventType: String): DataFrame =
-        joinSide(spark, drop, eventType)
-      val q = clickPurchaseJoin(side("click"), side("purchase"),
+        joinSide(spark, drop, eventType, JoinFilesPerTrigger)
+      Drain.run(clickPurchaseJoin(side("click"), side("purchase"),
           AttributionMinutes)
-        .writeStream.format("parquet").option("path", sunk)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally graft.sources.Scratch.delete(spark, ck)
+        .writeStream.format("parquet").option("path", sunk), ck)
+    }
     joinReadBack(spark, sunk)
   }
 
@@ -226,18 +230,13 @@ object StreamJoin {
     val sunk = graft.sources.Scratch.dirOutliving(spark, "q251_sunk")
     val drop = StagedDrops.shared(spark, "join_sec", dir)(
       stageJoinDrop(spark, dir, _, floorSeconds = true))
-    val ck = graft.sources.Scratch.dir(spark, "q251_ck")
-    try StatePartitions.scoped(spark) {
+    Drain.scratch(spark, "q251", JoinDropFiles, JoinFilesPerTrigger) { ck =>
       def side(eventType: String): DataFrame =
-        joinSide(spark, drop, eventType)
-      val q = clickPurchaseLeftJoin(side("click"), side("purchase"),
+        joinSide(spark, drop, eventType, JoinFilesPerTrigger)
+      Drain.run(clickPurchaseLeftJoin(side("click"), side("purchase"),
           AttributionMinutes, s"$LeftJoinHorizonMs milliseconds")
-        .writeStream.format("parquet").option("path", sunk)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally graft.sources.Scratch.delete(spark, ck)
+        .writeStream.format("parquet").option("path", sunk), ck)
+    }
     // drain-side assertion, NOT part of the read-back: the outer path
     // must actually have been exercised by this drain
     val nulls = spark.read.schema(joinSinkSchema).parquet(sunk)
@@ -300,23 +299,16 @@ object StreamJoin {
     val sunk = graft.sources.Scratch.dirOutliving(spark, "q252_sunk")
     val drop = StagedDrops.shared(spark, "join_sec", dir)(
       stageJoinDrop(spark, dir, _, floorSeconds = true))
-    val ck = graft.sources.Scratch.dir(spark, "q252_ck")
     // two state stores (join + window agg) per partition, 2 batches
-    try StatePartitions.scoped(spark) {
+    // (one with data, one no-data batch that closes windows)
+    Drain.scratch(spark, "q252", JoinDropFiles, JoinFilesPerTrigger) { ck =>
       def side(eventType: String): DataFrame =
-        joinSide(spark, drop, eventType)
-      val q = clickPurchaseJoin(side("click"), side("purchase"),
-          AttributionMinutes, s"$LeftJoinHorizonMs milliseconds")
-        .groupBy(window(col("click_ts"), "3600 seconds"))
-        .agg(count(lit(1)).cast("long").as("n_pairs"))
-        .select(unix_millis(col("window.start")).as("window_ms"),
-          col("n_pairs"))
-        .writeStream.format("parquet").option("path", sunk)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally graft.sources.Scratch.delete(spark, ck)
+        joinSide(spark, drop, eventType, JoinFilesPerTrigger)
+      Drain.run(joinedWindows(clickPurchaseJoin(side("click"),
+          side("purchase"), AttributionMinutes,
+          s"$LeftJoinHorizonMs milliseconds"))
+        .writeStream.format("parquet").option("path", sunk), ck)
+    }
     joinedWindowReadBack(spark, sunk)
   }
 
@@ -420,39 +412,22 @@ object StreamJoin {
   def evictionJoinQuery(spark: SparkSession, dir: String): DataFrame = {
     val sunk = graft.sources.Scratch.dirOutliving(spark, "q273_sunk")
     val drop = stageJoinWaves(spark, dir)
-    val ck = graft.sources.Scratch.dir(spark, "q273_ck")
     // 6 batches × 4 join stores per partition re-committed each batch
     // — the fixed overhead [[StatePartitions]] documents (its measured
     // numbers came from THIS drain)
-    try StatePartitions.scoped(spark) {
-      def side(eventType: String): DataFrame = spark.readStream
-        .schema(joinDropSchema)
-        .option("maxFilesPerTrigger", "1")
-        .json(drop)
-        .filter(col("event_type") === eventType)
-        .select(col("event_id"), timestamp_millis(col("t")).as("ts"),
-          col("user_id"), col("value"))
-      val q = clickPurchaseJoin(side("click"), side("purchase"),
-          AttributionMinutes, s"$EvictDelayMs milliseconds")
-        .writeStream.format("parquet").option("path", sunk)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0).toLong
-      require(batches == EvictWaves,
-        s"q273 staged $EvictWaves wave files but streamed $batches " +
-          "micro-batches")
-      // the eviction claim, measured live: the join buffer must never
-      // hold more than half the staged feed (a non-evicting drain
-      // holds 100% — q229's measured single-batch peak)
-      val peakState = q.recentProgress
-        .map(_.stateOperators.map(_.numRowsTotal).sum).max
-      val staged = spark.read.schema(joinDropSchema).json(drop).count()
-      require(peakState * 2 < staged,
-        s"q273 join buffer peaked at $peakState rows for $staged " +
-          "staged — watermark eviction never freed state between batches")
-    } finally graft.sources.Scratch.delete(spark, ck)
+    val progress = Drain.scratch(spark, "q273", EvictWaves, 1)(Drain.run(
+      clickPurchaseJoin(joinSide(spark, drop, "click", 1),
+          joinSide(spark, drop, "purchase", 1), AttributionMinutes,
+          s"$EvictDelayMs milliseconds")
+        .writeStream.format("parquet").option("path", sunk), _))
+    // the eviction claim, measured live: the join buffer must never
+    // hold more than half the staged feed (a non-evicting drain
+    // holds 100% — q229's measured single-batch peak)
+    val peakState = Drain.peakStateRows(progress)
+    val staged = spark.read.schema(joinDropSchema).json(drop).count()
+    require(peakState * 2 < staged,
+      s"q273 join buffer peaked at $peakState rows for $staged " +
+        "staged — watermark eviction never freed state between batches")
     joinReadBack(spark, sunk)
   }
 
@@ -520,57 +495,37 @@ object StreamJoin {
       join: (DataFrame, DataFrame) => DataFrame): String = {
     val sunk = graft.sources.Scratch.dirOutliving(spark, s"${label}_sunk")
     val drop = stageOuterJoinWaves(spark, dir)
-    val ck = graft.sources.Scratch.dir(spark, s"${label}_ck")
-    try StatePartitions.scoped(spark) {
-      def side(eventType: String): DataFrame = spark.readStream
-        .schema(joinDropSchema)
-        .option("maxFilesPerTrigger", "1")
-        .json(drop)
-        .filter(col("event_type") === eventType)
-        .select(col("event_id"), timestamp_millis(col("t")).as("ts"),
-          col("user_id"), col("value"))
-      val q = join(side("click"), side("purchase"))
-        .writeStream.format("parquet").option("path", sunk)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0).toLong
-      require(batches == EvictWaves,
-        s"$label staged $EvictWaves wave files but streamed $batches " +
-          "micro-batches")
-      val peakState = q.recentProgress
-        .map(_.stateOperators.map(_.numRowsTotal).sum).max
-      val staged = spark.read.schema(joinDropSchema).json(drop).count()
-      require(peakState * 2 < staged,
-        s"$label join buffer peaked at $peakState rows for $staged " +
-          "staged — watermark eviction never freed state between batches")
-      // Inferred from TOTALS (cumulative arrivals minus resident
-      // rows), not the numRowsRemoved metric: every input row of an
-      // interval join enters one side's buffer, so cum − total is
-      // exactly the rows shed so far — and the full-outer eviction
-      // path does not populate numRowsRemoved in this Spark version
-      // (measured on q277: totals shrink batch to batch while the
-      // metric stays 0; the left-outer path does populate it).
-      val inputBatches = q.recentProgress
-        .filter(_.numInputRows > 0).sortBy(_.batchId)
-      val midDrainShed = inputBatches.zipWithIndex.map {
-        case (pr, i) =>
-          inputBatches.take(i + 1).map(_.numInputRows).sum -
-            pr.stateOperators.map(_.numRowsTotal).sum
-      }.max
-      require(midDrainShed > 0,
-        s"$label shed no state rows during the input waves — the " +
-          "watermark never frees the buffer mid-drain")
-      if (assertRemovedMetric) {
-        val midDrainRemoved = inputBatches
-          .map(_.stateOperators.map(_.numRowsRemoved).sum).sum
-        require(midDrainRemoved > 0,
-          s"$label reported numRowsRemoved = 0 across the input waves " +
-            "— the store's own removal counter must confirm the " +
-            "totals-inferred shedding")
-      }
-    } finally graft.sources.Scratch.delete(spark, ck)
+    val progress = Drain.scratch(spark, label, EvictWaves, 1)(Drain.run(
+      join(joinSide(spark, drop, "click", 1),
+          joinSide(spark, drop, "purchase", 1))
+        .writeStream.format("parquet").option("path", sunk), _))
+    val peakState = Drain.peakStateRows(progress)
+    val staged = spark.read.schema(joinDropSchema).json(drop).count()
+    require(peakState * 2 < staged,
+      s"$label join buffer peaked at $peakState rows for $staged " +
+        "staged — watermark eviction never freed state between batches")
+    // Inferred from TOTALS (cumulative arrivals minus resident
+    // rows), not the numRowsRemoved metric: every input row of an
+    // interval join enters one side's buffer, so cum − total is
+    // exactly the rows shed so far — and the full-outer eviction
+    // path does not populate numRowsRemoved in this Spark version
+    // (measured on q277: totals shrink batch to batch while the
+    // metric stays 0; the left-outer path does populate it).
+    val inputBatches = progress
+      .filter(_.numInputRows > 0).sortBy(_.batchId)
+    val midDrainShed = inputBatches.zipWithIndex.map {
+      case (pr, i) =>
+        inputBatches.take(i + 1).map(_.numInputRows).sum -
+          pr.stateOperators.map(_.numRowsTotal).sum
+    }.max
+    require(midDrainShed > 0,
+      s"$label shed no state rows during the input waves — the " +
+        "watermark never frees the buffer mid-drain")
+    require(!assertRemovedMetric ||
+        Drain.removedWhileInputFlowed(progress) > 0,
+      s"$label reported numRowsRemoved = 0 across the input waves " +
+        "— the store's own removal counter must confirm the " +
+        "totals-inferred shedding")
     sunk
   }
 
@@ -667,53 +622,29 @@ object StreamJoin {
       label: String): DataFrame = {
     val sunk = graft.sources.Scratch.dirOutliving(spark, s"${label}_sunk")
     val drop = stageOuterJoinWaves(spark, dir)
-    val ck = graft.sources.Scratch.dir(spark, s"${label}_ck")
-    try StatePartitions.scoped(spark) {
-      def side(eventType: String): DataFrame = spark.readStream
-        .schema(joinDropSchema)
-        .option("maxFilesPerTrigger", "1")
-        .json(drop)
-        .filter(col("event_type") === eventType)
-        .select(col("event_id"), timestamp_millis(col("t")).as("ts"),
-          col("user_id"), col("value"))
-      val q = clickPurchaseJoin(side("click"), side("purchase"),
-          AttributionMinutes, s"$LeftJoinHorizonMs milliseconds")
-        .groupBy(window(col("click_ts"), "3600 seconds"))
-        .agg(count(lit(1)).cast("long").as("n_pairs"))
-        .select(unix_millis(col("window.start")).as("window_ms"),
-          col("n_pairs"))
-        .writeStream.format("parquet").option("path", sunk)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0).toLong
-      require(batches == EvictWaves,
-        s"$label staged $EvictWaves wave files but streamed $batches " +
-          "micro-batches")
-      // the eviction claim, measured live across BOTH stores: summed
-      // peak state must stay under half the staged feed (q252's
-      // 2-batch drain peaks at the whole feed + open windows)
-      val peakState = q.recentProgress
-        .map(_.stateOperators.map(_.numRowsTotal).sum).max
-      val staged = spark.read.schema(joinDropSchema).json(drop).count()
-      require(peakState * 2 < staged,
-        s"$label chained stores peaked at $peakState rows for $staged " +
-          "staged — neither eviction nor window close freed state " +
-          "between batches")
-      // mid-drain shedding, measured on the stores' own counters:
-      // rows must be REMOVED during input-carrying batches (the
-      // inner-join buffer populates numRowsRemoved on eviction —
-      // unlike the full-outer path, see drainEvictionJoin — and the
-      // window store populates it on close). The file sink reports
-      // numOutputRows = -1, so sink-side emission is not observable.
-      val midDrainRemoved = q.recentProgress
-        .filter(_.numInputRows > 0)
-        .map(_.stateOperators.map(_.numRowsRemoved).sum).sum
-      require(midDrainRemoved > 0,
-        s"$label removed no state rows during the input waves — " +
-          "neither eviction nor window close fired mid-drain")
-    } finally graft.sources.Scratch.delete(spark, ck)
+    val progress = Drain.scratch(spark, label, EvictWaves, 1)(Drain.run(
+      joinedWindows(clickPurchaseJoin(joinSide(spark, drop, "click", 1),
+          joinSide(spark, drop, "purchase", 1), AttributionMinutes,
+          s"$LeftJoinHorizonMs milliseconds"))
+        .writeStream.format("parquet").option("path", sunk), _))
+    // the eviction claim, measured live across BOTH stores: summed
+    // peak state must stay under half the staged feed (q252's
+    // 2-batch drain peaks at the whole feed + open windows)
+    val peakState = Drain.peakStateRows(progress)
+    val staged = spark.read.schema(joinDropSchema).json(drop).count()
+    require(peakState * 2 < staged,
+      s"$label chained stores peaked at $peakState rows for $staged " +
+        "staged — neither eviction nor window close freed state " +
+        "between batches")
+    // mid-drain shedding, measured on the stores' own counters:
+    // rows must be REMOVED during input-carrying batches (the
+    // inner-join buffer populates numRowsRemoved on eviction —
+    // unlike the full-outer path, see drainEvictionJoin — and the
+    // window store populates it on close). The file sink reports
+    // numOutputRows = -1, so sink-side emission is not observable.
+    require(Drain.removedWhileInputFlowed(progress) > 0,
+      s"$label removed no state rows during the input waves — " +
+        "neither eviction nor window close fired mid-drain")
     joinedWindowReadBack(spark, sunk)
   }
 

@@ -160,8 +160,7 @@ object TtlStream {
         }
         .start()
       try {
-        def dataBatches(): Long =
-          q.recentProgress.count(_.numInputRows > 0).toLong
+        def dataBatches(): Long = Drain.dataBatches(q.recentProgress)
         def removedSoFar(): Long = q.recentProgress
           .flatMap(_.stateOperators)
           .flatMap(so => Option(so.customMetrics)
@@ -196,19 +195,19 @@ object TtlStream {
   def ttlCacheQuery(spark: SparkSession, dir: String): DataFrame = {
     val sunk = graft.sources.Scratch.dirOutliving(spark, "q275_sunk")
     val drop = stageTypedWaves3(spark, dir)
-    val ck = graft.sources.Scratch.dir(spark, "q275_ck")
-    try StatePartitions.scoped(spark) {
-      val stats = drainTtl(spark, drop, sunk, ck, TtlMs)
-      // eviction must have PHYSICALLY happened (the TTL-cleanup
-      // metric), not just read-as-absent — otherwise the store still
-      // accumulates the all-time key space
-      require(stats.removed > 0,
-        "q275 drained without a single TTL-expired value removed — " +
-          "the eviction path was not exercised")
-      require(stats.finalStateRows < stats.peakStateRows,
-        s"q275 state store never shrank (peak=${stats.peakStateRows}, " +
-          s"final=${stats.finalStateRows}) — TTL cleanup freed nothing")
-    } finally graft.sources.Scratch.delete(spark, ck)
+    // drainTtl runs its own processing-time drain (see above), so
+    // only the scratch checkpoint and its loan come from Drain
+    val stats = Drain.scratchCheckpoint(spark, "q275")(
+      drainTtl(spark, drop, sunk, _, TtlMs))
+    // eviction must have PHYSICALLY happened (the TTL-cleanup
+    // metric), not just read-as-absent — otherwise the store still
+    // accumulates the all-time key space
+    require(stats.removed > 0,
+      "q275 drained without a single TTL-expired value removed — " +
+        "the eviction path was not exercised")
+    require(stats.finalStateRows < stats.peakStateRows,
+      s"q275 state store never shrank (peak=${stats.peakStateRows}, " +
+        s"final=${stats.finalStateRows}) — TTL cleanup freed nothing")
     readBack(spark, sunk)
   }
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 
 /** The two OUTPUT MODES the rest of the streaming family never uses
   * (every other drained query appends): UPDATE mode feeding an
@@ -39,7 +39,7 @@ object UpdateModeStream {
     * all batches ran — defined once so the two output-mode queries
     * cannot drift apart in their arrival schedules. */
   private def drainWaves(spark: SparkSession, dir: String,
-      label: String, ck: String)(
+      label: String)(
       attach: DataFrame => DataStreamWriter[org.apache.spark.sql.Row])
       : Unit = {
     val drop = StagedDrops.shared(spark, s"event_waves$Waves", dir) { d =>
@@ -53,21 +53,12 @@ object UpdateModeStream {
       EventStream.stageWaveFiles(spark, staged,
         Seq("event_id", "user_id", "event_type", "ts"), Waves, d)
     }
-    // shared by q256/q257: state re-commits per partition per wave
-    try StatePartitions.scoped(spark) {
-      val q = attach(spark.readStream
-          .schema(graft.streaming.IdleCloseStream.idleSchema)
-          .option("maxFilesPerTrigger", "1").json(drop))
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0).toLong
-      require(batches == Waves,
-        s"$label staged $Waves wave files but streamed $batches " +
-          "micro-batches — a single batch never exercises the " +
-          "second-batch overwrite")
-    } finally graft.sources.Scratch.delete(spark, ck)
+    // shared by q256/q257: state re-commits per partition per wave;
+    // a single batch would never exercise the second-batch overwrite
+    Drain.scratch(spark, label, Waves, 1)(Drain.run(
+      attach(spark.readStream
+        .schema(graft.streaming.IdleCloseStream.idleSchema)
+        .option("maxFilesPerTrigger", "1").json(drop)), _))
   }
 
   /** q256: hourly per-type counts in UPDATE mode, merged per batch
@@ -77,8 +68,7 @@ object UpdateModeStream {
     * which is the oracle. */
   def updateModeQuery(spark: SparkSession, dir: String): DataFrame = {
     val root = graft.sources.Scratch.dirOutliving(spark, "q256_table")
-    val ck = graft.sources.Scratch.dir(spark, "q256_ck")
-    drainWaves(spark, dir, "q256", ck) { stream =>
+    drainWaves(spark, dir, "q256") { stream =>
       stream
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).cast("long").as("n"))
@@ -156,8 +146,7 @@ object UpdateModeStream {
     * deterministically). */
   def completeModeQuery(spark: SparkSession, dir: String): DataFrame = {
     val root = graft.sources.Scratch.dirOutliving(spark, "q257_table")
-    val ck = graft.sources.Scratch.dir(spark, "q257_ck")
-    drainWaves(spark, dir, "q257", ck) { stream =>
+    drainWaves(spark, dir, "q257") { stream =>
       stream
         .groupBy(col("user_id"))
         .agg(count(lit(1)).cast("long").as("n"))

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming MERGE: maintain a keyed parquet table from a stream of
   * upserts — the continuous twin of
@@ -281,23 +281,25 @@ object UpsertStream {
   private[graft] def drainUpsertWaves(spark: SparkSession,
       drop: String, root: String, ck: String,
       failAfterMergeAt: Option[Long] = None,
-      retain: Int = 2): Long = {
-    val q = spark.readStream.schema(DocStream.docSchema)
+      retain: Int = 2): Long =
+    Drain.dataBatches(
+      upsertWaves(spark, drop, root, ck, failAfterMergeAt, retain)
+        .recentProgress)
+
+  /** [[drainUpsertWaves]]' drain, returning the terminated query. */
+  private def upsertWaves(spark: SparkSession, drop: String,
+      root: String, ck: String, failAfterMergeAt: Option[Long],
+      retain: Int): StreamingQuery =
+    Drain.run(spark.readStream.schema(DocStream.docSchema)
       .option("maxFilesPerTrigger", "1").json(drop)
       .writeStream
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         applyUpsertBatch(spark, root, batch, "doc_id", "ts", batchId,
           retain)
         if (failAfterMergeAt.contains(batchId))
           throw new IllegalStateException(
             s"injected crash after batch $batchId merge")
-      }
-      .start()
-    q.awaitTermination()
-    q.recentProgress.count(_.numInputRows > 0).toLong
-  }
+      }, ck)
 
   /** q253: the upsert SINK itself under oracle check (previously
     * unit-only). Events become an upsert feed — key = user_id (staged
@@ -315,16 +317,11 @@ object UpsertStream {
   def upsertQuery(spark: SparkSession, dir: String): DataFrame = {
     val root = graft.sources.Scratch.dirOutliving(spark, "q253_table")
     val drop = stageUpsertWaves(spark, dir)
-    val ck = graft.sources.Scratch.dir(spark, "q253_ck")
     // no state store here, but each foreachBatch merge shuffles at
-    // session width — the [[StatePartitions]] loan trims that too
-    try StatePartitions.scoped(spark) {
-      val batches = drainUpsertWaves(spark, drop, root, ck)
-      require(batches == Waves,
-        s"q253 staged $Waves wave files but streamed $batches " +
-          "micro-batches — a single batch never exercises the " +
-          "overwrite merge")
-    } finally graft.sources.Scratch.delete(spark, ck)
+    // session width — the [[StatePartitions]] loan trims that too.
+    // A single batch never exercises the overwrite merge.
+    Drain.scratch(spark, "q253", Waves, 1)(
+      upsertWaves(spark, drop, root, _, None, 2))
     // the retention claim, checked live: a crash-free 3-batch drain
     // ends with exactly {v1, v2} — batch 2's vacuum deleted v0, and
     // v1 survives because batch 2 could have replayed against it
@@ -388,14 +385,8 @@ object UpsertStream {
     val root = graft.sources.Scratch.dirOutliving(spark, "q265_table")
     val cdc = graft.sources.Scratch.dirOutliving(spark, "q265_cdc")
     val drop = stageUpsertWaves(spark, dir)
-    val ck = graft.sources.Scratch.dir(spark, "q265_ck")
-    try StatePartitions.scoped(spark) {
-      val batches = drainCdcWaves(spark, drop, root, cdc, ck)
-      require(batches == Waves,
-        s"q265 staged $Waves wave files but streamed $batches " +
-          "micro-batches — a single batch never exercises the update " +
-          "classification")
-    } finally graft.sources.Scratch.delete(spark, ck)
+    // a single batch never exercises the update classification
+    scratchCdcWaves(spark, "q265", drop, root, cdc)
     // retention fires through the CDC drain too (same merge path)
     val live = snapshotCount(spark, root)
     require(live == 2,
@@ -414,12 +405,19 @@ object UpsertStream {
   private[graft] def drainCdcWaves(spark: SparkSession, drop: String,
       root: String, cdc: String, ck: String,
       failAfterBatch: Option[Long] = None,
-      afterBatch: (String, Long) => Unit = (_, _) => ()): Long = {
-    val q = spark.readStream.schema(DocStream.docSchema)
+      afterBatch: (String, Long) => Unit = (_, _) => ()): Long =
+    Drain.dataBatches(
+      cdcWaves(spark, drop, root, cdc, ck, failAfterBatch, afterBatch)
+        .recentProgress)
+
+  /** [[drainCdcWaves]]' drain, returning the terminated query. */
+  private[graft] def cdcWaves(spark: SparkSession, drop: String,
+      root: String, cdc: String, ck: String,
+      failAfterBatch: Option[Long],
+      afterBatch: (String, Long) => Unit): StreamingQuery =
+    Drain.run(spark.readStream.schema(DocStream.docSchema)
       .option("maxFilesPerTrigger", "1").json(drop)
       .writeStream
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // batch feeds BOTH the CDC diff and the merge — persist so
         // the source scan runs once per micro-batch
@@ -462,11 +460,14 @@ object UpsertStream {
               s"injected crash after batch $batchId cdc+merge")
         } finally batch.unpersist()
         ()
-      }
-      .start()
-    q.awaitTermination()
-    q.recentProgress.count(_.numInputRows > 0).toLong
-  }
+      }, ck)
+
+  /** The crash-free CDC drain of the q-queries: [[cdcWaves]] over the
+    * staged [[Waves]] on a [[Drain.scratch]] checkpoint. */
+  private[graft] def scratchCdcWaves(spark: SparkSession, label: String,
+      drop: String, root: String, cdc: String): Unit =
+    Drain.scratch(spark, label, Waves, 1)(
+      cdcWaves(spark, drop, root, cdc, _, None, (_, _) => ()))
 
   /** Rows each q265 CDC partition holds. `batch` is the partition
     * column restored from the `batch=<id>` directory names on the
@@ -544,15 +545,11 @@ object UpsertStream {
   def upsertAvailableNow(spark: SparkSession, dropDir: String, root: String,
                          checkpoint: String, key: String,
                          version: String): Unit = {
-    val q = DocStream.readDocStream(spark, dropDir)
+    Drain.run(DocStream.readDocStream(spark, dropDir)
       .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         applyUpsertBatch(spark, root, batch, key, version, batchId)
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpoint)
   }
 
   /** q276: the INCREMENTAL CONSUMER the CDC log exists for — the
@@ -592,13 +589,7 @@ object UpsertStream {
     val root = graft.sources.Scratch.dirOutliving(spark, "q276_table")
     val cdc = graft.sources.Scratch.dirOutliving(spark, "q276_cdc")
     val drop = stageUpsertWaves(spark, dir)
-    val ck = graft.sources.Scratch.dir(spark, "q276_ck")
-    try StatePartitions.scoped(spark) {
-      val batches = drainCdcWaves(spark, drop, root, cdc, ck)
-      require(batches == Waves,
-        s"q276 staged $Waves wave files but streamed $batches " +
-          "micro-batches")
-    } finally graft.sources.Scratch.delete(spark, ck)
+    scratchCdcWaves(spark, "q276", drop, root, cdc)
     val log = readCdcLog(spark, cdc)
     val batchIds = log.select("batch").distinct()
       .collect().map(_.getInt(0)).sorted
@@ -984,13 +975,7 @@ object UpsertStream {
     val root = graft.sources.Scratch.dirOutliving(spark, "q280_table")
     val cdc = graft.sources.Scratch.dirOutliving(spark, "q280_cdc")
     val drop = stageUpsertWaves(spark, dir)
-    val ck = graft.sources.Scratch.dir(spark, "q280_ck")
-    try StatePartitions.scoped(spark) {
-      val batches = drainCdcWaves(spark, drop, root, cdc, ck)
-      require(batches == Waves,
-        s"q280 staged $Waves wave files but streamed $batches " +
-          "micro-batches")
-    } finally graft.sources.Scratch.delete(spark, ck)
+    scratchCdcWaves(spark, "q280", drop, root, cdc)
     // the consumer commits batches 0..1: its checkpoint (oldest
     // uncommitted) is 2, so compaction may fold {0, 1} and no more
     val fullLog = readCdcLog(spark, cdc)
@@ -1078,13 +1063,8 @@ object UpsertStream {
   def timeTravelQuery(spark: SparkSession, dir: String): DataFrame = {
     val root = graft.sources.Scratch.dirOutliving(spark, "q283_table")
     val drop = stageUpsertWaves(spark, dir)
-    val ck = graft.sources.Scratch.dir(spark, "q283_ck")
-    try StatePartitions.scoped(spark) {
-      val batches = drainUpsertWaves(spark, drop, root, ck)
-      require(batches == Waves,
-        s"q283 staged $Waves wave files but streamed $batches " +
-          "micro-batches")
-    } finally graft.sources.Scratch.delete(spark, ck)
+    Drain.scratch(spark, "q283", Waves, 1)(
+      upsertWaves(spark, drop, root, _, None, 2))
     val cur = currentSnapshot(spark, root)
       .getOrElse(sys.error(s"q283 drained but no snapshot under $root"))
     require(cur.endsWith(s"/v${Waves - 1}"),
@@ -1174,13 +1154,7 @@ object UpsertStream {
     val root = graft.sources.Scratch.dirOutliving(spark, "q284_table")
     val cdc = graft.sources.Scratch.dirOutliving(spark, "q284_cdc")
     val drop = stageUpsertWaves(spark, dir)
-    val ck = graft.sources.Scratch.dir(spark, "q284_ck")
-    try StatePartitions.scoped(spark) {
-      val batches = drainCdcWaves(spark, drop, root, cdc, ck)
-      require(batches == Waves,
-        s"q284 staged $Waves wave files but streamed $batches " +
-          "micro-batches")
-    } finally graft.sources.Scratch.delete(spark, ck)
+    scratchCdcWaves(spark, "q284", drop, root, cdc)
     // the full-log fold, captured before any partition is deleted —
     // the reference every per-step resume identity compares against
     val fullRef = foldOntoBase(None, readCdcLog(spark, cdc)
@@ -1295,14 +1269,8 @@ object UpsertStream {
   def retentionKQuery(spark: SparkSession, dir: String): DataFrame = {
     val root = graft.sources.Scratch.dirOutliving(spark, "q285_table")
     val drop = stageUpsertWavesN(spark, dir, WavesK)
-    val ck = graft.sources.Scratch.dir(spark, "q285_ck")
-    try StatePartitions.scoped(spark) {
-      val batches = drainUpsertWaves(spark, drop, root, ck,
-        retain = RetainK)
-      require(batches == WavesK,
-        s"q285 staged $WavesK wave files but streamed $batches " +
-          "micro-batches")
-    } finally graft.sources.Scratch.delete(spark, ck)
+    Drain.scratch(spark, "q285", WavesK, 1)(
+      upsertWaves(spark, drop, root, _, None, RetainK))
     val cur = currentSnapshot(spark, root)
       .getOrElse(sys.error(s"q285 drained but no snapshot under $root"))
     require(cur.endsWith(s"/v${WavesK - 1}"),
@@ -1356,13 +1324,7 @@ object UpsertStream {
     val root = graft.sources.Scratch.dirOutliving(spark, "q287_table")
     val cdc = graft.sources.Scratch.dirOutliving(spark, "q287_cdc")
     val drop = stageUpsertWaves(spark, dir)
-    val ck = graft.sources.Scratch.dir(spark, "q287_ck")
-    try StatePartitions.scoped(spark) {
-      val batches = drainCdcWaves(spark, drop, root, cdc, ck)
-      require(batches == Waves,
-        s"q287 staged $Waves wave files but streamed $batches " +
-          "micro-batches")
-    } finally graft.sources.Scratch.delete(spark, ck)
+    scratchCdcWaves(spark, "q287", drop, root, cdc)
     val stateRoot = graft.sources.Scratch.dirOutliving(spark, "q287_state")
     val retain = 2
     for (b <- 0L until Waves.toLong) {
@@ -1450,13 +1412,8 @@ object UpsertStream {
   def tableHistoryQuery(spark: SparkSession, dir: String): DataFrame = {
     val root = graft.sources.Scratch.dirOutliving(spark, "q293_table")
     val drop = stageUpsertWaves(spark, dir)
-    val ck = graft.sources.Scratch.dir(spark, "q293_ck")
-    try StatePartitions.scoped(spark) {
-      val batches = drainUpsertWaves(spark, drop, root, ck)
-      require(batches == Waves,
-        s"q293 staged $Waves wave files but streamed $batches " +
-          "micro-batches")
-    } finally graft.sources.Scratch.delete(spark, ck)
+    Drain.scratch(spark, "q293", Waves, 1)(
+      upsertWaves(spark, drop, root, _, None, 2))
     val h = tableHistory(spark, root)
     val rows = h.collect() // K rows — the retention window, bounded
     require(rows.map(_.getLong(0)).toSeq == Seq(1L, 2L),
