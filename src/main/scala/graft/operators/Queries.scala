@@ -275,7 +275,8 @@ object Queries {
     * balance_sheet_load.sql:22-26). The reference's window is constant-1
     * (ddate in both partition and order); this is the *sane* variant the
     * survey recommends — rank line items by recency within an order. The
-    * faithful constant-1 form is exercised in q21FactBuild. */
+    * reference's constant-1 rank is q21FactBuild's `rn`, which DuckDB's
+    * oracle computes as the real window. */
   def q09WindowRank(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("l_orderkey").orderBy(col("l_shipdate").desc)
     Tables.lineitem(spark, dir)
@@ -409,7 +410,12 @@ object Queries {
     * DENSE_RANK window → statement filter → grouped SUM. Preserves the
     * reference's semantic quirks deliberately:
     *   - the window partitions by the order key *and* orders by it →
-    *     rank ≡ 1 (reference puts ddate in both partition and order);
+    *     rank ≡ 1 (reference puts ddate in both partition and order),
+    *     so `rn` is the constant it always evaluates to, as in
+    *     [[graft.operators.SecFactTables]]: a literal 1 (IntegerType,
+    *     non-null, the type dense_rank has). The oracle SQL still
+    *     computes the real dense_rank, so the oracle check proves the
+    *     constant on this data shape;
     *   - grouping includes `rn` (a no-op, as in the reference).
     * num=lineitem, sub=orders, pre=part (p_type prefix plays `stmt`). */
   def q21FactBuild(spark: SparkSession, dir: String): DataFrame = {
@@ -420,11 +426,8 @@ object Queries {
       .join(sub, col("l_orderkey") === col("o_orderkey"))
       .join(pre, col("l_partkey") === col("p_partkey"))
       .filter(col("p_type").startsWith("STANDARD"))
-    val w = Window
-      .partitionBy("o_orderkey", "o_custkey", "p_brand", "l_shipdate")
-      .orderBy(col("l_shipdate").desc)
     joined
-      .withColumn("rn", dense_rank().over(w))
+      .withColumn("rn", lit(1))
       .groupBy(col("o_orderkey"), col("o_custkey"), col("p_brand"),
         date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_date"),
         col("rn"))

@@ -20,7 +20,9 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * At 100 TB (hundreds of quarters × entries) this is the difference
   * between a scalable ingest and a driver bottleneck. Decompression is
   * genuine per-file imperative logic, which is the one sanctioned use
-  * of a typed flatMap over built-in operators.
+  * of a typed flatMap over built-in operators. The quarter ingest
+  * lists the archives once and stamps the `source_file` lineage once
+  * per archive, not once per extracted row.
   *
   * Memory: `binaryFile` materializes one whole ZIP per row (Spark
   * caps rows at 2 GB); SEC quarter ZIPs are ~50-100 MB, so a task
@@ -41,18 +43,24 @@ object ZipIngest {
 
   /** Read one named TSV entry out of every ZIP matched by `zipGlob`
     * into a string-typed DataFrame with `columns` plus a `source_zip`
-    * lineage column. Column matching against the entry's own header is
-    * case-insensitive, first-occurrence-wins. */
+    * lineage column (the archive's path). Column matching against the
+    * entry's own header is case-insensitive, first-occurrence-wins. */
   def readZipTsv(spark: SparkSession, zipGlob: String, entry: String,
-                 columns: Seq[String]): DataFrame = {
+                 columns: Seq[String]): DataFrame =
+    entryRows(spark.read.format("binaryFile").load(zipGlob)
+      .select(col("path").as("source_zip"), col("content")), entry, columns)
+
+  /** The rows of `entry` in every archive of `archives`, a frame of
+    * (lineage string, ZIP bytes): `columns` plus the lineage column,
+    * named as in `archives` and carried unchanged onto each row. */
+  private def entryRows(archives: DataFrame, entry: String,
+                        columns: Seq[String]): DataFrame = {
     val outSchema = StructType(
       columns.map(StructField(_, StringType, nullable = true)) :+
-        StructField("source_zip", StringType, nullable = true))
+        StructField(archives.columns.head, StringType, nullable = true))
     val colsIdx = columns.toIndexedSeq
-    val bin = spark.read.format("binaryFile").load(zipGlob)
-      .select(col("path"), col("content"))
-    bin.flatMap { row =>
-      val path = row.getString(0)
+    archives.flatMap { row =>
+      val lineage = row.getString(0)
       val zis = new ZipInputStream(
         new ByteArrayInputStream(row.getAs[Array[Byte]](1)))
       val found = Iterator.continually(zis.getNextEntry)
@@ -82,7 +90,7 @@ object ZipIngest {
                   val v = parts(i); if (v.isEmpty) null else v
                 case _ => null
               }
-              Row.fromSeq(vals :+ path)
+              Row.fromSeq(vals :+ lineage)
             }
       }
     }(Encoders.row(outSchema))
@@ -92,17 +100,21 @@ object ZipIngest {
     * `zipGlob`: extract, apply the declared schema (permissive casts),
     * stamp the `source_file` lineage from the ZIP filename — the same
     * contract [[SecIngest.ingestQuarter]] provides for pre-extracted
-    * TSVs (reference stamps `source_id = f"{year}Q{quarter}"`). */
+    * TSVs (reference stamps `source_id = f"{year}Q{quarter}"`).
+    * The four frames share one `binaryFile` relation, so the glob is
+    * listed once; the file stem is matched once per archive against
+    * its `path` (`""` when the name does not end in `.zip`) and
+    * carried onto each of its rows. */
   def ingestQuarterZips(spark: SparkSession,
                         zipGlob: String): Map[String, DataFrame] = {
     val schemas = Map(
       "sub" -> SecSchemas.sub, "pre" -> SecSchemas.pre,
       "tag" -> SecSchemas.tag, "num" -> SecSchemas.num)
+    val archives = spark.read.format("binaryFile").load(zipGlob)
+      .select(regexp_extract(col("path"), "([^/]+)\\.zip$", 1).as("source_file"),
+        col("content"))
     schemas.map { case (name, schema) =>
-      val raw = readZipTsv(spark, zipGlob, s"$name.txt",
-        schema.fields.map(_.name).toSeq)
-        .withColumn("source_file",
-          regexp_extract(col("source_zip"), "([^/]+)\\.zip$", 1))
+      val raw = entryRows(archives, s"$name.txt", schema.fields.map(_.name).toSeq)
       val withLineage = StructType(schema.fields :+
         StructField("source_file", StringType, nullable = true))
       name -> SecIngest.typed(raw, withLineage)

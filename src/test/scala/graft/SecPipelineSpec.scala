@@ -125,6 +125,79 @@ class SecPipelineSpec extends SparkSpec {
     assert(ranked.filter(col("rn") =!= 1).count() == 0)
   }
 
+  test("fact build without the window equals the reference shape (W1)") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.expressions.Window
+    // The fixture quarter plus: null-ddate rows (one window partition
+    // of their own, two versions of one tag fanning out into it), a
+    // duplicated fact row and a two-version fan-out row on a CF line.
+    val extraNum = SecIngest.ingestQuarter(spark, writeFixture(fixtureDir,
+      "num_w1.txt", Seq(
+        SecSchemas.num.fieldNames.mkString("\t"),
+        "f1\tAssets\tus-gaap/2023\t\t0\tUSD\t\t\t7\t",
+        "f1\tAssets\tus-gaap/2022\t\t0\tUSD\t\t\t8\t",
+        "f1\tCash\tus-gaap/2023\t20230930\t0\tUSD\t\t\t250\t",
+        "f1\tCash\tus-gaap/2023\t20230930\t0\tUSD\t\t\t250\t",
+        "f1\tCash\tus-gaap/2022\t20230930\t0\tUSD\t\t\t40\t")),
+      SecSchemas.num, "2023Q4")
+    val extraPre = SecIngest.ingestQuarter(spark, writeFixture(fixtureDir,
+      "pre_w1.txt", Seq(
+        SecSchemas.pre.fieldNames.mkString("\t"),
+        "f1\t3\t1\tCF\t0\tH\tCash\tus-gaap/2023\tCash at end\t0")),
+      SecSchemas.pre, "2023Q4")
+    val num1 = num.unionByName(extraNum)
+    val pre1 = pre.unionByName(extraPre)
+    // balance_sheet_load.sql:22-53 as written: the DENSE_RANK window,
+    // then `rn` as a 13th group key.
+    def reference(stmt: String): DataFrame = {
+      val w = Window
+        .partitionBy(col("n.adsh"), col("s.cik"), col("s.name"),
+          col("s.filed"), col("s.fy"), col("s.fp"), col("n.tag"),
+          col("n.uom"), col("n.ddate"), col("n.qtrs"), col("p.stmt"),
+          col("p.plabel"))
+        .orderBy(col("n.ddate").desc)
+      num1.as("n")
+        .join(sub.as("s"), col("n.adsh") === col("s.adsh"))
+        .join(pre1.as("p"),
+          col("n.adsh") === col("p.adsh") && col("n.tag") === col("p.tag"))
+        .filter(col("p.stmt") === stmt)
+        .withColumn("rn", dense_rank().over(w))
+        .groupBy(col("n.adsh").as("adsh"), col("s.cik").as("cik"),
+          col("s.name").as("company_name"), col("s.filed").as("filing_date"),
+          col("s.fy").as("fiscal_year"), col("s.fp").as("fiscal_period"),
+          col("n.tag").as("tag"), col("n.uom").as("unit_of_measure"),
+          col("n.ddate").as("report_date"), col("n.qtrs").as("qtrs"),
+          col("p.stmt").as("statement_type"), col("p.plabel").as("plabel"),
+          col("rn"))
+        .agg(sum(col("n.value")).as("total_value"))
+        .drop("rn")
+    }
+    val plans = new AdaptiveSparkPlanHelper {}
+    def hasWindow(df: DataFrame): Boolean =
+      plans.find(df.queryExecution.executedPlan)(_.isInstanceOf[WindowExec]).nonEmpty
+    Seq("BS" -> 4, "IS" -> 2, "CF" -> 1).foreach { case (stmt, groups) =>
+      val ref = reference(stmt)
+      val got = SecFactTables.build(num1, sub, pre1, stmt)
+      assert(got.schema == ref.schema, stmt)
+      assert(got.count() == groups, stmt)
+      assert(got.exceptAll(ref).count() == 0, stmt)
+      assert(ref.exceptAll(got).count() == 0, stmt)
+      assert(hasWindow(ref), s"$stmt: the reference shape plans a window")
+      assert(!hasWindow(got), s"$stmt: build plans a window")
+    }
+    // the null-ddate rows form one group per plabel, both versions summed
+    val nullDdate = SecFactTables.build(num1, sub, pre1, "BS")
+      .filter(col("report_date").isNull).collect()
+    assert(nullDdate.map(_.getAs[java.math.BigDecimal]("total_value").doubleValue)
+      .toSeq == Seq(15.0, 15.0))
+    // the duplicated row and the 2022 version both land in one CF group
+    val cf = SecFactTables.cashFlow(num1, sub, pre1).collect()
+    assert(cf.map(_.getAs[java.math.BigDecimal]("total_value").doubleValue)
+      .toSeq == Seq(540.0))
+  }
+
   test("serving statement query joins WITH version (J1 vs J2 contrast)") {
     val q = SecServing.statementQuery(sub, pre, num, "IS")
     // With version in the key, only the matching-version Revenue row

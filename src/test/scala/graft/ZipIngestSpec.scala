@@ -89,6 +89,34 @@ class ZipIngestSpec extends SparkSpec {
     assert(tag.head.getAs[String]("doc") == "Revenue doc")
   }
 
+  test("lineage is the archive's file stem, under any directory name") {
+    // A directory whose own name holds `.zip` and dots, one archive
+    // named `<stem>.zip` and one whose name does not end in `.zip`.
+    val dir = new File(tmpDir("graftzips_lineage"), "x.zip.d")
+    dir.mkdirs()
+    val quarter = Map(
+      "sub.txt" -> "adsh\tcik\tname\n",
+      "tag.txt" -> "tag\tversion\n",
+      "pre.txt" -> "adsh\treport\tline\n",
+      "num.txt" -> "adsh\ttag\tversion\tvalue\n")
+    writeZip(new File(dir, "2023_Q3.zip"), quarter ++ Map(
+      "sub.txt" -> "adsh\tcik\tname\nc-1\t400\tDelta Co\n"))
+    writeZip(new File(dir, "2023_Q4.zip.bak"), quarter ++ Map(
+      "sub.txt" -> "adsh\tcik\tname\nd-1\t500\tEpsilon AG\n"))
+    val tables = ZipIngest.ingestQuarterZips(spark, dir.getAbsolutePath + "/*")
+    val lineage = tables("sub").collect().map(r =>
+      r.getAs[String]("adsh") -> r.getAs[String]("source_file")).toMap
+    assert(lineage == Map("c-1" -> "2023_Q3", "d-1" -> ""))
+    // the four frames share one listing of the archives
+    val leaves = tables.values.map(_.queryExecution.logical.collectLeaves())
+    assert(leaves.forall(_.size == 1))
+    assert(leaves.forall(_.head eq leaves.head.head))
+    // readZipTsv keeps the archive's path as its lineage
+    val paths = ZipIngest.readZipTsv(spark, dir.getAbsolutePath + "/*.zip",
+      "sub.txt", Seq("adsh")).collect().map(_.getAs[String]("source_zip"))
+    assert(paths.length == 1 && paths.head.endsWith("/x.zip.d/2023_Q3.zip"))
+  }
+
   test("q180 zip round-trip aggregate equals the direct aggregate") {
     import org.apache.spark.sql.functions._
     val rt = graft.operators.Extensions
