@@ -4,13 +4,18 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.column.ColumnReader
+import org.apache.parquet.column.statistics.LongStatistics
+import org.apache.parquet.filter.{RecordFilter, UnboundRecordFilter}
+import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.parquet.{DriverRowCodecs, ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
@@ -1033,13 +1038,17 @@ object Maintenance {
     idx.count()
   }
 
-  /** Keyed POINT LOOKUP through the skipping index: the `_skipindex`
-    * rows ([[skipIndexRows]] — file-count rows read on the driver, no
-    * Spark job) select the files whose [min, max] admits the probe,
-    * and ONLY those files are opened, under the data `schema` so the
-    * scan infers nothing. Cost: one sidecar read on the driver; the
-    * only Spark job is the caller's collect of the returned rows (one
-    * job when the candidates fit one scan partition). Files
+  /** Keyed POINT LOOKUP through the skipping index, as a Spark plan:
+    * the `_skipindex` rows ([[skipIndexRows]] — file-count rows read
+    * on the driver, no Spark job) select the files whose [min, max]
+    * admits the probe, and ONLY those files are opened, under the data
+    * `schema` so the scan infers nothing. Cost: one sidecar read on
+    * the driver; the only Spark job is the caller's collect of the
+    * returned rows (one job when the candidates fit one scan
+    * partition), plus the planning and code generation of a fresh
+    * plan. The serving route tries [[pointLookup]] first, which reads
+    * the same candidates on the driver with no job, and comes here
+    * when that declines (candidates over its byte cap). Files
     * with missing stats cannot be pruned and stay candidates —
     * absence of evidence never drops data. Returns (matching rows,
     * files opened, files total): on a key-clustered layout the open
@@ -1059,6 +1068,97 @@ object Maintenance {
       else reader.parquet(cand: _*).filter(col(key) === value)
     (rows, cand.length.toLong, idx.length.toLong)
   }
+
+  /** The most candidate row-group bytes (compressed, as the footers
+    * state them) a [[pointLookup]] decodes on the driver before it
+    * declines. Above it the read belongs on cancellable Spark jobs. */
+  val PointLookupMaxBytes: Long = 16L << 20
+
+  /** What a driver-side [[pointLookup]] found: the rows whose key
+    * equals the probe (copies, in file order), the candidate files
+    * opened, the files the index covers, and the row groups decoded. */
+  final case class PointRows(rows: IndexedSeq[InternalRow], opened: Long,
+      total: Long, groupsRead: Int)
+
+  /** Keyed POINT LOOKUP served on the driver with no Spark job. The
+    * `_skipindex` rows ([[skipIndexRows]]) pick the candidate files by
+    * the shared rule ([[candidateFiles]]); in each candidate, a row
+    * group whose key-column chunk statistics exclude `value` is
+    * skipped (a chunk without statistics is read, an all-null chunk
+    * never matches), and the rest are read through [[withParquet]]:
+    * the key column picks the records whose key equals `value` (a
+    * null key never matches) and only those are decoded, by Spark's
+    * own Parquet row converter under `schema`, so INT96 and rebase
+    * rules are exactly a scan's ([[DriverRowCodecs]]).
+    *
+    * None, and the caller takes the Spark path ([[indexedLookup]] or a
+    * scan), when `key` is not a bigint column of `schema`, when no
+    * index covers it, or when the candidates' admitted row groups
+    * exceed `maxBytes`: files are decoded as they are opened, so at
+    * most `maxBytes` are read before the decline. No metadata is
+    * cached: a sidecar can be rewritten on a committed snapshot. */
+  def pointLookup(spark: SparkSession, dir: String, key: String,
+      value: Long, schema: StructType, maxBytes: Long): Option[PointRows] = {
+    if (!schema.find(_.name == key).exists(_.dataType == LongType))
+      return None
+    val idx = skipIndexRows(spark, dir, key).getOrElse(return None)
+    val cand = candidateFiles(idx, value)
+    val conf = spark.sparkContext.hadoopConfiguration
+    var bytes = 0L
+    var groups = 0
+    val rows = IndexedSeq.newBuilder[InternalRow]
+    for (file <- cand) {
+      val fits = withParquet(conf, new Path(file)) { reader =>
+        val footer = reader.getFooter
+        val admitted = reader.getRowGroups.asScala.zipWithIndex.collect {
+          case (b, i) if admits(b, key, value) => (b, i)
+        }
+        bytes += admitted.map(_._1.getCompressedSize).sum
+        bytes <= maxBytes && {
+          val (requested, mat) = DriverRowCodecs.materializer(spark, footer, schema)
+          reader.setRequestedSchema(requested)
+          val io = new ColumnIOFactory(footer.getFileMetaData.getCreatedBy)
+            .getColumnIO(requested, footer.getFileMetaData.getSchema, true)
+          admitted.foreach { case (_, i) =>
+            val records = io.getRecordReader(reader.readRowGroup(i), mat,
+              keyEquals(key, value))
+            Iterator.continually(records.read()).takeWhile(_ != null)
+              .foreach(rows += _.copy())
+            groups += 1
+          }
+          true
+        }
+      }
+      if (!fits) return None
+    }
+    Some(PointRows(rows.result(), cand.length.toLong, idx.length.toLong,
+      groups))
+  }
+
+  /** A record filter passing only the records whose top-level bigint
+    * `key` equals `value`. It reads the key column alone, so the
+    * records it rejects are skipped without being assembled into
+    * rows; a null key is rejected before its value is read. */
+  private def keyEquals(key: String, value: Long): FilterCompat.Filter =
+    FilterCompat.get(new UnboundRecordFilter {
+      def bind(readers: java.lang.Iterable[ColumnReader]): RecordFilter = {
+        val c = readers.asScala.find(_.getDescriptor.getPath.sameElements(
+          Array(key))).get
+        val defined = c.getDescriptor.getMaxDefinitionLevel
+        () => c.getCurrentDefinitionLevel == defined && c.getLong == value
+      }
+    })
+
+  /** Whether row group `b` may hold `value` in bigint column `key`:
+    * its chunk statistics admit it, or it has none to go by. */
+  private def admits(b: org.apache.parquet.hadoop.metadata.BlockMetaData,
+      key: String, value: Long): Boolean =
+    b.getColumns.asScala.find(_.getPath.toDotString == key)
+      .map(_.getStatistics).forall {
+        case s: LongStatistics if !s.isEmpty =>
+          s.hasNonNullValue && s.getMin <= value && value <= s.getMax
+        case _ => true
+      }
 
   /** [[indexedLookup]] under the directory's footer-read [[dataSchema]]
     * (a recursive listing plus one footer open), for a caller that has
@@ -1117,9 +1217,9 @@ object Maintenance {
     * over collected index rows shaped (file, min, max): a file whose
     * [min, max] admits the probe stays, and a file with missing stats
     * CANNOT be pruned — absence of evidence never drops data. Shared
-    * by [[indexedLookup]] (the serving primitive) and the probe proof
-    * loop so the two cannot drift (round-18 ADVICE named the
-    * duplicated predicate as a latent divergence); pinned by
+    * by the serving primitives ([[pointLookup]], [[indexedLookup]])
+    * and the probe proof loop so they cannot drift (round-18 ADVICE
+    * named the duplicated predicate as a latent divergence); pinned by
     * MaintenanceSpec's candidate-parity case. */
   private[graft] def candidateFiles(idx: Seq[Row], key: Long): Seq[String] =
     idx.filter(r => r.isNullAt(1) || r.isNullAt(2) ||

@@ -8,7 +8,9 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, FloatType}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.parquet.DriverRowCodecs
+import org.apache.spark.sql.types.{DoubleType, FloatType, StructType}
 
 import graft.operators.{Maintenance, SecJsonDocs, SecServing}
 
@@ -145,6 +147,14 @@ class Api(spark: SparkSession, maxRows: Int = 10000,
   }
 
   def start(port: Int = 0, threads: Int = 8): Int = {
+    // The JDK server writes a response's headers and its body as two
+    // TCP segments. With Nagle's algorithm on, the body then waits for
+    // the client's delayed ACK of the headers: ~40 ms added to every
+    // response on Linux, more than a driver-served lookup takes. The
+    // server reads this property once, when its implementation loads;
+    // an explicit setting is left as it is.
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
     val s = HttpServer.create(new InetSocketAddress(port), 0)
     s.createContext("/check-availability", ex => handle(ex)(checkAvailability))
     s.createContext("/get-table-info", ex => handle(ex)(getTableInfo))
@@ -369,22 +379,29 @@ class Api(spark: SparkSession, maxRows: Int = 10000,
     * <column>&value=<long>` answers from the current committed
     * snapshot; when the snapshot carries a `_skipindex` covering the
     * key, the read opens ONLY the files whose [min, max] admits the
-    * probe ([[Maintenance.indexedLookup]]) — a keyed read at 100 TB is
-    * O(matching files), never a table scan — and falls back to the
-    * plain filtered scan otherwise (the index is an accelerator, not a
-    * correctness dependency). Cost: the metadata work per lookup is
-    * one `listStatus` of the snapshot, one data-file footer open (the
-    * schema, which the indexed read reuses) and one `_skipindex` read
-    * (its listing plus one open per part file, which serves both its
-    * footer and its rows), all on the driver under the session's
-    * Hadoop conf; then the [[rows]] collect is the only Spark work —
-    * ONE job when the read is one scan partition, as an indexed read
-    * of a key-clustered table is. The response
-    * reports `files_opened`/`files_total` so a client can see which
-    * path served it. Vacuum races resolve exactly like the
-    * current-read path of [[tableSnapshot]]: post-read marker
-    * recheck, bounded re-resolve retries, 503 if a writer outruns
-    * them. */
+    * probe — a keyed read at 100 TB is O(matching files), never a
+    * table scan — and falls back to the plain filtered scan otherwise
+    * (the index is an accelerator, not a correctness dependency).
+    *
+    * Cost: the metadata work per lookup is one `listStatus` of the
+    * snapshot, one data-file footer open (the schema) and one
+    * `_skipindex` read (one open per part file), all on the driver
+    * under the session's Hadoop conf. An indexed lookup is then served
+    * ON THE DRIVER with no Spark job and no code generation
+    * ([[Maintenance.pointLookup]]): the candidates' admitted row
+    * groups are decoded by Spark's Parquet row converter and rendered
+    * by [[rowsOf]], the writer [[rows]] uses, so the bytes match the
+    * Spark path's. The Spark path ([[Maintenance.indexedLookup]], or
+    * the plain scan when no index covers the key) serves when the
+    * candidates' admitted row groups exceed
+    * [[Maintenance.PointLookupMaxBytes]] — a read that size belongs on
+    * cancellable jobs under the request deadline — or when the driver
+    * read fails (a torn sidecar, a file vacuumed mid-read); its only
+    * Spark work is the [[rows]] collect. The response reports
+    * `files_opened`/`files_total` so a client can see the pruning.
+    * Vacuum races resolve exactly like the current-read path of
+    * [[tableSnapshot]]: post-read marker recheck, bounded re-resolve
+    * retries, 503 if a writer outruns them. */
   private def tableLookup(ex: HttpExchange): (Int, String) = {
     val p = params(ex)
     val root = p.getOrElse("root",
@@ -395,7 +412,7 @@ class Api(spark: SparkSession, maxRows: Int = 10000,
       return (400, detail("value parameter required (integer)")))
     serveCurrentRead(root) { (curId, cur) =>
       val curPath = new org.apache.hadoop.fs.Path(cur)
-      // files_total is the ON-DISK data-file count on BOTH paths —
+      // files_total is the ON-DISK data-file count on every path —
       // the index's own coverage (which excludes zero-row files)
       // must not make an unchanged table report different totals
       // depending on which path served it
@@ -404,31 +421,45 @@ class Api(spark: SparkSession, maxRows: Int = 10000,
         .filter(_.endsWith(".parquet")).toSeq
       val total = files.length.toLong
       val schema = Maintenance.dataSchema(spark, cur, files)
+      def answer(opened: Long, data: String) = (200,
+        s"""{"version":$curId,"files_opened":$opened,""" +
+          s""""files_total":$total,"data":$data}""")
       if (!schema.fieldNames.contains(key))
         (400, detail(s"unknown key column: $key"))
-      else {
-        // the index is an ACCELERATOR, never a correctness
-        // dependency: absent or not covering the key (indexedLookup
-        // declines), UNREADABLE (a torn writeSkipIndex attempt — the
-        // one sidecar with no commit marker) all fall back to the
-        // plain filtered scan; a vacuumed-snapshot failure inside
-        // indexedLookup falls back too, and the plain scan then trips
-        // serveCurrentRead's recheck, which is the retry path's job
-        val viaIndex: Option[(DataFrame, Long)] =
-          try {
-            val (df, opened, _) =
-              Maintenance.indexedLookup(spark, cur, key, value, schema)
-            Some((df, opened))
-          } catch {
-            case scala.util.control.NonFatal(_) => None
-          }
-        val (df, opened) = viaIndex.getOrElse((spark.read.schema(schema)
-          .parquet(cur).filter(col(key) === value), total))
-        (200, s"""{"version":$curId,"files_opened":$opened,""" +
-          s""""files_total":$total,"data":${rows(df)}}""")
+      else driverLookup(cur, key, value, schema) match {
+        case Some(hit) => answer(hit.opened, rowsOf(schema, hit.rows))
+        case None =>
+          // the index is an ACCELERATOR, never a correctness
+          // dependency: absent or not covering the key (indexedLookup
+          // declines), UNREADABLE (a torn writeSkipIndex attempt — the
+          // one sidecar with no commit marker) all fall back to the
+          // plain filtered scan; a vacuumed-snapshot failure inside
+          // indexedLookup falls back too, and the plain scan then trips
+          // serveCurrentRead's recheck, which is the retry path's job
+          val viaIndex: Option[(DataFrame, Long)] =
+            try {
+              val (df, opened, _) =
+                Maintenance.indexedLookup(spark, cur, key, value, schema)
+              Some((df, opened))
+            } catch {
+              case scala.util.control.NonFatal(_) => None
+            }
+          val (df, opened) = viaIndex.getOrElse((spark.read.schema(schema)
+            .parquet(cur).filter(col(key) === value), total))
+          answer(opened, rows(df))
       }
     }
   }
+
+  /** [[Maintenance.pointLookup]] under the route's byte cap; None (the
+    * Spark path serves) when it declines or its read fails. */
+  private def driverLookup(cur: String, key: String, value: Long,
+      schema: StructType): Option[Maintenance.PointRows] =
+    try Maintenance.pointLookup(spark, cur, key, value, schema,
+      Maintenance.PointLookupMaxBytes)
+    catch {
+      case scala.util.control.NonFatal(_) => None
+    }
 
   private def queryData(ex: HttpExchange): (Int, String) = {
     val query = params(ex).getOrElse("query",
@@ -488,8 +519,9 @@ class Api(spark: SparkSession, maxRows: Int = 10000,
     * the plan's ROOT limit: a scan collects incrementally — one job
     * when its first partition holds the answer — and a sorted result
     * as one top-k job, with no single-partition exchange (an extra
-    * job under adaptive execution) beneath the limit. */
-  private def rows(df: DataFrame): String = {
+    * job under adaptive execution) beneath the limit. Rows already on
+    * the driver render through [[rowsOf]] under the same rules. */
+  private[graft] def rows(df: DataFrame): String = {
     val names = df.columns
     val tmp = df.toDF(names.indices.map(i => s"__c$i"): _*)
     val json = to_json(struct(names.indices.map { i =>
@@ -504,6 +536,27 @@ class Api(spark: SparkSession, maxRows: Int = 10000,
     }: _*))
     tmp.select(json).limit(maxRows).collect().map(_.getString(0))
       .mkString("[", ",", "]")
+  }
+
+  /** [[rows]] for rows of `schema` already on the driver: the same
+    * JSON writer `to_json` uses ([[DriverRowCodecs.jsonWriter]]), the
+    * same positional names, top-level NaN/±Inf → null and [[maxRows]]
+    * cap, with no Spark job. The rows must be copies it may modify. */
+  private[graft] def rowsOf(schema: StructType,
+      data: Seq[InternalRow]): String = {
+    val write = DriverRowCodecs.jsonWriter(spark, schema)
+    val floats = schema.fields.indices.filter(i =>
+      schema(i).dataType == DoubleType || schema(i).dataType == FloatType)
+    data.take(maxRows).map { r =>
+      floats.foreach { i =>
+        if (!r.isNullAt(i)) {
+          val v = if (schema(i).dataType == DoubleType) r.getDouble(i)
+            else r.getFloat(i).toDouble
+          if (v.isNaN || v.isInfinite) r.setNullAt(i)
+        }
+      }
+      write(r)
+    }.mkString("[", ",", "]")
   }
 
   private def jstr(s: String): String = mapper.writeValueAsString(s)

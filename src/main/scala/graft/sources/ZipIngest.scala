@@ -1,9 +1,12 @@
 package graft.sources
 
-import java.io.{BufferedReader, ByteArrayInputStream, InputStreamReader}
+import java.io.{BufferedReader, IOException, InputStreamReader}
 import java.nio.charset.StandardCharsets
-import java.util.zip.ZipInputStream
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.commons.compress.archivers.zip.ZipFile
+import org.apache.commons.compress.utils.SeekableInMemoryByteChannel
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -24,9 +27,17 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * lists the archives once and stamps the `source_file` lineage once
   * per archive, not once per extracted row.
   *
+  * Each archive is opened as a random-access ZIP (its central
+  * directory, as Python's `zipfile.ZipFile` reads it), so extracting
+  * an entry inflates that entry only: no earlier entry is inflated to
+  * reach it, and a damaged entry elsewhere in the archive does not
+  * stop its neighbours. An archive whose central directory cannot be
+  * read fails with its path in the message.
+  *
   * Memory: `binaryFile` materializes one whole ZIP per row (Spark
   * caps rows at 2 GB); SEC quarter ZIPs are ~50-100 MB, so a task
-  * holds the archive plus one inflated entry stream — bounded.
+  * holds the archive plus one inflated entry stream — the wanted
+  * entry's, read line by line — which is bounded.
   *
   * Parsing matches the reference's pandas read: header row from the
   * entry itself, `\t` separator with no quoting, duplicate header
@@ -48,11 +59,13 @@ object ZipIngest {
   def readZipTsv(spark: SparkSession, zipGlob: String, entry: String,
                  columns: Seq[String]): DataFrame =
     entryRows(spark.read.format("binaryFile").load(zipGlob)
-      .select(col("path").as("source_zip"), col("content")), entry, columns)
+      .select(col("path").as("source_zip"), col("content"), col("path")),
+      entry, columns)
 
   /** The rows of `entry` in every archive of `archives`, a frame of
-    * (lineage string, ZIP bytes): `columns` plus the lineage column,
-    * named as in `archives` and carried unchanged onto each row. */
+    * (lineage string, ZIP bytes, archive path): `columns` plus the
+    * lineage column, named as in `archives` and carried unchanged onto
+    * each row. */
   private def entryRows(archives: DataFrame, entry: String,
                         columns: Seq[String]): DataFrame = {
     val outSchema = StructType(
@@ -61,16 +74,19 @@ object ZipIngest {
     val colsIdx = columns.toIndexedSeq
     archives.flatMap { row =>
       val lineage = row.getString(0)
-      val zis = new ZipInputStream(
-        new ByteArrayInputStream(row.getAs[Array[Byte]](1)))
-      val found = Iterator.continually(zis.getNextEntry)
-        .takeWhile(_ != null)
-        .find(e => !e.isDirectory && e.getName == entry)
-      found match {
-        case None => Iterator.empty
-        case Some(_) =>
+      val zip =
+        try ZipFile.builder().setSeekableByteChannel(
+          new SeekableInMemoryByteChannel(row.getAs[Array[Byte]](1))).get()
+        catch {
+          case e: IOException => throw new IOException(
+            s"cannot read the ZIP central directory of ${row.getString(2)}", e)
+        }
+      zip.getEntriesInPhysicalOrder(entry).asScala
+        .find(!_.isDirectory) match {
+        case None => zip.close(); Iterator.empty
+        case Some(e) =>
           val reader = new BufferedReader(
-            new InputStreamReader(zis, StandardCharsets.UTF_8))
+            new InputStreamReader(zip.getInputStream(e), StandardCharsets.UTF_8))
           val header = Option(reader.readLine()).getOrElse("")
             .split("\t", -1)
           // first occurrence wins for duplicated header names (S6)
@@ -80,8 +96,9 @@ object ZipIngest {
             if (!idx.contains(k)) idx(k) = i
           }
           val lookup = colsIdx.map(c => idx.get(c.toLowerCase))
+          // the archive closes once its entry's last line is read
           Iterator.continually(reader.readLine())
-            .takeWhile(_ != null)
+            .takeWhile { l => if (l == null) zip.close(); l != null }
             .filter(_.nonEmpty)
             .map { line =>
               val parts = line.split("\t", -1)
@@ -112,7 +129,7 @@ object ZipIngest {
       "tag" -> SecSchemas.tag, "num" -> SecSchemas.num)
     val archives = spark.read.format("binaryFile").load(zipGlob)
       .select(regexp_extract(col("path"), "([^/]+)\\.zip$", 1).as("source_file"),
-        col("content"))
+        col("content"), col("path"))
     schemas.map { case (name, schema) =>
       val raw = entryRows(archives, s"$name.txt", schema.fields.map(_.name).toSeq)
       val withLineage = StructType(schema.fields :+

@@ -486,8 +486,7 @@ class ApiSpec extends SparkSpec {
         assert(code == 200, s"$path: $code $b")
         body = b
       }
-      assert(groups.nonEmpty &&
-        groups.forall(_.startsWith(s"graft-api-$route-")),
+      assert(groups.forall(_.startsWith(s"graft-api-$route-")),
         s"$path ran jobs outside its request group: $groups")
       (groups.size, body)
     }
@@ -506,14 +505,143 @@ class ApiSpec extends SparkSpec {
     val (indexedJobs, indexed) = routeJobs("table-lookup", lookup)
     assert(indexed.get("files_opened").asLong == 1L &&
       indexed.get("files_total").asLong > 1L, s"index did not prune: $indexed")
-    assert(indexedJobs == 1, s"indexed lookup ran $indexedJobs jobs")
+    // the indexed lookup is served on the driver: no job at all, and
+    // a key never looked up before compiles no code either
+    assert(indexedJobs == 0, s"indexed lookup ran $indexedJobs jobs")
     assert(indexed.get("data") == unindexed.get("data"))
+    val fresh = spark.read.schema(schema).parquet(snap)
+      .agg(org.apache.spark.sql.functions.max("doc_id")).head.getLong(0)
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
+    val compiledBefore = compiles.getCount
+    val (freshJobs, freshBody) = routeJobs("table-lookup",
+      s"/table-lookup?root=$enc&key=doc_id&value=$fresh")
+    assert(freshJobs == 0 && compiles.getCount == compiledBefore,
+      s"a cold-key lookup ran $freshJobs jobs and compiled " +
+        s"${compiles.getCount - compiledBefore} classes")
+    assert(freshBody.get("data").size == 1 &&
+      freshBody.get("data").get(0).get("doc_id").asLong == fresh)
     val (snapJobs, snapBody) =
       routeJobs("table-snapshot", s"/table-snapshot?root=$enc")
     assert(snapBody.get("data").size.toLong ==
       spark.read.schema(schema).parquet(snap).count())
     assert(snapJobs == collectJobs(spark.read.schema(schema).parquet(snap)),
       s"snapshot read ran $snapJobs jobs")
+  }
+
+  /** The raw `data` array of a `/table-lookup` response body (the
+    * route writes it last), byte for byte. */
+  private def rawLookupData(path: String): String = {
+    val r = client.send(
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+        .GET().build(), HttpResponse.BodyHandlers.ofString())
+    assert(r.statusCode() == 200, s"$path: ${r.statusCode()} ${r.body()}")
+    r.body().substring(r.body().indexOf("\"data\":") + 7).stripSuffix("}")
+  }
+
+  test("table-lookup served on the driver renders byte-equal to the " +
+    "filtered scan over every column type") {
+    import org.apache.spark.sql.functions.col
+    val root = tmpDir("api_parity_root")
+    val snap = s"$root/v1"
+    // file A stores ts as INT96 (the upsert table's default), file B
+    // as TIMESTAMP_MICROS; A holds keys 1..6 without 3 plus a null
+    // key, B holds 10..15 without 11
+    def part(keys: Seq[Int]): org.apache.spark.sql.DataFrame = spark.sql(
+      s"""SELECT CASE WHEN k = 0 THEN NULL ELSE CAST(k AS BIGINT) END AS doc_id,
+           CAST(k * 3 AS INT) AS i,
+           CASE k % 5 WHEN 0 THEN CAST('NaN' AS DOUBLE)
+             WHEN 1 THEN CAST('Infinity' AS DOUBLE)
+             WHEN 2 THEN CAST('-Infinity' AS DOUBLE)
+             WHEN 3 THEN NULL ELSE k / 7.0D END AS d,
+           CAST(CASE k % 5 WHEN 1 THEN CAST('NaN' AS DOUBLE)
+             WHEN 2 THEN CAST('Infinity' AS DOUBLE)
+             WHEN 3 THEN CAST('-Infinity' AS DOUBLE)
+             WHEN 4 THEN NULL ELSE k / 3.0D END AS FLOAT) AS f,
+           concat('q"uote\\\\back', k, ' é 漢 😀', char(9), 'tab') AS s,
+           CAST(k * 1.125 AS DECIMAL(12, 3)) AS dec,
+           k % 2 = 0 AS b,
+           date_add(DATE'1582-10-01', k * 40) AS dt,
+           CASE WHEN k = 4 THEN TIMESTAMP'1001-01-01 00:00:00'
+             ELSE TIMESTAMP'2021-03-14 01:59:59.123456' + make_interval(0, 0, 0, k)
+             END AS ts,
+           TIMESTAMP_NTZ'2020-02-29 23:00:00.5' + make_interval(0, 0, 0, 0, k) AS ntz,
+           CAST(concat('b', k) AS BINARY) AS bin,
+           array(k, NULL, 7) AS arr,
+           map('x', k / 3.0D, 'y', CAST('NaN' AS DOUBLE)) AS m,
+           named_struct('a', k, 'b', CASE WHEN k % 2 = 0 THEN NULL
+             ELSE 'z"\\\\' END) AS st
+         FROM (SELECT explode(array(${keys.mkString(",")})) AS k)""")
+    part(Seq(0, 1, 2, 4, 5, 6)).coalesce(1).write.parquet(snap)
+    val tsType = "spark.sql.parquet.outputTimestampType"
+    val saved = spark.conf.getOption(tsType)
+    spark.conf.set(tsType, "TIMESTAMP_MICROS")
+    try part(Seq(10, 12, 13, 14, 15)).coalesce(1).write.mode("append")
+      .parquet(snap)
+    finally saved.fold(spark.conf.unset(tsType))(spark.conf.set(tsType, _))
+    graft.streaming.UpsertStream.markCommitted(spark, snap)
+    graft.operators.Maintenance.writeSkipIndex(spark, snap, Seq("doc_id"))
+    val schema = graft.operators.Maintenance.dataSchema(spark, snap)
+    val enc = java.net.URLEncoder.encode(root, "UTF-8")
+    port
+    val a = api.get
+    // present keys in both files, absent keys inside a file's range,
+    // keys outside every range
+    val present = Seq(1L, 2L, 4L, 5L, 6L, 10L, 12L, 13L, 14L, 15L)
+    for (k <- present ++ Seq(3L, 11L, 8L, 100L, -5L)) {
+      val path = s"/table-lookup?root=$enc&key=doc_id&value=$k"
+      var body = ""
+      val jobs = jobGroupsOf { body = rawLookupData(path) }
+      assert(jobs.isEmpty, s"key $k ran jobs $jobs")
+      val expected = a.rows(spark.read.schema(schema).parquet(snap)
+        .filter(col("doc_id") === k))
+      assert(body == expected, s"key $k")
+      assert((body != "[]") == present.contains(k), s"key $k: $body")
+    }
+    // names are kept by position: two columns renamed alike render as
+    // the Spark path renders them
+    val hit = graft.operators.Maintenance.pointLookup(spark, snap, "doc_id",
+      1L, schema, graft.operators.Maintenance.PointLookupMaxBytes).get
+    val dupNames = schema.fieldNames.updated(1, "v").updated(2, "v")
+    val dupSchema = org.apache.spark.sql.types.StructType(
+      schema.fields.zip(dupNames).map { case (f, n) => f.copy(name = n) })
+    assert(a.rowsOf(dupSchema, hit.rows.map(_.copy())) ==
+      a.rows(spark.read.schema(schema).parquet(snap)
+        .filter(col("doc_id") === 1L).toDF(dupNames.toSeq: _*)))
+  }
+
+  test("table-lookup over the driver byte cap is served by the Spark " +
+    "path with the same rows") {
+    import org.apache.spark.sql.functions.{col, concat, lit, sha2}
+    import graft.operators.Maintenance
+    val root = tmpDir("api_cap_root")
+    val snap = s"$root/v1"
+    // one file, one row group of ~20 MiB of incompressible text: every
+    // key's candidate bytes exceed the cap
+    spark.range(0, 40000).select(col("id").as("doc_id"),
+      concat((0 until 8).map(j =>
+        sha2(concat(col("id").cast("string"), lit(s"-$j")), 256)): _*)
+        .as("pad"))
+      .coalesce(1).write.parquet(snap)
+    graft.streaming.UpsertStream.markCommitted(spark, snap)
+    Maintenance.writeSkipIndex(spark, snap, Seq("doc_id"))
+    val schema = Maintenance.dataSchema(spark, snap)
+    assert(Maintenance.pointLookup(spark, snap, "doc_id", 777L, schema,
+      Maintenance.PointLookupMaxBytes).isEmpty, "the driver must decline")
+    val enc = java.net.URLEncoder.encode(root, "UTF-8")
+    port
+    var body: JsonNode = null
+    val jobs = jobGroupsOf {
+      val (c, b) = get(s"/table-lookup?root=$enc&key=doc_id&value=777")
+      assert(c == 200, s"$c: $b")
+      body = b
+    }
+    assert(jobs.nonEmpty && jobs.forall(_.startsWith("graft-api-table-lookup-")),
+      s"the Spark path must serve under the request group: $jobs")
+    assert(body.get("files_opened").asLong == 1L)
+    assert(mapper.readTree(api.get.rows(spark.read.schema(schema).parquet(snap)
+      .filter(col("doc_id") === 777L))) == body.get("data"))
+    assert(body.get("data").size == 1)
   }
 
   test("every Spark job of a mixed burst over the six serving routes " +

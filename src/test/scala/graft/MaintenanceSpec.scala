@@ -547,6 +547,90 @@ class MaintenanceSpec extends SparkSpec {
     assert(Maintenance.skipIndexRows(spark, torn, "k").isEmpty)
   }
 
+  /** `f`'s rows as (key, value) pairs, null keys as None. */
+  private def kv(rows: Seq[org.apache.spark.sql.catalyst.InternalRow])
+      : Seq[(Option[Long], String)] =
+    rows.map(r => (Option.when(!r.isNullAt(0))(r.getLong(0)),
+      r.getUTF8String(1).toString))
+
+  test("pointLookup decodes only the row groups whose key statistics " +
+    "admit the probe") {
+    val t = tmpDir("pl_groups")
+    // one file of ~100-row groups over sorted even keys
+    spark.range(0, 1000).select((col("id") * 2).as("k"),
+        concat(lit("v"), col("id") * 2).as("v"))
+      .coalesce(1).write.mode("overwrite")
+      .option("parquet.block.size", "1").parquet(t)
+    Maintenance.writeSkipIndex(spark, t, Seq("k"))
+    val schema = Maintenance.dataSchema(spark, t)
+    val file = Maintenance.listDataFiles(spark, t).head
+    val nGroups = Maintenance.withParquet(spark.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(file))(_.getRowGroups.size)
+    assert(nGroups > 2, s"expected several row groups, got $nGroups")
+    def look(k: Long) = Maintenance.pointLookup(spark, t, "k", k, schema,
+      Maintenance.PointLookupMaxBytes).get
+    val hit = look(1110L)
+    assert(kv(hit.rows) == Seq((Some(1110L), "v1110")))
+    assert(hit.opened == 1L && hit.total == 1L && hit.groupsRead == 1,
+      s"decoded ${hit.groupsRead} of $nGroups row groups")
+    // a key inside one group's range but absent: that group is read
+    val gap = look(555L)
+    assert(gap.rows.isEmpty && gap.opened == 1L && gap.groupsRead == 1)
+    // a key outside the file's range opens nothing
+    val out = look(5000L)
+    assert(out.rows.isEmpty && out.opened == 0L && out.groupsRead == 0)
+  }
+
+  test("pointLookup reads a chunk without statistics, reads nothing for " +
+    "no candidates, and declines over its byte cap") {
+    val t = tmpDir("pl_nostats")
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1)
+      .write.mode("append").parquet(t)
+    Seq((10L, "c"), (11L, "d")).toDF("k", "v").coalesce(1)
+      .write.mode("append").parquet(t)
+    // a file whose key chunk carries no statistics: never pruned
+    Seq[(java.lang.Long, String)]((null, "n"), (20L, "e")).toDF("k", "v")
+      .coalesce(1).write.mode("append")
+      .option("parquet.column.statistics.enabled", "false").parquet(t)
+    assert(Maintenance.writeSkipIndex(spark, t, Seq("k")) == 3L)
+    val schema = Maintenance.dataSchema(spark, t)
+    def look(k: Long, cap: Long = Maintenance.PointLookupMaxBytes) =
+      Maintenance.pointLookup(spark, t, "k", k, schema, cap)
+    val viaNoStats = look(20L).get
+    assert(kv(viaNoStats.rows) == Seq((Some(20L), "e")) &&
+      viaNoStats.opened == 1L && viaNoStats.groupsRead == 1)
+    val hit = look(10L).get
+    assert(kv(hit.rows) == Seq((Some(10L), "c")) && hit.opened == 2L &&
+      hit.total == 3L && hit.groupsRead == 2)
+    // no candidate but the unprunable file; with that file's
+    // statistics present, a key outside every range opens nothing
+    val t2 = tmpDir("pl_none")
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1)
+      .write.mode("overwrite").parquet(t2)
+    Maintenance.writeSkipIndex(spark, t2, Seq("k"))
+    val none = Maintenance.pointLookup(spark, t2, "k", 99L,
+      Maintenance.dataSchema(spark, t2), Maintenance.PointLookupMaxBytes).get
+    assert(none.rows.isEmpty && none.opened == 0L && none.groupsRead == 0)
+    // a cap below the candidates' bytes declines; the Spark path then
+    // answers with the rows the driver read under the full cap
+    assert(look(10L, cap = 10L).isEmpty)
+    val (viaSpark, opened, _) =
+      Maintenance.indexedLookup(spark, t, "k", 10L, schema)
+    assert(opened == hit.opened && viaSpark.collect()
+      .map(r => (Option(r.getAs[java.lang.Long](0)).map(_.longValue),
+        r.getString(1))).toSeq == kv(hit.rows))
+    // a torn sidecar, a non-bigint key, an unknown key: no driver read
+    new java.io.File(s"$t/_skipindex").listFiles()
+      .foreach(_.delete())
+    assert(look(10L).isEmpty, "torn index")
+    val t3 = tmpDir("pl_intkey")
+    Seq((1, "a")).toDF("k", "v").write.mode("overwrite").parquet(t3)
+    assert(Maintenance.pointLookup(spark, t3, "k", 1L,
+      Maintenance.dataSchema(spark, t3), Maintenance.PointLookupMaxBytes).isEmpty)
+    assert(Maintenance.pointLookup(spark, t2, "nope", 1L,
+      Maintenance.dataSchema(spark, t2), Maintenance.PointLookupMaxBytes).isEmpty)
+  }
+
   test("skip index over a non-bigint key: the reader declines, so the " +
     "lookup falls back instead of failing on the stats type") {
     val t = tmpDir("nbk_t")

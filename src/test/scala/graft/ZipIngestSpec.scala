@@ -117,6 +117,42 @@ class ZipIngestSpec extends SparkSpec {
     assert(paths.length == 1 && paths.head.endsWith("/x.zip.d/2023_Q3.zip"))
   }
 
+  test("an entry is extracted without inflating the entries before it") {
+    val dir = tmpDir("graftzips_corrupt")
+    val zip = new File(dir, "2023_Q1.zip")
+    // the first entry is damaged inside its compressed data; the
+    // wanted entry comes after it
+    writeZip(zip, scala.collection.immutable.ListMap(
+      "pre.txt" -> (0 until 400).map(i => s"p-$i\t$i\t${i * 7 % 13}\tBS\n")
+        .mkString("adsh\treport\tline\tstmt\n", "", ""),
+      "sub.txt" -> "adsh\tcik\tname\ne-1\t600\tZeta SA\n"))
+    val bytes = java.nio.file.Files.readAllBytes(zip.toPath)
+    val buf = java.nio.ByteBuffer.wrap(bytes)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val dataStart = 30 + buf.getShort(26) + buf.getShort(28)
+    (dataStart + 4 until dataStart + 24).foreach(i => bytes(i) = 0xff.toByte)
+    java.nio.file.Files.write(zip.toPath, bytes)
+    val sub = ZipIngest.readZipTsv(spark, zip.getAbsolutePath, "sub.txt",
+      Seq("adsh", "cik")).collect()
+    assert(sub.map(r => (r.getString(0), r.getString(1))).toSeq ==
+      Seq(("e-1", "600")))
+  }
+
+  test("an archive with no readable central directory fails naming it") {
+    val dir = tmpDir("graftzips_truncated")
+    val zip = new File(dir, "2023_Q2.zip")
+    writeZip(zip, Map("sub.txt" -> "adsh\tcik\nf-1\t700\n"))
+    val bytes = java.nio.file.Files.readAllBytes(zip.toPath)
+    // drop the end-of-central-directory record
+    java.nio.file.Files.write(zip.toPath, bytes.dropRight(22))
+    val e = intercept[Exception] {
+      ZipIngest.readZipTsv(spark, zip.getAbsolutePath, "sub.txt",
+        Seq("adsh")).collect()
+    }
+    assert(e.getMessage.contains("central directory") &&
+      e.getMessage.contains("2023_Q2.zip"), e.getMessage)
+  }
+
   test("q180 zip round-trip aggregate equals the direct aggregate") {
     import org.apache.spark.sql.functions._
     val rt = graft.operators.Extensions
