@@ -20,10 +20,10 @@ import java.nio.file.{Files, Paths}
   * Between queries every persistent RDD (the sketch operators'
   * localCheckpoints) is dropped — the queries are independent; letting
   * one query's pinned blocks pressure the next one's execution memory
-  * also distorted numbers. local[32] matches the container's 32 cores;
-  * shuffle.partitions=32 keeps one post-shuffle partition per core
-  * (200 would create 6x task scheduling overhead at this scale); AQE
-  * coalesces the rest.
+  * also distorted numbers. local[n] takes every core the JVM may use
+  * ([[BenchSession.cpus]]); shuffle.partitions=n keeps one
+  * post-shuffle partition per core (200 would multiply the task
+  * scheduling overhead at this scale); AQE coalesces the rest.
   *
   * The metric line is BOTH printed and written to the file named by
   * SPARK_GRAFT_BENCH_OUT (default ./BENCH_OUT.json): sbt's logger

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared harness plumbing for the timing mains ([[Bench]], [[BenchOne]],
-  * [[ScalingCurve]], [[ProfileQuery]]): one definition of the session
+  * [[ScalingCurve]], [[ProfileQuery]]) and the correctness and plan
+  * mains ([[Verify]], [[PlanAudit]]): one definition of the session
   * configuration, the untimed warm-up, the between-queries hygiene and
   * the per-sample timing step. Their numbers are only comparable
   * because these are identical — and a config change (codegen cache
@@ -11,7 +12,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * must land once, not once per main.
   */
 object BenchSession {
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Local cores and shuffle partitions: `SPARK_GRAFT_CPUS`, else
+    * every processor the JVM may use. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
 
   def build(): SparkSession = {
     val c = cpus

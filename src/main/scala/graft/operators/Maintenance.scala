@@ -1038,37 +1038,6 @@ object Maintenance {
     idx.count()
   }
 
-  /** Keyed POINT LOOKUP through the skipping index, as a Spark plan:
-    * the `_skipindex` rows ([[skipIndexRows]] — file-count rows read
-    * on the driver, no Spark job) select the files whose [min, max]
-    * admits the probe, and ONLY those files are opened, under the data
-    * `schema` so the scan infers nothing. Cost: one sidecar read on
-    * the driver; the only Spark job is the caller's collect of the
-    * returned rows (one job when the candidates fit one scan
-    * partition), plus the planning and code generation of a fresh
-    * plan. The serving route tries [[pointLookup]] first, which reads
-    * the same candidates on the driver with no job, and comes here
-    * when that declines (candidates over its byte cap). Files
-    * with missing stats cannot be pruned and stay candidates —
-    * absence of evidence never drops data. Returns (matching rows,
-    * files opened, files total): on a key-clustered layout the open
-    * count is ~1 regardless of table size, which is the difference
-    * between a serving-edge keyed read and a table scan at 100 TB.
-    * Throws IllegalArgumentException when no index covers `key` as a
-    * bigint column. */
-  def indexedLookup(spark: SparkSession, dir: String, key: String,
-                    value: Long, schema: StructType): (DataFrame, Long, Long) = {
-    val idx = skipIndexRows(spark, dir, key).getOrElse(
-      throw new IllegalArgumentException(
-        s"no skip index over bigint column $key under $dir"))
-    val cand = candidateFiles(idx, value)
-    val reader = spark.read.schema(schema)
-    val rows =
-      if (cand.isEmpty) reader.parquet(dir).limit(0)
-      else reader.parquet(cand: _*).filter(col(key) === value)
-    (rows, cand.length.toLong, idx.length.toLong)
-  }
-
   /** The most candidate row-group bytes (compressed, as the footers
     * state them) a [[pointLookup]] decodes on the driver before it
     * declines. Above it the read belongs on cancellable Spark jobs. */
@@ -1080,35 +1049,44 @@ object Maintenance {
   final case class PointRows(rows: IndexedSeq[InternalRow], opened: Long,
       total: Long, groupsRead: Int)
 
-  /** Keyed POINT LOOKUP served on the driver with no Spark job. The
-    * `_skipindex` rows ([[skipIndexRows]]) pick the candidate files by
-    * the shared rule ([[candidateFiles]]); in each candidate, a row
-    * group whose key-column chunk statistics exclude `value` is
-    * skipped (a chunk without statistics is read, an all-null chunk
-    * never matches), and the rest are read through [[withParquet]]:
-    * the key column picks the records whose key equals `value` (a
-    * null key never matches) and only those are decoded, by Spark's
-    * own Parquet row converter under `schema`, so INT96 and rebase
-    * rules are exactly a scan's ([[DriverRowCodecs]]).
+  /** Keyed POINT LOOKUP on the skipping index of `dir`, whose data
+    * files are `files`, served on the driver with no Spark job. The
+    * `_skipindex` rows ([[skipIndexRows]], read once) pick the
+    * candidate files by the shared rule ([[candidateFiles]]); in each
+    * candidate, a row group whose key-column chunk statistics exclude
+    * `value` is skipped (a chunk without statistics is read, an
+    * all-null chunk never matches), and the rest are read through
+    * [[withParquet]]: the key column picks the records whose key
+    * equals `value` (a null key never matches) and only those are
+    * decoded, by Spark's own Parquet row converter under `schema`, so
+    * INT96 and rebase rules are exactly a scan's ([[DriverRowCodecs]]).
+    * Files with missing stats cannot be pruned and stay candidates —
+    * absence of evidence never drops data — and on a key-clustered
+    * layout a lookup opens ~1 file whatever the table's size.
     *
-    * None, and the caller takes the Spark path ([[indexedLookup]] or a
-    * scan), when `key` is not a bigint column of `schema`, when no
-    * index covers it, or when the candidates' admitted row groups
-    * exceed `maxBytes`: files are decoded as they are opened, so at
-    * most `maxBytes` are read before the decline. No metadata is
-    * cached: a sidecar can be rewritten on a committed snapshot. */
-  def pointLookup(spark: SparkSession, dir: String, key: String,
-      value: Long, schema: StructType, maxBytes: Long): Option[PointRows] = {
+    * Left when it declines: the files a Spark scan filtered on the key
+    * must open instead. Those are the candidates when their admitted
+    * row groups exceed `maxBytes` (files are decoded as they are
+    * opened, so at most `maxBytes` are read before the decline), and
+    * every data file, `files`, when `key` is not a bigint column of
+    * `schema` or no index covers it. No metadata is cached: a sidecar
+    * can be rewritten on a committed snapshot. */
+  def pointLookup(spark: SparkSession, dir: String, files: Seq[String],
+      key: String, value: Long, schema: StructType,
+      maxBytes: Long): Either[Seq[String], PointRows] = {
     if (!schema.find(_.name == key).exists(_.dataType == LongType))
-      return None
-    val idx = skipIndexRows(spark, dir, key).getOrElse(return None)
+      return Left(files)
+    val idx = skipIndexRows(spark, dir, key) match {
+      case Some(i) => i
+      case None => return Left(files)
+    }
     val cand = candidateFiles(idx, value)
     val conf = spark.sparkContext.hadoopConfiguration
     var bytes = 0L
     var groups = 0
     val rows = IndexedSeq.newBuilder[InternalRow]
-    for (file <- cand) {
-      val fits = withParquet(conf, new Path(file)) { reader =>
+    val fits = cand.forall { file =>
+      withParquet(conf, new Path(file)) { reader =>
         val footer = reader.getFooter
         val admitted = reader.getRowGroups.asScala.zipWithIndex.collect {
           case (b, i) if admits(b, key, value) => (b, i)
@@ -1129,10 +1107,10 @@ object Maintenance {
           true
         }
       }
-      if (!fits) return None
     }
-    Some(PointRows(rows.result(), cand.length.toLong, idx.length.toLong,
-      groups))
+    if (fits) Right(PointRows(rows.result(), cand.length.toLong,
+      idx.length.toLong, groups))
+    else Left(cand)
   }
 
   /** A record filter passing only the records whose top-level bigint
@@ -1160,20 +1138,14 @@ object Maintenance {
         case _ => true
       }
 
-  /** [[indexedLookup]] under the directory's footer-read [[dataSchema]]
-    * (a recursive listing plus one footer open), for a caller that has
-    * not read the schema already. */
-  def indexedLookup(spark: SparkSession, dir: String, key: String,
-                    value: Long): (DataFrame, Long, Long) =
-    indexedLookup(spark, dir, key, value, dataSchema(spark, dir))
-
   /** The `_skipindex` rows of `dir` for `key`, shaped (file, min_key,
     * max_key) for [[candidateFiles]], read on the driver through
     * [[withParquet]] — no Spark job, and one open per part file: the
     * first part's footer decides coverage and the same open reads its
     * rows. None when the sidecar has no part file (absent, or a torn
     * write) or its footer does not carry `min_key`/`max_key` as bigint
-    * columns: the index does not cover the key and the caller scans. */
+    * columns: the index does not cover the key, and [[pointLookup]]
+    * names every data file for the scan. */
   private[graft] def skipIndexRows(spark: SparkSession, dir: String,
       key: String): Option[IndexedSeq[Row]] = {
     val idxDir = new Path(s"$dir/_skipindex")
@@ -1217,10 +1189,11 @@ object Maintenance {
     * over collected index rows shaped (file, min, max): a file whose
     * [min, max] admits the probe stays, and a file with missing stats
     * CANNOT be pruned — absence of evidence never drops data. Shared
-    * by the serving primitives ([[pointLookup]], [[indexedLookup]])
-    * and the probe proof loop so they cannot drift (round-18 ADVICE
-    * named the duplicated predicate as a latent divergence); pinned by
-    * MaintenanceSpec's candidate-parity case. */
+    * by the serving primitive ([[pointLookup]], whose driver read and
+    * whose over-cap scan both open exactly these files) and the probe
+    * proof loop so they cannot drift (a duplicated predicate would be
+    * a latent divergence); pinned by MaintenanceSpec's
+    * candidate-parity case. */
   private[graft] def candidateFiles(idx: Seq[Row], key: Long): Seq[String] =
     idx.filter(r => r.isNullAt(1) || r.isNullAt(2) ||
       (r.getLong(1) <= key && r.getLong(2) >= key)).map(_.getString(0))
@@ -1286,8 +1259,9 @@ object Maintenance {
 
   /** The probe discipline the lookup family shares (q290/q292): the
     * 12 smallest user ids divisible by 7 (a rule the oracles
-    * recompute), each answered through [[indexedLookup]] with the
-    * pruning bound asserted ON THE REAL READS — at most 2 files per
+    * recompute), each answered by a Spark scan of exactly its
+    * [[candidateFiles]] — the files the serving route's scan opens —
+    * with the pruning bound asserted ON THE REAL READS — at most 2 files per
     * probe (range clustering keeps each key's admissible range to one
     * file, two on a boundary) and exactly one row back. Returns the
     * probed rows; `expectTotal` pins the index's file coverage when
@@ -1301,7 +1275,7 @@ object Maintenance {
       .collect().map(_.getLong(0))
     require(probes.nonEmpty, s"$tag found no probe keys (doc_id % 7 == 0)")
     // The sidecar is read ONCE for the whole probe set, on the driver
-    // by the same reader indexedLookup uses ([[skipIndexRows]]);
+    // by the same reader pointLookup uses ([[skipIndexRows]]);
     // candidate selection and the pruning bound stay PER PROBE.
     val idx = skipIndexRows(spark, table, "doc_id").getOrElse(
       throw new IllegalArgumentException(
@@ -1312,7 +1286,7 @@ object Maintenance {
     val cands: Seq[(Long, Seq[String])] = probes.toIndexedSeq.map { k =>
       // THE SAME candidate rule as the serving primitive — shared code
       // ([[candidateFiles]]), not a re-implementation, so the proof
-      // and indexedLookup cannot drift
+      // and pointLookup cannot drift
       val cand = candidateFiles(idx, k)
       require(cand.length <= 2,
         s"$tag probe $k opened ${cand.length} of $total files — the " +
@@ -1341,7 +1315,7 @@ object Maintenance {
     * state written KEY-RANGE CLUSTERED (16 files), a footer-built
     * skipping index next to it, then every probe key (the 12 smallest
     * user ids divisible by 7 — a rule the oracle recomputes) answered
-    * through [[indexedLookup]]. Asserted live, per probe: exactly one
+    * through [[probeThroughIndex]]. Asserted live, per probe: exactly one
     * row comes back and AT MOST 2 of the 16 files were opened (range
     * clustering keeps each key's admissible range to one file, two on
     * a boundary) — the pruning is measured on the real reads, not

@@ -7,8 +7,9 @@ import java.nio.charset.StandardCharsets
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.{SparkPlan, SQLExecution}
 import org.apache.spark.sql.execution.datasources.parquet.DriverRowCodecs
 import org.apache.spark.sql.types.{DoubleType, FloatType, StructType}
 
@@ -123,9 +124,9 @@ class Api(spark: SparkSession, maxRows: Int = 10000,
     * AND into subquery expression plans (`SparkPlan.collect` stops at
     * expression boundaries, so a cartesian hiding inside a scalar/IN
     * subquery — `WHERE x > (SELECT max(v) FROM a, b)` — would
-    * otherwise bypass the guard and execute). */
-  private def rejectCartesian(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.execution.SparkPlan
+    * otherwise bypass the guard and execute). [[rows]] runs it on the
+    * physical plan it then executes, so the check plans nothing. */
+  private def rejectCartesian(plan: SparkPlan): Unit = {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     def offenders(p: SparkPlan): Seq[String] = {
@@ -141,9 +142,8 @@ class Api(spark: SparkSession, maxRows: Int = 10000,
         .flatMap(offenders)
       here ++ subs
     }
-    val found = offenders(df.queryExecution.executedPlan)
+    val found = offenders(plan)
     if (found.nonEmpty) throw new CartesianRejected(found.mkString(", "))
-    df
   }
 
   def start(port: Int = 0, threads: Int = 8): Int = {
@@ -220,10 +220,16 @@ class Api(spark: SparkSession, maxRows: Int = 10000,
 
   private def executeCustomQuery(ex: HttpExchange): (Int, String) = {
     val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-    val query = Option(mapper.readTree(body).get("query")).map(_.asText)
+    val tree =
+      try mapper.readTree(body)
+      catch {
+        case e: com.fasterxml.jackson.core.JsonProcessingException =>
+          return (400, detail(s"request body is not JSON: ${e.getOriginalMessage}"))
+      }
+    val query = Option(tree.get("query")).map(_.asText)
       .getOrElse(return (400, detail("body must carry a 'query' field")))
-    (200, s"""{"data":${rows(rejectCartesian(
-      SecServing.executeSql(spark, query)))}}""")
+    (200, s"""{"data":${rows(SecServing.executeSql(spark, query),
+      rejectCartesian)}}""")
   }
 
   private def getFinancialData(ex: HttpExchange): (Int, String) = {
@@ -384,21 +390,21 @@ class Api(spark: SparkSession, maxRows: Int = 10000,
     * (the index is an accelerator, not a correctness dependency).
     *
     * Cost: the metadata work per lookup is one `listStatus` of the
-    * snapshot, one data-file footer open (the schema) and one
+    * snapshot, one data-file footer open (the schema) and at most one
     * `_skipindex` read (one open per part file), all on the driver
     * under the session's Hadoop conf. An indexed lookup is then served
     * ON THE DRIVER with no Spark job and no code generation
     * ([[Maintenance.pointLookup]]): the candidates' admitted row
     * groups are decoded by Spark's Parquet row converter and rendered
-    * by [[rowsOf]], the writer [[rows]] uses, so the bytes match the
-    * Spark path's. The Spark path ([[Maintenance.indexedLookup]], or
-    * the plain scan when no index covers the key) serves when the
-    * candidates' admitted row groups exceed
-    * [[Maintenance.PointLookupMaxBytes]] — a read that size belongs on
-    * cancellable jobs under the request deadline — or when the driver
-    * read fails (a torn sidecar, a file vacuumed mid-read); its only
-    * Spark work is the [[rows]] collect. The response reports
-    * `files_opened`/`files_total` so a client can see the pruning.
+    * by [[rowsOf]]. Otherwise ONE Spark scan serves, of exactly the
+    * files the driver names: the candidates when their admitted row
+    * groups exceed [[Maintenance.PointLookupMaxBytes]] — a read that
+    * size belongs on cancellable jobs under the request deadline —
+    * and every data file when no index covers the key or the driver
+    * read fails (an unreadable sidecar, a file vacuumed mid-read). Its only
+    * Spark work is the [[rows]] collect, rendered by the same writer.
+    * The response reports `files_opened`/`files_total` so a client
+    * can see the pruning.
     * Vacuum races resolve exactly like the current-read path of
     * [[tableSnapshot]]: post-read marker recheck, bounded re-resolve
     * retries, 503 if a writer outruns them. */
@@ -426,46 +432,30 @@ class Api(spark: SparkSession, maxRows: Int = 10000,
           s""""files_total":$total,"data":$data}""")
       if (!schema.fieldNames.contains(key))
         (400, detail(s"unknown key column: $key"))
-      else driverLookup(cur, key, value, schema) match {
-        case Some(hit) => answer(hit.opened, rowsOf(schema, hit.rows))
-        case None =>
-          // the index is an ACCELERATOR, never a correctness
-          // dependency: absent or not covering the key (indexedLookup
-          // declines), UNREADABLE (a torn writeSkipIndex attempt — the
-          // one sidecar with no commit marker) all fall back to the
-          // plain filtered scan; a vacuumed-snapshot failure inside
-          // indexedLookup falls back too, and the plain scan then trips
-          // serveCurrentRead's recheck, which is the retry path's job
-          val viaIndex: Option[(DataFrame, Long)] =
-            try {
-              val (df, opened, _) =
-                Maintenance.indexedLookup(spark, cur, key, value, schema)
-              Some((df, opened))
-            } catch {
-              case scala.util.control.NonFatal(_) => None
-            }
-          val (df, opened) = viaIndex.getOrElse((spark.read.schema(schema)
-            .parquet(cur).filter(col(key) === value), total))
-          answer(opened, rows(df))
+      else {
+        // the index is an ACCELERATOR, never a correctness dependency:
+        // a driver read that fails (an unreadable sidecar, a file
+        // vacuumed mid-read) scans every data file, and a vacuumed
+        // snapshot then trips serveCurrentRead's recheck, which is the
+        // retry path's job
+        val served =
+          try Maintenance.pointLookup(spark, cur, files, key, value,
+            schema, Maintenance.PointLookupMaxBytes)
+          catch { case scala.util.control.NonFatal(_) => Left(files) }
+        served match {
+          case Right(hit) => answer(hit.opened, rowsOf(schema, hit.rows))
+          case Left(scan) => answer(scan.length, rows(spark.read
+            .schema(schema).parquet(scan: _*).filter(col(key) === value)))
+        }
       }
     }
   }
 
-  /** [[Maintenance.pointLookup]] under the route's byte cap; None (the
-    * Spark path serves) when it declines or its read fails. */
-  private def driverLookup(cur: String, key: String, value: Long,
-      schema: StructType): Option[Maintenance.PointRows] =
-    try Maintenance.pointLookup(spark, cur, key, value, schema,
-      Maintenance.PointLookupMaxBytes)
-    catch {
-      case scala.util.control.NonFatal(_) => None
-    }
-
   private def queryData(ex: HttpExchange): (Int, String) = {
     val query = params(ex).getOrElse("query",
       return (400, detail("query parameter required")))
-    (200, s"""{"data":${rows(rejectCartesian(
-      SecServing.executeSql(spark, query)))}}""")
+    (200, s"""{"data":${rows(SecServing.executeSql(spark, query),
+      rejectCartesian)}}""")
   }
 
   // ---- plumbing ----
@@ -504,58 +494,56 @@ class Api(spark: SparkSession, maxRows: Int = 10000,
         URLDecoder.decode(k, "UTF-8") -> URLDecoder.decode(v, "UTF-8")
       }.toMap
 
-  /** Rows as a JSON array: NaN/±Inf → null (the reference's
-    * sanitize_float_values), at most [[maxRows]] rows collected, each
-    * row serialized by Spark's own JSON writer (correct escaping and
-    * nested types for free). Sanitization covers TOP-LEVEL float
-    * columns, exactly the reference's scope — Snowflake cursor rows
-    * are flat, so its sanitize never saw a nested value either; a
-    * double inside a struct (reachable only via free-form SQL over the
-    * doc tables) serializes as the string "NaN". Columns are addressed
-    * POSITIONALLY via a rename round-trip so duplicate output names
-    * (e.g. a self-join's two `value`s) serve instead of 500ing on an
-    * ambiguous reference. The JSON is built in the projection
-    * (`to_json`, the writer `Dataset.toJSON` uses) so the row cap is
-    * the plan's ROOT limit: a scan collects incrementally — one job
-    * when its first partition holds the answer — and a sorted result
-    * as one top-k job, with no single-partition exchange (an extra
-    * job under adaptive execution) beneath the limit. Rows already on
-    * the driver render through [[rowsOf]] under the same rules. */
-  private[graft] def rows(df: DataFrame): String = {
-    val names = df.columns
-    val tmp = df.toDF(names.indices.map(i => s"__c$i"): _*)
-    val json = to_json(struct(names.indices.map { i =>
-      val c = col(s"__c$i")
-      val cleaned = df.schema.fields(i).dataType match {
-        case DoubleType | FloatType =>
-          when(isnan(c) || abs(c) === Double.PositiveInfinity, lit(null))
-            .otherwise(c)
-        case _ => c
-      }
-      cleaned.as(names(i))
-    }: _*))
-    tmp.select(json).limit(maxRows).collect().map(_.getString(0))
-      .mkString("[", ",", "]")
+  /** Rows as a JSON array, the one renderer of every data route:
+    * `df` capped at [[maxRows]] as the plan's ROOT limit (a scan
+    * collects incrementally — one job when its first partition holds
+    * the answer — and a sorted result as one top-k job), collected as
+    * Spark's internal rows under a SQL execution exactly as `collect()`
+    * runs it, so the request's job group, the execution id and every
+    * `QueryExecutionListener` see the read, then written by
+    * [[rowsOf]]. The capped frame is the only plan the request builds:
+    * `check` sees its physical plan before any job runs
+    * ([[rejectCartesian]]). */
+  private[graft] def rows(df: DataFrame,
+      check: SparkPlan => Unit = _ => ()): String = {
+    val capped = df.limit(maxRows)
+    val qe = capped.queryExecution
+    check(qe.executedPlan)
+    rowsOf(capped.schema, SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect()))
   }
 
-  /** [[rows]] for rows of `schema` already on the driver: the same
-    * JSON writer `to_json` uses ([[DriverRowCodecs.jsonWriter]]), the
-    * same positional names, top-level NaN/±Inf → null and [[maxRows]]
-    * cap, with no Spark job. The rows must be copies it may modify. */
+  /** Rows of `schema` as a JSON array, at most [[maxRows]] of them,
+    * each written by Spark's own JSON writer ([[DriverRowCodecs.jsonWriter]],
+    * the one `to_json` uses: correct escaping and nested types for
+    * free). Names are kept by position, so duplicate output names
+    * (e.g. a self-join's two `value`s) serve instead of 500ing on an
+    * ambiguous reference. NaN/±Inf → null (the reference's
+    * sanitize_float_values) in TOP-LEVEL float columns, exactly the
+    * reference's scope — Snowflake cursor rows are flat, so its
+    * sanitize never saw a nested value either; a double inside a
+    * struct (reachable only via free-form SQL over the doc tables)
+    * serializes as the string "NaN". A row with such a value is
+    * copied before it is nulled: a plan's collect can hand back the
+    * plan's own rows (`LocalTableScanExec`). */
   private[graft] def rowsOf(schema: StructType,
-      data: Seq[InternalRow]): String = {
+      data: Iterable[InternalRow]): String = {
     val write = DriverRowCodecs.jsonWriter(spark, schema)
+    def finite(r: InternalRow, i: Int): Boolean = r.isNullAt(i) || {
+      val v = if (schema(i).dataType == DoubleType) r.getDouble(i)
+        else r.getFloat(i).toDouble
+      !v.isNaN && !v.isInfinite
+    }
     val floats = schema.fields.indices.filter(i =>
       schema(i).dataType == DoubleType || schema(i).dataType == FloatType)
     data.take(maxRows).map { r =>
-      floats.foreach { i =>
-        if (!r.isNullAt(i)) {
-          val v = if (schema(i).dataType == DoubleType) r.getDouble(i)
-            else r.getFloat(i).toDouble
-          if (v.isNaN || v.isInfinite) r.setNullAt(i)
-        }
+      val bad = floats.filterNot(finite(r, _))
+      if (bad.isEmpty) write(r)
+      else {
+        val own = r.copy()
+        bad.foreach(own.setNullAt)
+        write(own)
       }
-      write(r)
     }.mkString("[", ",", "]")
   }
 

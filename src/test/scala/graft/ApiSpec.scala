@@ -4,10 +4,13 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.serving.Api
 import graft.sources.{SecIngest, SecSchemas}
 import graft.operators.{SecJsonDocs, SecServing}
+import org.apache.spark.sql.DataFrame
 
 /** Live round-trip of the serving shell: real HTTP server on an
   * ephemeral port, real JDK HttpClient, responses parsed with Jackson.
@@ -76,6 +79,43 @@ class ApiSpec extends SparkSpec {
         .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
       HttpResponse.BodyHandlers.ofString())
     (r.statusCode(), mapper.readTree(r.body()))
+  }
+
+  /** The raw `data` array of a response body whose route writes it
+    * last, byte for byte. */
+  private def rawData(path: String): String = {
+    val r = client.send(
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+        .GET().build(), HttpResponse.BodyHandlers.ofString())
+    assert(r.statusCode() == 200, s"$path: ${r.statusCode()} ${r.body()}")
+    r.body().substring(r.body().indexOf("\"data\":") + 7).stripSuffix("}")
+  }
+
+  private def sqlPath(sql: String): String =
+    "/query-data?query=" + java.net.URLEncoder.encode(sql, "UTF-8")
+
+  /** The reference renderer the parity cases compare against: the
+    * `to_json` projection every Spark-read route rendered through
+    * before all routes shared `Api.rowsOf`. Columns are renamed by
+    * position so duplicate names survive, top-level NaN/±Inf become
+    * null, and at most 10000 rows (the Api default) are collected. */
+  private def toJsonRows(df: DataFrame): String = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.{DoubleType, FloatType}
+    val names = df.columns
+    val tmp = df.toDF(names.indices.map(i => s"__c$i"): _*)
+    val json = to_json(struct(names.indices.map { i =>
+      val c = col(s"__c$i")
+      val cleaned = df.schema.fields(i).dataType match {
+        case DoubleType | FloatType =>
+          when(isnan(c) || abs(c) === Double.PositiveInfinity, lit(null))
+            .otherwise(c)
+        case _ => c
+      }
+      cleaned.as(names(i))
+    }: _*))
+    tmp.select(json).limit(10000).collect().map(_.getString(0))
+      .mkString("[", ",", "]")
   }
 
   test("check-availability: present quarter true, absent quarter false") {
@@ -150,9 +190,10 @@ class ApiSpec extends SparkSpec {
   }
 
   test("duplicate output column names serve instead of 500ing") {
-    val (code, body) = post("/execute-custom-query",
-      """{"query":"SELECT cast(1.5 as double) AS v, cast('NaN' as double) AS v"}""")
+    val sql = "SELECT cast(1.5 as double) AS v, cast('NaN' as double) AS v"
+    val (code, body) = post("/execute-custom-query", s"""{"query":"$sql"}""")
     assert(code == 200 && body.get("data").size == 1)
+    assert(rawData(sqlPath(sql)) == toJsonRows(spark.sql(sql)))
   }
 
   test("query-data: GET SQL; NaN and Infinity sanitize to null") {
@@ -171,6 +212,13 @@ class ApiSpec extends SparkSpec {
     assert(byK("inf").get("v") == null || byK("inf").get("v").isNull)
     val (bad, _) = get("/query-data")
     assert(bad == 400)
+    // the writer nulls a copy: rows it is handed (a plan's own rows,
+    // for a local table scan) keep their values
+    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+    val row = org.apache.spark.sql.catalyst.InternalRow(Double.NaN, 1.5)
+    assert(api.get.rowsOf(StructType(Seq(StructField("a", DoubleType),
+      StructField("b", DoubleType))), Seq(row)) == "[{\"b\":1.5}]")
+    assert(row.getDouble(0).isNaN, "rowsOf nulled the caller's row")
   }
 
   test("concurrent mixed-route requests share one SparkSession " +
@@ -529,16 +577,6 @@ class ApiSpec extends SparkSpec {
       s"snapshot read ran $snapJobs jobs")
   }
 
-  /** The raw `data` array of a `/table-lookup` response body (the
-    * route writes it last), byte for byte. */
-  private def rawLookupData(path: String): String = {
-    val r = client.send(
-      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
-        .GET().build(), HttpResponse.BodyHandlers.ofString())
-    assert(r.statusCode() == 200, s"$path: ${r.statusCode()} ${r.body()}")
-    r.body().substring(r.body().indexOf("\"data\":") + 7).stripSuffix("}")
-  }
-
   test("table-lookup served on the driver renders byte-equal to the " +
     "filtered scan over every column type") {
     import org.apache.spark.sql.functions.col
@@ -591,23 +629,32 @@ class ApiSpec extends SparkSpec {
     for (k <- present ++ Seq(3L, 11L, 8L, 100L, -5L)) {
       val path = s"/table-lookup?root=$enc&key=doc_id&value=$k"
       var body = ""
-      val jobs = jobGroupsOf { body = rawLookupData(path) }
+      val jobs = jobGroupsOf { body = rawData(path) }
       assert(jobs.isEmpty, s"key $k ran jobs $jobs")
-      val expected = a.rows(spark.read.schema(schema).parquet(snap)
+      val expected = toJsonRows(spark.read.schema(schema).parquet(snap)
         .filter(col("doc_id") === k))
       assert(body == expected, s"key $k")
       assert((body != "[]") == present.contains(k), s"key $k: $body")
     }
+    // the snapshot and SQL routes over the same table, through the
+    // Spark read
+    assert(rawData(s"/table-snapshot?root=$enc") ==
+      toJsonRows(spark.read.schema(schema).parquet(snap)))
+    val all = s"SELECT * FROM parquet.`$snap`"
+    assert(rawData(sqlPath(all)) == toJsonRows(spark.sql(all)))
     // names are kept by position: two columns renamed alike render as
-    // the Spark path renders them
-    val hit = graft.operators.Maintenance.pointLookup(spark, snap, "doc_id",
-      1L, schema, graft.operators.Maintenance.PointLookupMaxBytes).get
+    // the reference renders them, on the driver and through SQL
+    val hit = graft.operators.Maintenance.pointLookup(spark, snap,
+      graft.operators.Maintenance.listDataFiles(spark, snap), "doc_id", 1L,
+      schema, graft.operators.Maintenance.PointLookupMaxBytes).toOption.get
     val dupNames = schema.fieldNames.updated(1, "v").updated(2, "v")
     val dupSchema = org.apache.spark.sql.types.StructType(
       schema.fields.zip(dupNames).map { case (f, n) => f.copy(name = n) })
-    assert(a.rowsOf(dupSchema, hit.rows.map(_.copy())) ==
-      a.rows(spark.read.schema(schema).parquet(snap)
+    assert(a.rowsOf(dupSchema, hit.rows) ==
+      toJsonRows(spark.read.schema(schema).parquet(snap)
         .filter(col("doc_id") === 1L).toDF(dupNames.toSeq: _*)))
+    val dup = s"SELECT doc_id AS v, d AS v, f AS v, ts, m FROM parquet.`$snap`"
+    assert(rawData(sqlPath(dup)) == toJsonRows(spark.sql(dup)))
   }
 
   test("table-lookup over the driver byte cap is served by the Spark " +
@@ -626,8 +673,9 @@ class ApiSpec extends SparkSpec {
     graft.streaming.UpsertStream.markCommitted(spark, snap)
     Maintenance.writeSkipIndex(spark, snap, Seq("doc_id"))
     val schema = Maintenance.dataSchema(spark, snap)
-    assert(Maintenance.pointLookup(spark, snap, "doc_id", 777L, schema,
-      Maintenance.PointLookupMaxBytes).isEmpty, "the driver must decline")
+    assert(Maintenance.pointLookup(spark, snap,
+      Maintenance.listDataFiles(spark, snap), "doc_id", 777L, schema,
+      Maintenance.PointLookupMaxBytes).isLeft, "the driver must decline")
     val enc = java.net.URLEncoder.encode(root, "UTF-8")
     port
     var body: JsonNode = null
@@ -639,7 +687,7 @@ class ApiSpec extends SparkSpec {
     assert(jobs.nonEmpty && jobs.forall(_.startsWith("graft-api-table-lookup-")),
       s"the Spark path must serve under the request group: $jobs")
     assert(body.get("files_opened").asLong == 1L)
-    assert(mapper.readTree(api.get.rows(spark.read.schema(schema).parquet(snap)
+    assert(mapper.readTree(toJsonRows(spark.read.schema(schema).parquet(snap)
       .filter(col("doc_id") === 777L))) == body.get("data"))
     assert(body.get("data").size == 1)
   }
@@ -679,6 +727,94 @@ class ApiSpec extends SparkSpec {
     assert(groups.nonEmpty)
     assert(groups.forall(_.startsWith("graft-api-")),
       s"jobs outside a request group: ${groups.filterNot(_.startsWith("graft-api-"))}")
+  }
+
+  test("malformed client input answers 400 with a named detail, not 500") {
+    // a body that is not JSON is the client's error
+    for (bad <- Seq("{", "query=SELECT 1")) {
+      val (code, body) = post("/execute-custom-query", bad)
+      assert(code == 400 &&
+        body.get("detail").asText.startsWith("request body is not JSON"),
+        s"$bad: $code $body")
+    }
+    // an empty body carries no query field
+    val (empty, _) = post("/execute-custom-query", "")
+    assert(empty == 400)
+    // a malformed percent escape never reaches a route: the JDK server
+    // refuses the request URI with its own 400 (the URI class rejects
+    // `%zz` and a trailing `%`), so no route decodes one
+    for (q <- Seq("%zz", "%", "a%2")) {
+      val s = new java.net.Socket("127.0.0.1", port)
+      try {
+        s.getOutputStream.write((s"GET /query-data?query=$q HTTP/1.1\r\n" +
+          "Host: localhost\r\nConnection: close\r\n\r\n").getBytes("UTF-8"))
+        val status = new String(s.getInputStream.readAllBytes(), "UTF-8")
+          .linesIterator.next()
+        assert(status.startsWith("HTTP/1.1 400"), s"$q: $status")
+      } finally s.close()
+    }
+    // an error in the user's SQL stays the server's 500
+    val (err, _) = post("/execute-custom-query",
+      """{"query":"SELECT * FROM not_a_table"}""")
+    assert(err == 500)
+  }
+
+  test("a free-form SQL request optimises the user's query once, and " +
+    "query listeners see its collect") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.rules.Rule
+    port
+    // a user-provided optimizer rule runs once per optimizer pass (its
+    // batch reaches a fixed point at once, the rule changing nothing),
+    // so its count over plans carrying a request-unique literal is the
+    // number of times that request's query was optimised
+    val marker = s"plan-once-${java.util.UUID.randomUUID()}"
+    def marked(p: LogicalPlan): Boolean = p.exists(_.expressions.exists(
+      _.exists { case l: Literal => String.valueOf(l.value) == marker
+                 case _ => false }))
+    val optimised = new java.util.concurrent.atomic.AtomicInteger()
+    val rule = new Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        if (marked(plan)) optimised.incrementAndGet()
+        plan
+      }
+    }
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        if (marked(qe.analyzed)) actions.add(f)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val exp = spark.experimental
+    exp.extraOptimizations = exp.extraOptimizations :+ rule
+    spark.listenerManager.register(listener)
+    try {
+      val sql = s"SELECT '$marker' AS m, count(*) AS n FROM sec_num_2023Q4"
+      for ((route, send) <- Seq[(String, () => (Int, JsonNode))](
+          "execute-custom-query" -> (() => post("/execute-custom-query",
+            s"""{"query":"$sql"}""")),
+          "query-data" -> (() => get(sqlPath(sql))))) {
+        optimised.set(0)
+        actions.clear()
+        val (code, body) = send()
+        assert(code == 200 && body.get("data").get(0).get("n").asLong == 2L,
+          s"$route: $code $body")
+        assert(optimised.get == 1,
+          s"$route optimised the query ${optimised.get} times")
+        val deadline = System.currentTimeMillis + 20000
+        while (actions.isEmpty && System.currentTimeMillis < deadline)
+          Thread.sleep(20)
+        assert(actions.asScala.toSeq == Seq("collect"),
+          s"$route: listener saw ${actions.asScala.toSeq}")
+      }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      exp.extraOptimizations = exp.extraOptimizations.filterNot(_ eq rule)
+    }
   }
 
   override def afterAll(): Unit = {

@@ -466,17 +466,17 @@ class MaintenanceSpec extends SparkSpec {
     assert(spark.read.parquet(t).count() == before)
     // a hit prunes to the admitting file PLUS the unprunable
     // null-stats file — absence of evidence never drops a candidate
-    val (r1, o1, n1) = Maintenance.indexedLookup(spark, t, "k", 10L)
+    val (r1, o1, n1) = lookup(t, 10L)
     assert(n1 == 3L && o1 == 2L,
       s"expected {f2, null-stats f3} as candidates, opened $o1 of $n1")
-    assert(r1.collect().map(_.getString(1)).toSeq == Seq("c"))
+    assert(r1.map(_._2) == Seq("c"))
     // a key inside a candidate range but absent: file opened, 0 rows
-    val (r2, o2, _) = Maintenance.indexedLookup(spark, t, "k", 3L)
-    assert(o2 == 1L && r2.count() == 0)
+    val (r2, o2, _) = lookup(t, 3L)
+    assert(o2 == 1L && r2.isEmpty)
     // a key outside every range: only the unprunable file opens
-    val (r3, o3, _) = Maintenance.indexedLookup(spark, t, "k", 99L)
-    assert(o3 == 1L && r3.count() == 0)
-    assert(r3.columns.toSeq == Seq("k", "v"),
+    val (r3, o3, _) = lookup(t, 99L)
+    assert(o3 == 1L && r3.isEmpty)
+    assert(scanOf(t, scanFiles(t, 99L), 99L).columns.toSeq == Seq("k", "v"),
       "a miss must keep the table schema")
     // REBUILD on the already-indexed dir: the old sidecar must be
     // excluded from its own successor's file list (self-indexing was
@@ -487,17 +487,57 @@ class MaintenanceSpec extends SparkSpec {
     assert(idx.length == 3 &&
       idx.forall(!_.getString(0).contains("_skipindex")),
       "a rebuilt index must never carry the prior index's own file")
-    val (r4, o4, n4) = Maintenance.indexedLookup(spark, t, "k", 10L)
-    assert(n4 == 3L && o4 == 2L &&
-      r4.collect().map(_.getString(1)).toSeq == Seq("c"))
+    val (r4, o4, n4) = lookup(t, 10L)
+    assert(n4 == 3L && o4 == 2L && r4.map(_._2) == Seq("c"))
   }
 
-  test("probe-loop candidate selection is pinned to indexedLookup's") {
+  /** Every data file of `dir`: what a declined lookup scans when no
+    * index covers the key. */
+  private def filesOf(dir: String): Seq[String] =
+    Maintenance.listDataFiles(spark, dir)
+
+  /** The files `Maintenance.pointLookup` names for its Spark scan when
+    * it must decline (a byte cap of -1); Nil when no file is a
+    * candidate, which the driver serves under any cap. */
+  private def scanFiles(dir: String, key: Long): Seq[String] =
+    Maintenance.pointLookup(spark, dir, filesOf(dir), "k", key,
+      Maintenance.dataSchema(spark, dir), -1L).left.getOrElse(Nil)
+
+  /** The serving route's Spark scan of `files`, filtered on `k`. */
+  private def scanOf(dir: String, files: Seq[String],
+      key: Long): org.apache.spark.sql.DataFrame =
+    spark.read.schema(Maintenance.dataSchema(spark, dir))
+      .parquet(files: _*).filter(col("k") === key)
+
+  private def scanRows(dir: String, files: Seq[String],
+      key: Long): Seq[(Option[Long], String)] =
+    scanOf(dir, files, key).collect().toSeq.map(r =>
+      (Option(r.getAs[java.lang.Long](0)).map(_.longValue), r.getString(1)))
+
+  /** `Maintenance.pointLookup` of `key` in bigint column `k` under the
+    * default byte cap: its (key, v) rows, files opened and index file
+    * count. Its declined form must agree: the scan opens exactly the
+    * files the driver read opened and returns the same rows. */
+  private def lookup(dir: String, key: Long)
+      : (Seq[(Option[Long], String)], Long, Long) = {
+    val hit = Maintenance.pointLookup(spark, dir, filesOf(dir), "k", key,
+      Maintenance.dataSchema(spark, dir), Maintenance.PointLookupMaxBytes)
+      .getOrElse(fail(s"the driver declined key $key"))
+    val scan = scanFiles(dir, key)
+    assert(scan.length.toLong == hit.opened,
+      s"key $key: the scan opens ${scan.length}, the driver ${hit.opened}")
+    if (scan.nonEmpty)
+      assert(scanRows(dir, scan, key) == kv(hit.rows), s"key $key")
+    (kv(hit.rows), hit.opened, hit.total)
+  }
+
+  test("probe-loop candidate selection is pinned to pointLookup's") {
     // round-18 ADVICE: the proof loop re-implemented the serving
     // primitive's pruning rule. Both now call candidateFiles — this
-    // pins the shared rule to indexedLookup's observable (files
-    // opened) across hit / interior-miss / out-of-range keys, and the
-    // null-stats never-prune case on the rule directly.
+    // pins the shared rule to pointLookup's observable (files opened,
+    // and the files its over-cap scan opens) across hit /
+    // interior-miss / out-of-range keys, and the null-stats
+    // never-prune case on the rule directly.
     val t = tmpDir("cand_t")
     spark.range(0, 100)
       .select(col("id").as("k"), col("id").cast("string").as("v"))
@@ -509,11 +549,13 @@ class MaintenanceSpec extends SparkSpec {
       .collect().toIndexedSeq
     for (key <- Seq(0L, 13L, 25L, 50L, 99L, 1000L)) {
       val viaRule = Maintenance.candidateFiles(idx, key)
-      val (rows, opened, total) = Maintenance.indexedLookup(spark, t, "k", key)
+      val (rows, opened, total) = lookup(t, key)
       assert(total == idx.length.toLong)
       assert(opened == viaRule.length.toLong,
         s"key $key: rule selected ${viaRule.length}, lookup opened $opened")
-      assert(rows.count() == (if (key <= 99L) 1L else 0L))
+      assert(rows.size == (if (key <= 99L) 1 else 0))
+      assert(scanFiles(t, key) == viaRule,
+        s"key $key: the over-cap scan must open the rule's files")
     }
     val withNull = idx :+ org.apache.spark.sql.Row("fX", null, null)
     assert(Maintenance.candidateFiles(withNull, 7L).contains("fX"),
@@ -567,8 +609,8 @@ class MaintenanceSpec extends SparkSpec {
     val nGroups = Maintenance.withParquet(spark.sparkContext.hadoopConfiguration,
       new org.apache.hadoop.fs.Path(file))(_.getRowGroups.size)
     assert(nGroups > 2, s"expected several row groups, got $nGroups")
-    def look(k: Long) = Maintenance.pointLookup(spark, t, "k", k, schema,
-      Maintenance.PointLookupMaxBytes).get
+    def look(k: Long) = Maintenance.pointLookup(spark, t, filesOf(t), "k", k,
+      schema, Maintenance.PointLookupMaxBytes).toOption.get
     val hit = look(1110L)
     assert(kv(hit.rows) == Seq((Some(1110L), "v1110")))
     assert(hit.opened == 1L && hit.total == 1L && hit.groupsRead == 1,
@@ -595,11 +637,11 @@ class MaintenanceSpec extends SparkSpec {
     assert(Maintenance.writeSkipIndex(spark, t, Seq("k")) == 3L)
     val schema = Maintenance.dataSchema(spark, t)
     def look(k: Long, cap: Long = Maintenance.PointLookupMaxBytes) =
-      Maintenance.pointLookup(spark, t, "k", k, schema, cap)
-    val viaNoStats = look(20L).get
+      Maintenance.pointLookup(spark, t, filesOf(t), "k", k, schema, cap)
+    val viaNoStats = look(20L).toOption.get
     assert(kv(viaNoStats.rows) == Seq((Some(20L), "e")) &&
       viaNoStats.opened == 1L && viaNoStats.groupsRead == 1)
-    val hit = look(10L).get
+    val hit = look(10L).toOption.get
     assert(kv(hit.rows) == Seq((Some(10L), "c")) && hit.opened == 2L &&
       hit.total == 3L && hit.groupsRead == 2)
     // no candidate but the unprunable file; with that file's
@@ -608,27 +650,29 @@ class MaintenanceSpec extends SparkSpec {
     Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1)
       .write.mode("overwrite").parquet(t2)
     Maintenance.writeSkipIndex(spark, t2, Seq("k"))
-    val none = Maintenance.pointLookup(spark, t2, "k", 99L,
-      Maintenance.dataSchema(spark, t2), Maintenance.PointLookupMaxBytes).get
+    val none = Maintenance.pointLookup(spark, t2, filesOf(t2), "k", 99L,
+      Maintenance.dataSchema(spark, t2), Maintenance.PointLookupMaxBytes)
+      .toOption.get
     assert(none.rows.isEmpty && none.opened == 0L && none.groupsRead == 0)
-    // a cap below the candidates' bytes declines; the Spark path then
-    // answers with the rows the driver read under the full cap
-    assert(look(10L, cap = 10L).isEmpty)
-    val (viaSpark, opened, _) =
-      Maintenance.indexedLookup(spark, t, "k", 10L, schema)
-    assert(opened == hit.opened && viaSpark.collect()
-      .map(r => (Option(r.getAs[java.lang.Long](0)).map(_.longValue),
-        r.getString(1))).toSeq == kv(hit.rows))
-    // a torn sidecar, a non-bigint key, an unknown key: no driver read
+    // a cap below the candidates' bytes declines to the candidates; a
+    // Spark scan of them answers with the rows the driver read under
+    // the full cap
+    val opened = look(10L, cap = 10L).left.getOrElse(fail("must decline"))
+    assert(opened.length.toLong == hit.opened &&
+      scanRows(t, opened, 10L) == kv(hit.rows))
+    // a torn sidecar, a non-bigint key, an unknown key: no driver
+    // read, and the scan opens every data file
     new java.io.File(s"$t/_skipindex").listFiles()
       .foreach(_.delete())
-    assert(look(10L).isEmpty, "torn index")
+    assert(look(10L) == Left(filesOf(t)), "torn index")
     val t3 = tmpDir("pl_intkey")
     Seq((1, "a")).toDF("k", "v").write.mode("overwrite").parquet(t3)
-    assert(Maintenance.pointLookup(spark, t3, "k", 1L,
-      Maintenance.dataSchema(spark, t3), Maintenance.PointLookupMaxBytes).isEmpty)
-    assert(Maintenance.pointLookup(spark, t2, "nope", 1L,
-      Maintenance.dataSchema(spark, t2), Maintenance.PointLookupMaxBytes).isEmpty)
+    assert(Maintenance.pointLookup(spark, t3, filesOf(t3), "k", 1L,
+      Maintenance.dataSchema(spark, t3), Maintenance.PointLookupMaxBytes) ==
+      Left(filesOf(t3)))
+    assert(Maintenance.pointLookup(spark, t2, filesOf(t2), "nope", 1L,
+      Maintenance.dataSchema(spark, t2), Maintenance.PointLookupMaxBytes) ==
+      Left(filesOf(t2)))
   }
 
   test("skip index over a non-bigint key: the reader declines, so the " +
@@ -643,11 +687,13 @@ class MaintenanceSpec extends SparkSpec {
     assert(Maintenance.skipIndexRows(spark, t, "nope").isEmpty)
     assert(Maintenance.skipIndexRows(spark, t, "l").map(_.size)
       .contains(4), "the bigint column of the same index is covered")
-    // the named refusal the serving route maps to its plain scan
-    val e = intercept[IllegalArgumentException] {
-      Maintenance.indexedLookup(spark, t, "i", 7L)
-    }
-    assert(e.getMessage.contains("bigint column i"))
+    // the lookup declines to the plain scan of every data file, with
+    // no exception; the bigint column of the same index is served
+    val schema = Maintenance.dataSchema(spark, t)
+    def look(key: String) = Maintenance.pointLookup(spark, t, filesOf(t),
+      key, 7L, schema, Maintenance.PointLookupMaxBytes)
+    assert(filesOf(t).size == 4 && look("i") == Left(filesOf(t)), "int key")
+    assert(look("l").toOption.exists(_.rows.size == 1))
   }
 
   test("footerSchema declares the schema Spark infers: upsert snapshot " +
